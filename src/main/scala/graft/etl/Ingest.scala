@@ -16,18 +16,22 @@ import org.apache.spark.sql.types.{StringType, StructField, StructType}
   */
 object Ingest {
 
+  /** The CSV's header line: one small Spark job. Through the Spark reader,
+    * not `FileSystem.open`, because a CSV written by Spark (SyntheaGen's
+    * corpus) is a directory of part files. */
+  private def headerLine(spark: SparkSession, path: String): String =
+    spark.read.text(path).head().getString(0)
+
   /** S2: all-string schema from the CSV header line. */
-  def headerSchema(spark: SparkSession, path: String): StructType = {
-    val header = spark.read.text(path).head().getString(0)
+  def headerSchema(header: String): StructType =
     StructType(header.split(",", -1).map(c =>
       StructField(c.trim, StringType, nullable = true)))
-  }
 
   /** S1: header-driven all-TEXT CSV read (COPY equivalent). */
   def readAllString(spark: SparkSession, path: String): DataFrame =
     spark.read
       .option("header", true)
-      .schema(headerSchema(spark, path))
+      .schema(headerSchema(headerLine(spark, path)))
       .csv(path)
 
   /** S3: malformed-row repair, the reference's only true row-level
@@ -38,9 +42,9 @@ object Ingest {
     * trailing-merge covers its dominant case of unquoted commas in
     * free-text description columns). Quoted fields are honored. */
   def readRepaired(spark: SparkSession, path: String): DataFrame = {
-    val schema = headerSchema(spark, path)
+    val header = headerLine(spark, path)
+    val schema = headerSchema(header)
     val n = schema.fields.length
-    val header = spark.read.text(path).head().getString(0)
     import spark.implicits._
     val repaired = spark.read.textFile(path)
       .filter(_ != header)

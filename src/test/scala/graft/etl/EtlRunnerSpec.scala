@@ -1,50 +1,55 @@
 package graft.etl
 
-import java.nio.file.Files
+import java.nio.file.{Files, Paths}
 
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.graftspark.ListenerBusAccess
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 import graft.SparkSpecBase
 
 /** Regression net for the CLI contract: EtlRunner.run over a full fixture
   * set (incl. optional immunizations/allergies + vocab) produces all OMOP
-  * outputs and a zero-failure validation report. */
+  * outputs and a zero-failure validation report, the same outputs on a
+  * rerun, and a clean stop when a step fails. */
 class EtlRunnerSpec extends SparkSpecBase {
 
-  private lazy val dirs = {
-    val in = Files.createTempDirectory("runner_in").toString
-    val out = Files.createTempDirectory("runner_out").toString
-    val vocab = Files.createTempDirectory("runner_vocab").toString
-    def w(d: String, name: String, content: String): Unit =
-      Files.writeString(java.nio.file.Paths.get(s"$d/$name"), content)
+  private val mpbKey = "spark.sql.files.maxPartitionBytes"
+
+  private def writeInputs(in: String): Unit = {
+    def w(name: String, content: String): Unit =
+      Files.writeString(Paths.get(s"$in/$name"), content)
     val u1 = "11111111-1111-1111-1111-111111111111"
     val e1 = "aaaaaaaa-0000-0000-0000-000000000001"
-    w(in, "patients.csv",
+    w("patients.csv",
       s"Id,BIRTHDATE,DEATHDATE,GENDER,RACE,ETHNICITY,MARITAL\n" +
         s"$u1,1980-03-15,,M,white,nonhispanic,M\n")
-    w(in, "encounters.csv",
+    w("encounters.csv",
       "Id,START,STOP,PATIENT,ENCOUNTERCLASS,CODE,DESCRIPTION," +
         "BASE_ENCOUNTER_COST,TOTAL_CLAIM_COST,PAYER_COVERAGE\n" +
         s"$e1,2015-01-01T09:00:00Z,2015-01-01T10:00:00Z,$u1,ambulatory," +
         "185349003,Visit,100.00,120.00,20.00\n")
-    w(in, "conditions.csv",
+    w("conditions.csv",
       "START,STOP,PATIENT,ENCOUNTER,CODE,DESCRIPTION\n" +
         s"2015-01-01,2015-02-01,$u1,$e1,44054006,Diabetes\n")
-    w(in, "medications.csv",
+    w("medications.csv",
       "START,STOP,PATIENT,ENCOUNTER,CODE,DESCRIPTION,BASE_COST," +
         "PAYER_COVERAGE,DISPENSES,TOTALCOST\n" +
         s"2015-01-01T09:30:00Z,,$u1,$e1,313782,Acetaminophen," +
         "12.50,9.00,2,25.00\n")
-    w(in, "procedures.csv",
+    w("procedures.csv",
       "START,STOP,PATIENT,ENCOUNTER,CODE,DESCRIPTION,BASE_COST\n" +
         s"2015-01-01T09:45:00Z,,$u1,$e1,232717009,CABG,431.40\n")
-    w(in, "observations.csv",
+    w("observations.csv",
       "DATE,PATIENT,ENCOUNTER,CODE,DESCRIPTION,VALUE,UNITS\n" +
         s"2015-01-01T09:15:00Z,$u1,$e1,8302-2,Height,175.3,cm\n")
-    w(in, "immunizations.csv",
+    w("immunizations.csv",
       "DATE,PATIENT,ENCOUNTER,CODE,DESCRIPTION,BASE_COST\n" +
         s"2016-04-01T10:00:00Z,$u1,$e1,140,Flu,140.52\n")
-    w(in, "patient_expenses.csv",
+    w("patient_expenses.csv",
       "PATIENT_ID,YEAR,PAYER_ID,HEALTHCARE_EXPENSES,INSURANCE_COSTS," +
         "COVERED_COSTS\n" +
         s"$u1,2015,abcdefab-0000-0000-0000-000000000001,1000.00,200.00," +
@@ -54,7 +59,7 @@ class EtlRunnerSpec extends SparkSpecBase {
         "800.00\n" +
         s"$u1,2016,abcdefab-0000-0000-0000-000000000001,1100.00,220.00," +
         "880.00\n")
-    w(in, "devices.csv",
+    w("devices.csv",
       "START,STOP,PATIENT,ENCOUNTER,CODE,DESCRIPTION,UDI\n" +
         // duplicate (person, start, code) row: dedup must keep one
         s"2015-01-01T09:20:00Z,,$u1,$e1,DEVICE123-A,Stent," +
@@ -63,11 +68,20 @@ class EtlRunnerSpec extends SparkSpecBase {
         "(01)00643169007222(11)141231(17)150707(10)A213B1(21)1234\n" +
         s"2015-01-01T09:25:00Z,2015-01-02T09:25:00Z,$u1,$e1,706689003," +
         "Oximeter,(01)00643169001111(11)141231(17)150707(10)Z9(21)77\n")
-    w(in, "allergies.csv",
+    w("allergies.csv",
       "START,STOP,PATIENT,ENCOUNTER,CODE,SYSTEM,DESCRIPTION,TYPE,CATEGORY," +
         "REACTION1,DESCRIPTION1,SEVERITY1,REACTION2,DESCRIPTION2,SEVERITY2\n" +
         s"2014-06-01T00:00:00Z,,$u1,$e1,419474003,SNOMED,Peanut,allergy," +
         "food,271807003,Rash,MILD,,,\n")
+  }
+
+  private lazy val dirs = {
+    val in = Files.createTempDirectory("runner_in").toString
+    val out = Files.createTempDirectory("runner_out").toString
+    val vocab = Files.createTempDirectory("runner_vocab").toString
+    writeInputs(in)
+    def w(d: String, name: String, content: String): Unit =
+      Files.writeString(Paths.get(s"$d/$name"), content)
     w(vocab, "CONCEPT.csv",
       "concept_id\tconcept_name\tdomain_id\tvocabulary_id\tconcept_class_id" +
         "\tstandard_concept\tconcept_code\tinvalid_reason\n" +
@@ -80,17 +94,30 @@ class EtlRunnerSpec extends SparkSpecBase {
     (in, out, vocab)
   }
 
-  test("full run produces every OMOP output and a clean validation report") {
+  /** The validation report of the fixture's run into `dirs._2`. */
+  private lazy val firstRun = {
     val (in, out, vocab) = dirs
+    EtlRunner.run(spark, in, out, Some(vocab))
+  }
+
+  private def stepThreadsAlive: Seq[String] =
+    Thread.getAllStackTraces.keySet.asScala.toSeq
+      .filter(t => t.isAlive && t.getName.startsWith("graft-etl-step-"))
+      .map(_.getName)
+
+  test("full run produces every OMOP output and a clean validation report") {
+    val (_, out, _) = dirs
     // run() tunes spark.sql.files.maxPartitionBytes for its own scans;
     // the session-global conf must be restored on exit — a library
     // caller must not inherit 4x more scan partitions for all
     // subsequent reads
-    val mpbKey = "spark.sql.files.maxPartitionBytes"
     val mpbBefore = spark.conf.getOption(mpbKey)
-    val report = EtlRunner.run(spark, in, out, Some(vocab))
+    val report = firstRun
     assert(spark.conf.getOption(mpbKey) == mpbBefore,
       s"$mpbKey not restored after EtlRunner.run")
+    eventually(timeout(10.seconds)) {
+      assert(stepThreadsAlive.isEmpty, "step pool outlived the run")
+    }
     assert(report.filter(col("failed_count") > 0).count() == 0)
     val expected = Seq("person_map", "visit_map", "person",
       "visit_occurrence", "condition_occurrence", "drug_exposure",
@@ -100,7 +127,7 @@ class EtlRunnerSpec extends SparkSpecBase {
       "achilles_results_dist", "observation_period",
       "device_exposure", "payer_plan_period")
     for (t <- expected)
-      assert(Files.exists(java.nio.file.Paths.get(s"$out/$t")), t)
+      assert(Files.exists(Paths.get(s"$out/$t")), t)
     // payer plan periods: dup person-year collapsed; end = start+1y-1d
     val ppp = spark.read.parquet(s"$out/payer_plan_period")
       .orderBy("payer_plan_period_start_date")
@@ -160,6 +187,50 @@ class EtlRunnerSpec extends SparkSpecBase {
       == "2014-06-01")
     assert(op.getAs[java.sql.Date]("observation_period_end_date").toString
       == "2016-04-01")
+  }
+
+  test("a rerun writes the same gold tables, ids included") {
+    val (in, out, vocab) = dirs
+    firstRun
+    val out2 = Files.createTempDirectory("runner_out2").toString
+    EtlRunner.run(spark, in, out2, Some(vocab))
+    def tables(d: String): Seq[String] =
+      new java.io.File(d).listFiles.toSeq
+        .filter(f => f.isDirectory && !f.getName.startsWith("_") &&
+          f.getName != "validation")
+        .map(_.getName).sorted
+    assert(tables(out2) == tables(out))
+    assert(tables(out).size == 19)
+    for (t <- tables(out)) {
+      val a = spark.read.parquet(s"$out/$t")
+      val b = spark.read.parquet(s"$out2/$t")
+      assert(a.exceptAll(b).union(b.exceptAll(a)).isEmpty, t)
+    }
+  }
+
+  test("a failing step cancels the run's jobs and stops its threads") {
+    val (_, _, vocab) = dirs
+    val in = Files.createTempDirectory("runner_fail_in").toString
+    val out = Files.createTempDirectory("runner_fail_out").toString
+    writeInputs(in)
+    // an empty devices.csv/ directory: the device step, which starts once
+    // the id maps are written, fails on its header read while the other
+    // domain steps are running
+    Files.delete(Paths.get(s"$in/devices.csv"))
+    Files.createDirectory(Paths.get(s"$in/devices.csv"))
+    val mpbBefore = spark.conf.getOption(mpbKey)
+    intercept[NoSuchElementException] {
+      EtlRunner.run(spark, in, out, Some(vocab))
+    }
+    assert(spark.conf.getOption(mpbKey) == mpbBefore)
+    // job ends reach the status tracker through the listener bus
+    eventually(timeout(10.seconds)) {
+      ListenerBusAccess.waitUntilEmpty(spark.sparkContext, 10000L)
+      assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+    }
+    eventually(timeout(10.seconds)) {
+      assert(stepThreadsAlive.isEmpty)
+    }
   }
 
   test("missing required file fails fast with the full list") {
