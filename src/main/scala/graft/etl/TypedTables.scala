@@ -265,20 +265,3 @@ object TypedTables {
   def typedTable(raw: DataFrame, table: String): DataFrame =
     typed(raw, specs(table))
 }
-
-/** CLI: type a single Synthea CSV →  parquet.
-  *   runMain graft.etl.TypeTableRunner <table> <csvPath> <outDir>
-  */
-object TypeTableRunner {
-  def main(args: Array[String]): Unit = {
-    val Array(table, csvPath, outDir) = args.take(3)
-    val spark = graft.core.Sessions.local()
-    try {
-      val t = TypedTables.typedTable(
-        Ingest.readRepaired(spark, csvPath), table)
-      t.write.mode("overwrite").parquet(outDir)
-      println(s"[typed] $table: ${spark.read.parquet(outDir).count()} rows → $outDir")
-      spark.read.parquet(outDir).show(5, truncate = false)
-    } finally spark.stop()
-  }
-}

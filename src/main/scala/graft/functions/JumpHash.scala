@@ -13,8 +13,7 @@ import org.apache.spark.sql.types._
   * This is the standing-ownership assignment `pmod(hash, n)` cannot
   * provide: mod-N remaps ~(1 − 1/n) of all keys on any resize, which at
   * 100 TB means a full-corpus rewrite to add one shard. Jump hash makes
-  * resharding an increment-only operation — the same property
-  * shardAppend gives positions, extended to the bucket count itself.
+  * resharding an increment-only operation.
   * No memory, no lookup table: ~ln(n) iterations of an LCG per key.
   *
   * Signed-long arithmetic note: the reference algorithm is defined on

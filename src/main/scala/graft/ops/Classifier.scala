@@ -92,11 +92,14 @@ object Classifier {
       val xs = (0 until d).map(k => col(s"__x$k"))
       for (r <- 1 to rounds) {
         val err = col("__y") - fastSigmoid(score(model, xs))
+        // try_cast: a term DECIMAL(28,10) cannot hold (non-finite, or
+        // |t| ≥ 1e18) is null and skipped by sum, where an ANSI cast
+        // would fail the round — the driver twin skips the same terms
         val sums = proj.agg(
           count(lit(1)).as("n"),
-          sum(err.cast("decimal(28,10)")).as("g_b") +:
+          sum(err.try_cast("decimal(28,10)")).as("g_b") +:
             xs.zipWithIndex.map { case (x, k) =>
-              sum((x * err).cast("decimal(28,10)")).as(s"g_$k")
+              sum((x * err).try_cast("decimal(28,10)")).as(s"g_$k")
             }: _*).head()
         if (r == 1) {
           n = sums.getLong(0).toDouble
@@ -112,6 +115,9 @@ object Classifier {
       model
     } finally proj.unpersist()
   }
+
+  /** Smallest magnitude DECIMAL(28,10) cannot hold (18 integer digits). */
+  private val DecimalOverflow = new java.math.BigDecimal("1e18")
 
   /** Driver twin of the distributed rounds — see the gate note in
     * [[logisticTrain]]. Every arithmetic step replays the Column
@@ -140,12 +146,16 @@ object Classifier {
           while (k < d) { z = z + model.weights(k) * r.getDouble(k + 1); k += 1 }
           val sig = 0.5 + z / (2.0 * (1.0 + math.abs(z)))
           val err = y - sig
-          // Spark's double→decimal cast nulls out non-finite values (the
-          // term is then skipped by sum) — mirror that PER TERM
+          // the distributed try_cast nulls out non-finite values and any
+          // value that rounds to |t| ≥ 1e18 (overflow); sum then skips
+          // the term — mirror that PER TERM
           def add(acc: java.math.BigDecimal, x: Double) =
             if (x.isNaN || x.isInfinite) acc
-            else acc.add(BigDecimal(x)
-              .setScale(10, BigDecimal.RoundingMode.HALF_UP).underlying())
+            else {
+              val t = BigDecimal(x)
+                .setScale(10, BigDecimal.RoundingMode.HALF_UP).underlying()
+              if (t.abs.compareTo(DecimalOverflow) >= 0) acc else acc.add(t)
+            }
           gb = add(gb, err)
           k = 0
           while (k < d) {

@@ -183,8 +183,10 @@ object CorpusPipeline {
     val stats = Stats(incoming.count(), f.quality.count(), f.exact.count(),
       f.deduped.count(), f.sampled.count())
     // the stats counts materialized everything downstream of these, so
-    // the working caches can be released now; `deduped` stays persisted
-    // for the caller (it IS the result, modulo sampling)
+    // the band caches can be released now. `exact` and `deduped` stay
+    // persisted only until the next append: OpCache.renew registered them
+    // with the band frames, so that call unpersists all four, and a
+    // result chained in as its `existing` is recomputed from lineage
     f.incBands.unpersist()
     f.exBands.unpersist()
     (f.sampled, stats)
@@ -193,10 +195,12 @@ object CorpusPipeline {
   /** [[append]] without the per-stage Stats counts — one lazy plan, for
     * callers that only need the surviving rows (each Stats count is a
     * separate action; skipping them matters when the append runs inside
-    * a larger measured pipeline). The internal stage caches (band
-    * streams, exact survivors) stay persisted until the JVM's
-    * ContextCleaner collects them — a long-lived session running many
-    * appends should prefer [[append]], which releases them eagerly. */
+    * a larger measured pipeline). The stage caches (exact survivors,
+    * both band streams, the deduped frame) are registered with
+    * [[graft.core.OpCache.renew]]: they stay persisted until the next
+    * append, which unpersists each one whose plan it does not repeat. A
+    * result chained in as that call's `existing` is then recomputed from
+    * its lineage, not read from cache. */
   def appendDocs(existing: DataFrame, incoming: DataFrame,
                  cfg: Config): DataFrame =
     appendFrames(existing, incoming, cfg).sampled

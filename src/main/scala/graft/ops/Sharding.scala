@@ -48,40 +48,6 @@ object Sharding {
       .drop("__rk")
   }
 
-  /** Per-shard manifest over a [[shuffleShard]] assignment: row count and
-    * (optionally) token mass per shard, for the trainer's data-loader
-    * index. Tiny by construction — nShards rows. */
-  def shardManifest(assigned: DataFrame, tokensCol: Option[Column])
-      : DataFrame = {
-    val aggs = count(lit(1)).as("n_rows") ::
-      tokensCol.map(c => sum(c).cast("long").as("n_tokens")).toList
-    assigned.groupBy(col("shard")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Incremental shard append for a daily corpus drop: assign `incoming`
-    * rows to shards with the SAME pure hash as [[shuffleShard]] (same
-    * nShards + seed ⇒ a key lands on the same shard it would in a full
-    * rebuild — spec-asserted), and continue each shard's position
-    * sequence from the standing `manifest` (shard, n_rows). The standing
-    * corpus is never rescanned: cost is one exchange of the increment
-    * plus a broadcast of the nShards-row manifest.
-    *
-    * Position semantics differ from a rebuild by design: a rebuild ranks
-    * ALL rows by hash; append gives earlier drops earlier positions
-    * (arrival order between drops, hash order within a drop) — exactly
-    * what a training job that already consumed those positions requires.
-    * Shards absent from the manifest start at 0. */
-  def shardAppend(manifest: DataFrame, incoming: DataFrame, keyCol: Column,
-                  nShards: Int, seed: Long): DataFrame = {
-    val assigned = shuffleShard(incoming, keyCol, nShards, seed)
-    val offsets = manifest.select(col("shard"),
-      col("n_rows").cast("long").as("__off"))
-    assigned
-      .join(broadcast(offsets), Seq("shard"), "left")
-      .withColumn("pos", col("pos") + coalesce(col("__off"), lit(0L)))
-      .drop("__off")
-  }
-
   /** RESIZE-STABLE bucket assignment via the native `jump_hash`
     * expression ([[graft.functions.JumpHash]]): growing n → n+1 moves
     * exactly ~1/(n+1) of keys, all into the new bucket.

@@ -207,15 +207,15 @@ object VectorOps {
     * orthant: random-pair cosine ≈ 0.75, a random hyperplane through the
     * origin separates such a pair with probability θ/π ≈ 1/4, and
     * candidate volume grows ∝ C(n,2)·(3/4)^p — measured 45× for 10× data
-    * at sf1 (SrpProfile, SURVEY §8.19), where adding planes from 12 to 18
-    * (64× more buckets) only halved it. Centering moves the cone onto
-    * the origin, random pairs decorrelate to the assumed 1/2-split, and
-    * measured Σ bucket² returns to ≈ n·target at both scales. True
-    * near-dups keep colliding: for ||x−y|| small, x−μ ≈ y−μ, so the
-    * centered cosine stays ≈ 1 unless both vectors sit within noise of μ
-    * itself. Cross-engine exactness: μ uses the proven decimal-mean
-    * pattern (q34/q104 oracles), the subtraction and fold are the same
-    * IEEE double ops in the same order on both engines. */
+    * at sf1 (SCALE.md, Round-9 SRP sizing record), where adding planes
+    * from 12 to 18 (64× more buckets) only halved it. Centering moves the
+    * cone onto the origin, random pairs decorrelate to the assumed
+    * 1/2-split, and measured Σ bucket² returns to ≈ n·target at both
+    * scales. True near-dups keep colliding: for ||x−y|| small,
+    * x−μ ≈ y−μ, so the centered cosine stays ≈ 1 unless both vectors sit
+    * within noise of μ itself. Cross-engine exactness: μ uses the proven
+    * decimal-mean pattern (q34/q104 oracles), the subtraction and fold are
+    * the same IEEE double ops in the same order on both engines. */
   def srpSignatureCentered(df: DataFrame, vecCol: String,
                            numPlanes: Int): Column = {
     val (centered, dim) = centeredColumn(df, vecCol)
@@ -795,9 +795,10 @@ object VectorOps {
     * `minCos` well below `designCos` therefore returns a biased SAMPLE
     * of the low-cosine pairs, not all of them. To CONTRACT a lower
     * cosine, lower `designCos` — the law reprices b automatically
-    * (tools/SrpCurve prints the b(designCos) table; 0.90 → 0.80 roughly
-    * doubles b at any n; covering 0.50 at n = 4M costs b ≈ 5105 — the
-    * honest n^(1+ρ) price with ρ(0.5) ≈ 0.58). */
+    * (SCALE.md, Round-11 emission-curve record, has the b(designCos)
+    * table; 0.90 → 0.80 roughly doubles b at any n; covering 0.50 at
+    * n = 4M costs b ≈ 5105 — the honest n^(1+ρ) price with
+    * ρ(0.5) ≈ 0.58). */
   def srpBandedNearDupPairsAuto(vecs: DataFrame, minCos: Double,
                                 idCol: String = "vec_id",
                                 vecCol: String = "embedding",

@@ -164,7 +164,9 @@ class Round10Spec extends SparkSpecBase {
       (java.lang.Double.valueOf(0.3), null.asInstanceOf[java.lang.Double],
         java.lang.Double.valueOf(0.1)),          // null label
       (java.lang.Double.valueOf(Double.NaN), java.lang.Double.valueOf(0.0),
-        java.lang.Double.valueOf(0.2)))          // NaN feature
+        java.lang.Double.valueOf(0.2)),          // NaN feature
+      (java.lang.Double.valueOf(4e18), java.lang.Double.valueOf(1.0),
+        java.lang.Double.valueOf(0.0)))          // x·err = 2e18: overflow
     val df = (base ++ edge).toDF("x1", "y", "x2")
     def train(thr: Long) = graft.ops.Classifier.logisticTrain(
       df, Seq(col("x1"), col("x2")), col("y"), rounds = 5, lr = 4.0,

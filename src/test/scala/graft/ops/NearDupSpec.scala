@@ -482,6 +482,8 @@ class NearDupSpec extends SparkSpecBase {
       .select(col("doc_id"), col("text"))
       .unionByName(Seq((91001L, ""), (91002L, "one token"))
         .toDF("doc_id", "text"))
+      .unionByName(Seq(91003L).toDF("doc_id")
+        .select(col("doc_id"), lit(null).cast("string").as("text")))
     for ((k, w) <- Seq((5, 4), (3, 2))) {
       val agg = NearDup.winnowFingerprints(corpus, "doc_id", "text", k, w)
         .groupBy(col("doc_id"))

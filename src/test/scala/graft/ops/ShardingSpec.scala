@@ -57,46 +57,6 @@ class ShardingSpec extends SparkSpecBase {
       s"shard size $s vs ${n / 8}"))
   }
 
-  test("shardManifest totals match the assignment") {
-    val a = Sharding.shuffleShard(docs, col("doc_id"), 4, seed = 1)
-      .withColumn("n_tok", TextOps.tokenCount(col("text")).cast("long"))
-    val m = Sharding.shardManifest(a, Some(col("n_tok")))
-      .orderBy($"shard").collect()
-    assert(m.map(_.getLong(1)).sum == docs.count())
-    val totTok = docs.select(sum(TextOps.tokenCount(col("text"))))
-      .as[Long].head()
-    assert(m.map(_.getLong(2)).sum == totTok)
-  }
-
-  test("shardAppend: same shard as a rebuild, positions continue densely") {
-    val (day1, day2) = (docs.filter($"doc_id" % 2 === 0),
-      docs.filter($"doc_id" % 2 =!= 0))
-    val a1 = Sharding.shuffleShard(day1, col("doc_id"), 4, seed = 9)
-    val m1 = Sharding.shardManifest(a1, None)
-    val a2 = Sharding.shardAppend(m1, day2, col("doc_id"), 4, seed = 9)
-    // same pure hash ⇒ same shard as a full rebuild would give
-    val rebuild = Sharding.shuffleShard(docs, col("doc_id"), 4, seed = 9)
-      .select($"doc_id", $"shard".as("shard_rb"))
-    assert(a2.join(rebuild, "doc_id")
-      .filter($"shard" =!= $"shard_rb").count() == 0)
-    // union has dense unique positions 0..n-1 per shard
-    val union = a1.select($"shard", $"pos")
-      .unionByName(a2.select($"shard", $"pos"))
-    val perShard = union.groupBy($"shard")
-      .agg(count(lit(1)).as("n"), min($"pos").as("mn"), max($"pos").as("mx"),
-        countDistinct($"pos").as("nd"))
-      .collect()
-    perShard.foreach { r =>
-      assert(r.getAs[Long]("mn") == 0L)
-      assert(r.getAs[Long]("mx") == r.getAs[Long]("n") - 1)
-      assert(r.getAs[Long]("nd") == r.getAs[Long]("n"))
-    }
-    // day-1 rows keep their already-consumed positions (pure append)
-    assert(Sharding.shardAppend(m1, day2, col("doc_id"), 4, seed = 9)
-      .select($"doc_id", $"shard", $"pos")
-      .except(a2.select($"doc_id", $"shard", $"pos")).isEmpty)
-  }
-
   // --- consistent (jump) hashing ----------------------------------------
 
   /** Reference port of the paper's C++ (unsigned 64-bit LCG; Java's

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
 
-/** Source/sink format coverage beyond parquet+JDBC: ORC, JSON-lines, and
+/** Source/sink format coverage beyond parquet: ORC, JSON-lines, and
   * CSV round-trips with schema and value fidelity. The engine's tables
   * are format-agnostic DataFrames, so each format is just a reader
   * config — these specs pin that none of them silently retype or drop
