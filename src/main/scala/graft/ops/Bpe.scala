@@ -29,37 +29,32 @@ object Bpe {
   /** Train `numMerges` merges over the whitespace words of `textCol`.
     * Stops early if no adjacent pair remains.
     *
-    * Size gate (the [[Components]]/[[Graph]] discipline): the corpus is
-    * folded into its word-frequency table by ONE distributed
-    * aggregation; when that vocabulary fits under `localThreshold` rows
-    * the merge rounds run on the driver over the collected table — the
-    * identical recurrence (same pair counts, same count-desc /
+    * The corpus is folded into its word-frequency table by ONE
+    * distributed aggregation. A vocabulary of at most 2^17 rows runs the
+    * merge rounds in the driver twin behind [[graft.core.LocalGate]]:
+    * the identical recurrence (same pair counts, same count-desc /
     * left-asc / right-asc tie-break in UTF8 binary order, same
-    * non-overlapping left-to-right merge), so the output is bit-equal
-    * (spec-pinned) while rounds × (aggregate job + checkpoint job) of
-    * per-round latency collapse into one in-memory loop. Vocabularies
-    * are Heaps-law sublinear in corpus size but NOT schema-sized, so
-    * the distributed fixpoint stays the over-threshold path; the gate
-    * itself is a bounded `limit(threshold+1)` take, never an unbounded
-    * collect. Set `localThreshold = 0` to force the distributed path. */
-  def train(docs: DataFrame, textCol: String, numMerges: Int,
-            localThreshold: Long = 1L << 17): Seq[Merge] = {
+    * non-overlapping left-to-right merge). Vocabularies are Heaps-law
+    * sublinear in corpus size but NOT schema-sized, so the distributed
+    * fixpoint stays the over-budget path. */
+  def train(docs: DataFrame, textCol: String, numMerges: Int): Seq[Merge] = {
     require(numMerges >= 1, s"numMerges must be >= 1, got $numMerges")
-    // one corpus pass: word frequencies, then chars as the seed symbols
+    // one corpus pass: word frequencies, then chars as the seed symbols;
+    // persisted so the gate's probe and either path read it once
     val wordFreq = docs
       .select(explode(TextOps.tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("n"))
-    if (localThreshold > 0 && localThreshold < Int.MaxValue) {
-      val probe = wordFreq.limit(localThreshold.toInt + 1).collect()
-      if (probe.length <= localThreshold)
-        return trainLocal(probe.map(r => (r.getString(0), r.getLong(1))),
-          numMerges)
-      // over threshold: fall through and recompute distributed (the
-      // probe read at most threshold+1 rows; the aggregation re-runs)
+      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val local = graft.core.LocalGate.rows(wordFreq, LocalRows, "bpe")
+    if (local.nonEmpty) {
+      wordFreq.unpersist(blocking = false)
+      return trainLocal(local.get.map(r => (r.getString(0), r.getLong(1))),
+        numMerges)
     }
     var vocab = wordFreq
       .select(split(col("w"), "").as("syms"), col("n"))
       .localCheckpoint(true)
+    wordFreq.unpersist(blocking = false)
     val merges = ArrayBuffer.empty[Merge]
     var exhausted = false
     for (r <- 1 to numMerges if !exhausted) {
@@ -90,6 +85,9 @@ object Bpe {
     vocab.unpersist()
     merges.toSeq
   }
+
+  /** Vocabulary rows the driver twin takes. */
+  private val LocalRows = 1 << 17
 
   /** Driver-side twin of the distributed merge loop — IDENTICAL
     * recurrence so the size gate is invisible to callers:

@@ -49,8 +49,7 @@ object Classifier {
     * oracle's unrolled CTE chain lands on identical doubles. */
   def logisticTrain(df: DataFrame, featCols: Seq[Column],
                     labelCol: Column, rounds: Int,
-                    lr: Double,
-                    localThreshold: Long = 1L << 20): LinearModel = {
+                    lr: Double): LinearModel = {
     require(rounds >= 1, s"rounds must be >= 1, got $rounds")
     val d = featCols.size
     require(d >= 1, "at least one feature column")
@@ -64,25 +63,19 @@ object Classifier {
         featCols.zipWithIndex.map { case (x, k) =>
           x.cast("double").as(s"__x$k") }: _*)
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    // Size gate (the Components/Bpe/MMR discipline): the projected frame
-    // is d+1 doubles per row — when it fits under `localThreshold` rows
-    // (bounded limit probe, never an unbounded collect) the K rounds run
-    // on the driver with the IDENTICAL recurrence: same left-fold score
+    // Driver twin behind [[graft.core.LocalGate]] (2^20 rows of d+1
+    // doubles): the IDENTICAL recurrence — same left-fold score
     // association, same rational sigmoid in plain double arithmetic,
     // same double→DECIMAL(28,10) HALF_UP cast per term, exact decimal
     // sums (order-invariant), same doubleValue readout and update
-    // expression — bit-equal weights (spec-pinned), while K sequential
-    // aggregate jobs + their planning gaps collapse into one in-memory
-    // loop. Rows where the label or ANY feature is null contribute to n
-    // but to no gradient term, exactly the Column null semantics (a
+    // expression. Rows where the label or ANY feature is null contribute
+    // to n but to no gradient term, exactly the Column null semantics (a
     // null feature nulls the whole score, so err and every term null
-    // out together). `localThreshold = 0` forces the distributed path.
-    if (localThreshold > 0 && localThreshold < Int.MaxValue) {
-      val probe = proj.limit(localThreshold.toInt + 1).collect()
-      if (probe.length <= localThreshold) {
-        proj.unpersist(blocking = false)
-        return trainLocal(probe, d, rounds, lr)
-      }
+    // out together).
+    val local = graft.core.LocalGate.rows(proj, LocalRows, "trainer")
+    if (local.nonEmpty) {
+      proj.unpersist(blocking = false)
+      return trainLocal(local.get, d, rounds, lr)
     }
     try {
       // n rides round 1's aggregation (count does not depend on the
@@ -116,10 +109,13 @@ object Classifier {
     } finally proj.unpersist()
   }
 
+  /** Row budget of the driver twin. */
+  private val LocalRows = 1 << 20
+
   /** Smallest magnitude DECIMAL(28,10) cannot hold (18 integer digits). */
   private val DecimalOverflow = new java.math.BigDecimal("1e18")
 
-  /** Driver twin of the distributed rounds — see the gate note in
+  /** Driver twin of the distributed rounds — see the twin note in
     * [[logisticTrain]]. Every arithmetic step replays the Column
     * expressions: z = ((bias + w₀·x₀) + w₁·x₁) + … (the score fold's
     * association order), σ̂ in plain doubles, per-term

@@ -35,32 +35,8 @@ import org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   */
 object Components {
 
-  /** One distributed-fixpoint round's observability record. Shuffle bytes
-    * come from a stage-completion listener; the listener bus is async, so
-    * a stage can occasionally be attributed to the neighboring round —
-    * totals are exact, per-round splits are ±1 stage. The listener sees
-    * EVERY stage on the SparkContext: run the instrumented variant on a
-    * session with no concurrent jobs, or the foreign stages' shuffle
-    * bytes land in whichever round is open. */
-  final case class CcRound(round: Int, changed: Long, secs: Double,
-                           shuffleReadMB: Double, shuffleWriteMB: Double)
-
-  /** Fixpoint run stats: `rounds` is the O(diameter) claim made
-    * measurable — it must track the planted diameter, not the node
-    * count. `perRound` shuffle volumes must stay flat (each round
-    * shuffles the label table only, never the edges). */
-  final case class CcStats(nodes: Long, edges: Long, rounds: Int,
-                           perRound: Seq[CcRound])
-
-  /** [[connectedComponents]] plus fixpoint observability. Stats are None
-    * when the size gate routed to the driver union-find (no rounds to
-    * report). Adds one count job (nodes) over the uninstrumented path. */
-  def connectedComponentsWithStats(edges: DataFrame, srcCol: String,
-                                   dstCol: String, maxIter: Int = 25,
-                                   localThreshold: Long = 1L << 20)
-      : (DataFrame, Option[CcStats]) =
-    ccImpl(edges, srcCol, dstCol, maxIter, localThreshold,
-      collectStats = true)
+  /** Edge budget of the driver-side union-find. */
+  private val LocalEdges = 1 << 20
 
   /** Connected components of the undirected graph given by `edges`
     * (`srcCol`, `dstCol`; direction ignored, self-loops and duplicate
@@ -71,30 +47,15 @@ object Components {
     * distinct node:
     * (`id`, `component`) where `component` is the smallest node id
     * reachable from `id` — a canonical, deterministic cluster label.
+    * An edge set of at most 2^20 edges is labelled by the driver-side
+    * union-find behind [[graft.core.LocalGate]]: a verified near-dup
+    * pair set is a sliver of any corpus.
     *
     * @param maxIter hard cap on propagation rounds (diameter bound);
     *                throws if the fixpoint is not reached so a silent
-    *                under-merge can never ship.
-    * @param localThreshold edge count at or below which the component
-    *                labels are computed with a driver-side union-find
-    *                over the collected edge list — the same size-gated
-    *                reasoning as `autoBroadcastJoinThreshold`: a verified
-    *                near-dup pair set is a sliver of any corpus, and an
-    *                iterative fixpoint of Spark jobs over a few thousand
-    *                rows pays rounds × job-latency for work a single
-    *                in-memory pass does exactly. Identical output to the
-    *                distributed path (asserted in spec); set 0 to force
-    *                the distributed fixpoint. */
+    *                under-merge can never ship. */
   def connectedComponents(edges: DataFrame, srcCol: String, dstCol: String,
-                          maxIter: Int = 25,
-                          localThreshold: Long = 1L << 20): DataFrame =
-    ccImpl(edges, srcCol, dstCol, maxIter, localThreshold,
-      collectStats = false)._1
-
-  private def ccImpl(edges: DataFrame, srcCol: String, dstCol: String,
-                     maxIter: Int, localThreshold: Long,
-                     collectStats: Boolean)
-      : (DataFrame, Option[CcStats]) = {
+                          maxIter: Int = 25): DataFrame = {
     // schema validation up front, IDENTICAL for both size-gated paths —
     // without it the same frame would succeed or throw depending only on
     // row count (the local path's ordering needs these types; the
@@ -121,22 +82,20 @@ object Components {
     // iterates in single-task rounds, while a huge one keeps full
     // parallelism. Pre-partitioned by the join side and persisted, so
     // each round shuffles only the label table, never the edges.
-    // persisted BEFORE the size probe: the count and the branch taken
-    // after it both consume this plan, and the upstream edge derivation
-    // (e.g. a whole LSH-verify cascade) must run once, not twice. The
-    // probe counts RAW edges — no symmetrize/distinct shuffle spent
-    // before knowing which path runs; union-find is insensitive to
-    // direction, duplicates, and self-loops, so the local path collects
-    // the raw list as-is.
+    // persisted BEFORE the size gate: its probe and the path taken after
+    // it both consume this plan, and the upstream edge derivation (e.g. a
+    // whole LSH-verify cascade) must run once, not twice. The gate sees
+    // RAW edges — no symmetrize/distinct shuffle spent before knowing
+    // which path runs; union-find is insensitive to direction,
+    // duplicates, and self-loops, so the local path takes the raw list.
     val ep = e.persist(MEMORY_AND_DISK)
-    val nEdges = ep.count()
-    if (nEdges <= localThreshold) {
-      val result = unionFindLocal(ep)
+    val local = graft.core.LocalGate.rows(ep, LocalEdges, "components")
+    if (local.nonEmpty) {
       ep.unpersist()
-      return (result, None)
+      return unionFindLocal(e, local.get)
     }
     val sc = e.sparkSession.sparkContext
-    val nPart = math.max(1, math.min((nEdges * 2 / 500000L).toInt,
+    val nPart = math.max(1, math.min((ep.count() * 2 / 500000L).toInt,
       sc.defaultParallelism * 4))
     val und = ep
       .unionByName(ep.select(col("d").as("s"), col("s").as("d")))
@@ -147,86 +106,56 @@ object Components {
     var labels = und.select(col("s").as("id")).distinct()
       .withColumn("component", col("id"))
       .localCheckpoint(true)
-    val nNodes = if (collectStats) labels.count() else -1L
-
-    // stage-completion listener accumulates shuffle volume; per-round
-    // deltas are snapshotted around each round's count action
-    val shufRead = new java.util.concurrent.atomic.AtomicLong
-    val shufWrite = new java.util.concurrent.atomic.AtomicLong
-    val listener =
-      if (!collectStats) None
-      else Some(new org.apache.spark.scheduler.SparkListener {
-        override def onStageCompleted(
-            s: org.apache.spark.scheduler.SparkListenerStageCompleted)
-            : Unit = {
-          val m = s.stageInfo.taskMetrics
-          if (m != null) {
-            shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-            shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-          }
-        }
-      })
-    listener.foreach(sc.addSparkListener)
-    val rounds = scala.collection.mutable.ArrayBuffer.empty[CcRound]
-
     var converged = false
     var iter = 0
-    try {
-      while (!converged && iter < maxIter) {
-        val (r0, w0) = (shufRead.get(), shufWrite.get())
-        val t0 = System.nanoTime()
-        // neighbor labels flow along edges; min with the node's own label.
-        // One wide union → hash min-agg: a single shuffle per round. The
-        // node's own previous label rides along (min over flagged rows), so
-        // convergence detection is a filter on the round's output — no
-        // extra join.
-        val viaEdges = und
-          .join(labels.withColumnRenamed("id", "s"), "s")
-          .select(col("d").as("id"), col("component"),
-            lit(null: String).as("own"))
-        val next = labels
-          .select(col("id"), col("component"), lit("y").as("own"))
-          .unionByName(viaEdges)
-          .groupBy("id")
-          .agg(min("component").as("component"),
-            min(when(col("own").isNotNull, col("component"))).as("prev"))
-          .localCheckpoint(true)
-        // labels only ever decrease, so "any change" = "any strict decrease"
-        val changed = next.filter(col("component") < col("prev")).count()
-        labels = next.select(col("id"), col("component"))
-        converged = changed == 0
-        iter += 1
-        if (collectStats)
-          rounds += CcRound(iter, changed, (System.nanoTime() - t0) / 1e9,
-            (shufRead.get() - r0) / 1e6, (shufWrite.get() - w0) / 1e6)
-      }
-    } finally listener.foreach(sc.removeSparkListener)
+    while (!converged && iter < maxIter) {
+      // neighbor labels flow along edges; min with the node's own label.
+      // One wide union → hash min-agg: a single shuffle per round. The
+      // node's own previous label rides along (min over flagged rows), so
+      // convergence detection is a filter on the round's output — no
+      // extra join.
+      val viaEdges = und
+        .join(labels.withColumnRenamed("id", "s"), "s")
+        .select(col("d").as("id"), col("component"),
+          lit(null: String).as("own"))
+      val next = labels
+        .select(col("id"), col("component"), lit("y").as("own"))
+        .unionByName(viaEdges)
+        .groupBy("id")
+        .agg(min("component").as("component"),
+          min(when(col("own").isNotNull, col("component"))).as("prev"))
+        .localCheckpoint(true)
+      // labels only ever decrease, so "any change" = "any strict decrease"
+      converged = next.filter(col("component") < col("prev")).count() == 0
+      labels = next.select(col("id"), col("component"))
+      iter += 1
+    }
     und.unpersist()
     require(converged,
       s"connectedComponents did not converge in $maxIter rounds — " +
         "graph diameter exceeds the bound; raise maxIter")
-    (labels,
-      if (collectStats) Some(CcStats(nNodes, nEdges, iter, rounds.toSeq))
-      else None)
+    labels
   }
 
   /** Exact driver-side union-find (path compression + arbitrary union)
-    * for edge sets under `localThreshold`. Same output contract as the
+    * over the collected edge `rows` of `e`. Same output contract as the
     * distributed fixpoint: (id, component = min member). */
-  private def unionFindLocal(und: DataFrame): DataFrame = {
+  private def unionFindLocal(e: DataFrame,
+                             rows: Array[org.apache.spark.sql.Row])
+      : DataFrame = {
     import org.apache.spark.sql.Row
     import org.apache.spark.sql.types.{StringType, StructField, StructType}
-    val spark = und.sparkSession
-    // type + null validation already happened in ccImpl, identically
-    // for both paths
-    val dt = und.schema.head.dataType
+    val spark = e.sparkSession
+    // type + null validation already happened in connectedComponents,
+    // identically for both paths
+    val dt = e.schema.head.dataType
     val parent = scala.collection.mutable.HashMap.empty[Any, Any]
     def find(x: Any): Any = {
       var r = x
       while (parent(r) != r) { parent(r) = parent(parent(r)); r = parent(r) }
       r
     }
-    und.collect().foreach { row =>
+    rows.foreach { row =>
       val (a, b) = (row.get(0), row.get(1))
       parent.getOrElseUpdate(a, a)
       parent.getOrElseUpdate(b, b)

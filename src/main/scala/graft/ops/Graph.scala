@@ -22,18 +22,23 @@ object Graph {
   /** Rank fixed-point scale: rank_scaled = pagerank · 10^12. */
   val Scale = 1000000000000L
 
+  /** Edge budget of the driver twin. */
+  private val LocalEdges = 1 << 20
+
   /** Driver-side twin of the distributed fixpoint — IDENTICAL integer
     * recurrence per round (contrib = rank div outdeg summed per target,
     * dangling_share = danglingSum div n, rank' = (15·base + 85·(in +
     * share)) div 100), so the two paths are bit-equal and the size gate
     * is invisible to callers. Edge list is already distinct and
     * null-free when called. */
-  private def localPageRank(e: DataFrame, iters: Int): DataFrame = {
+  private def localPageRank(e: DataFrame,
+                            rows: Array[org.apache.spark.sql.Row],
+                            iters: Int): DataFrame = {
     val spark = e.sparkSession
     val idType = e.schema("src").dataType
     require(idType == e.schema("dst").dataType,
       s"endpoint types must match, got $idType vs ${e.schema("dst").dataType}")
-    val edges = e.collect().map(r => (r.get(0), r.get(1)))
+    val edges = rows.map(r => (r.get(0), r.get(1)))
     val nodes: Array[Any] =
       (edges.map(_._1) ++ edges.map(_._2)).distinct
     val n = nodes.length.toLong
@@ -83,8 +88,7 @@ object Graph {
     * driver-side count before the loop. Returns (id, rank_scaled),
     * rank_scaled ≈ pagerank·10^12, Σ ranks ≈ 10^12. */
   def pageRankScaled(edges: DataFrame, srcCol: String, dstCol: String,
-                     iters: Int = 8,
-                     localThreshold: Long = 1L << 20): DataFrame = {
+                     iters: Int = 8): DataFrame = {
     // the loop's two standing inputs go through eager localCheckpoint,
     // not persist: a persisted frame KEEPS its logical plan, and when
     // the edge list is itself the output of a heavy derivation (the
@@ -96,14 +100,11 @@ object Graph {
       .filter(col("src").isNotNull && col("dst").isNotNull)
       .distinct()
       .localCheckpoint(true)
-    // size gate, same reasoning as Components.localThreshold: 8 rounds
-    // of Spark jobs on a sliver-sized graph pay rounds × stages × job
-    // latency (measured ~1.1 s/round on a 500-edge graph) for work one
-    // in-memory pass does exactly; the driver path runs the IDENTICAL
-    // scaled-integer recurrence, so output is bit-equal (spec-pinned).
-    // Set 0 to force the distributed fixpoint.
-    if (e.count() <= localThreshold)
-      return localPageRank(e, iters)
+    // a graph of at most 2^20 edges runs the driver twin behind
+    // [[graft.core.LocalGate]]: the IDENTICAL scaled-integer recurrence
+    val local = graft.core.LocalGate.rows(e, LocalEdges, "pagerank")
+    if (local.nonEmpty)
+      return localPageRank(e, local.get, iters)
     val nodes = e.select(col("src").as("id"))
       .unionByName(e.select(col("dst").as("id"))).distinct()
     val outDeg = e.groupBy(col("src").as("id"))

@@ -1028,22 +1028,23 @@ object VectorOps {
                       labelCol: String = "label"): DataFrame = {
     val cand = bandedCrossLabelCandidates(vecs, bands, planesPerBand,
       idCol, vecCol, labelCol)
-    // per-source argmax as max(struct(cos, −dst)) — identical pick to
+    // per-source argmax as max(struct(cos, ~dst)) — identical pick to
     // the old rank-1 window (struct comparison is the same total order
-    // the sort used: cos desc incl. NaN-largest/−0.0<0.0, then −dst max
+    // the sort used: cos desc incl. NaN-largest/−0.0<0.0, then ~dst max
     // ≡ dst asc), but a map-side-combinable hash aggregate instead of a
     // sort exchange: the shuffle carries one partial best per (src,
     // partition), not every candidate row (r15, guide §2.3/§2.4).
-    // Integral ids only (the negation trick); other id types keep the
-    // window.
+    // Integral ids only; other id types keep the window. The order
+    // flip is bitwise_not (~x = −x−1), which reverses the order over the
+    // whole type — plain negation overflows on the minimum id.
     val best = cand.schema("__dst").dataType match {
       case org.apache.spark.sql.types.LongType |
            org.apache.spark.sql.types.IntegerType |
            org.apache.spark.sql.types.ShortType =>
         cand.groupBy(col("__src"))
           .agg(max(struct(col("__cos").as("__c"),
-            (-col("__dst")).as("__nd"))).as("__m"))
-          .select(col("__src"), (-col("__m.__nd")).as("__dst"),
+            bitwise_not(col("__dst")).as("__nd"))).as("__m"))
+          .select(col("__src"), bitwise_not(col("__m.__nd")).as("__dst"),
             col("__m.__c").as("__cos"))
       case _ =>
         val w = org.apache.spark.sql.expressions.Window
@@ -1155,6 +1156,10 @@ object VectorOps {
       recallTarget), p, idCol, vecCol, labelCol)
   }
 
+  /** Row budgets of [[mmrRerank]]'s driver twin. */
+  private val MmrShortlistRows = 1 << 16
+  private val MmrSimRows = 1 << 20
+
   /** Maximal-marginal-relevance re-rank (Carbonell & Goldstein,
     * SIGIR'98): greedily pick `selectK` results per query from a
     * relevance shortlist, each step maximizing λ·rel − (1−λ)·max-sim-
@@ -1174,8 +1179,7 @@ object VectorOps {
   def mmrRerank(queries: DataFrame, corpus: DataFrame, shortlistK: Int,
                 selectK: Int, lambda: Double = 0.5,
                 idCol: String = "vec_id",
-                vecCol: String = "embedding",
-                localThreshold: Long = 1L << 16): DataFrame = {
+                vecCol: String = "embedding"): DataFrame = {
     require(selectK >= 1 && selectK <= shortlistK,
       s"selectK $selectK out of [1, $shortlistK]")
     val sl = bruteForceTopK(queries, corpus, shortlistK, idCol, vecCol)
@@ -1184,32 +1188,30 @@ object VectorOps {
     val vecs = corpus.select(col(idCol).as("neighbor_id"),
       col(vecCol).as("__cv"))
     val slv = sl.join(vecs, "neighbor_id")
-    val psPlan = slv.select(col("query_id"), col("neighbor_id").as("ca"),
+    val ps = slv.select(col("query_id"), col("neighbor_id").as("ca"),
         col("__cv").as("__va"))
       .join(slv.select(col("query_id"), col("neighbor_id").as("cb"),
         col("__cv").as("__vb")), Seq("query_id"))
       .filter(col("ca") =!= col("cb"))
       .select(col("query_id"), col("ca"), col("cb"),
         round(cosine(col("__va"), col("__vb")), 6).as("sim"))
-    // size gate (the Components/Graph/Bpe discipline): the shortlist is
-    // |queries|·shortlistK rows and the precomputed sims at most that ×
-    // (shortlistK−1) — when the shortlist fits under the threshold the
-    // k-step greedy runs on the driver over the collected sliver with
-    // the IDENTICAL recurrence (same 6-rounded distributed sims, same
-    // 9-rounded λ·rel − (1−λ)·maxSim score, same score-desc / id-asc
-    // argmax), so output is bit-equal (spec-pinned) while the selectK
-    // rounds of anti-join + aggregate + window + localCheckpoint
-    // collapse into one in-memory loop. The corpus-scale scoring
-    // (bruteForceTopK) and the pairwise sims stay distributed either
-    // way; the gate is a bounded limit probe, never an unbounded
-    // collect. Set localThreshold = 0 to force the distributed rounds.
-    if (localThreshold > 0 && localThreshold < Int.MaxValue) {
-      val probe = sl.limit(localThreshold.toInt + 1).collect()
-      if (probe.length <= localThreshold)
-        return mmrLocal(sl, probe, psPlan.collect(), selectK, lambda)
-    }
-    val ps = psPlan
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // driver twin behind [[graft.core.LocalGate]] when the shortlist has
+    // at most 2^16 rows and its pairwise sims (up to shortlistK−1 per
+    // shortlist row) at most 2^20: the IDENTICAL recurrence (same
+    // 6-rounded distributed sims, same 9-rounded λ·rel − (1−λ)·maxSim
+    // score, same score-desc / id-asc argmax). The corpus-scale scoring
+    // (bruteForceTopK) and the pairwise sims stay distributed either way.
+    val local = for {
+      slRows <- graft.core.LocalGate.rows(sl, MmrShortlistRows,
+        "mmr shortlist")
+      psRows <- graft.core.LocalGate.rows(ps, MmrSimRows, "mmr sims")
+    } yield mmrLocal(sl, slRows, psRows, selectK, lambda)
+    if (local.nonEmpty) {
+      sl.unpersist(blocking = false)
+      ps.unpersist(blocking = false)
+      return local.get
+    }
     val wq = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))
     var all = sl
@@ -1247,32 +1249,17 @@ object VectorOps {
     * (both computed DISTRIBUTED with the exact expressions the
     * distributed rounds consume), so the size gate is invisible to
     * callers. Argmax tie-breaks replicate Spark's orderings: score
-    * desc then id asc, ids compared numerically or in UTF8 BINARY
-    * order for strings; the greedy score replays Spark's
+    * desc then id asc; the greedy score replays Spark's
     * round(DoubleType, 9) via the same BigDecimal(double) HALF_UP
     * path. */
   private def mmrLocal(sl: DataFrame,
                        slRows: Array[org.apache.spark.sql.Row],
                        psRows: Array[org.apache.spark.sql.Row],
                        selectK: Int, lambda: Double): DataFrame = {
-    import org.apache.spark.sql.types.{IntegerType, LongType, ShortType,
-      StringType, StructField, StructType}
-    val idType = sl.schema("neighbor_id").dataType
-    val idLess: (Any, Any) => Boolean = idType match {
-      case LongType => (a, b) =>
-        a.asInstanceOf[Long] < b.asInstanceOf[Long]
-      case IntegerType => (a, b) =>
-        a.asInstanceOf[Int] < b.asInstanceOf[Int]
-      case ShortType => (a, b) =>
-        a.asInstanceOf[Short] < b.asInstanceOf[Short]
-      case StringType => (a, b) =>
-        org.apache.spark.unsafe.types.UTF8String
-          .fromString(a.asInstanceOf[String])
-          .compareTo(org.apache.spark.unsafe.types.UTF8String
-            .fromString(b.asInstanceOf[String])) < 0
-      case other => throw new IllegalArgumentException(
-        s"mmrRerank local path needs integral or string ids, got $other")
-    }
+    import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
+    // ids are longs: bruteForceTopK keys its top-k by long ids
+    def idLess(a: Any, b: Any): Boolean =
+      a.asInstanceOf[Long] < b.asInstanceOf[Long]
     // Spark's round(DoubleType, 9): BigDecimal(double) — valueOf/
     // toString canonicalization — setScale HALF_UP, back to double.
     // Non-finite passes through unchanged (Spark's Round guards NaN/Inf;

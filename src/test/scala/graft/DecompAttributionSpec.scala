@@ -71,6 +71,20 @@ class DecompAttributionSpec extends SparkSpecBase {
     assert(asStr == pairs, "aggregate argmax != window argmax")
   }
 
+  test("mutualNeighbors: Long.MinValue and Long.MaxValue ids pick and " +
+      "tie-break like any other id") {
+    // identical vectors share every band signature; MinValue's two
+    // cos-1 partners tie, and the smaller id (5) wins
+    val vecs = Seq(
+      (Long.MinValue, Array(1f, 0f), 0), (1L, Array(0f, 1f), 0),
+      (Long.MaxValue, Array(1f, 0f), 1), (5L, Array(1f, 0f), 1),
+      (2L, Array(0f, 1f), 1))
+      .toDF("vec_id", "embedding", "label")
+    val pairs = VectorOps.mutualNeighbors(vecs, 4, 2).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).toSet
+    assert(pairs == Set((Long.MinValue, 5L), (1L, 2L)), pairs)
+  }
+
   test("attribution: credits land on the right touches, models total alike") {
     // user 1: touches at 10:00 (view#1), 11:00 (click#2); conversion
     // at 12:00 → first=view, last=click, linear=0.5 each.

@@ -151,31 +151,6 @@ class Round10Spec extends SparkSpecBase {
     assert(acc >= 0.9, s"trained accuracy $acc")
   }
 
-  test("logisticTrain: size-gated local rounds are bit-equal to the " +
-      "distributed fixpoint, incl. null and non-finite features") {
-    import spark.implicits._
-    val base = (0 until 800)
-      .map(i => (java.lang.Double.valueOf(i / 800.0),
-        java.lang.Double.valueOf(if (i >= 400) 1.0 else 0.0),
-        java.lang.Double.valueOf((i % 7) / 3.0)))
-    val edge = Seq(
-      (null.asInstanceOf[java.lang.Double], java.lang.Double.valueOf(1.0),
-        java.lang.Double.valueOf(0.5)),          // null feature
-      (java.lang.Double.valueOf(0.3), null.asInstanceOf[java.lang.Double],
-        java.lang.Double.valueOf(0.1)),          // null label
-      (java.lang.Double.valueOf(Double.NaN), java.lang.Double.valueOf(0.0),
-        java.lang.Double.valueOf(0.2)),          // NaN feature
-      (java.lang.Double.valueOf(4e18), java.lang.Double.valueOf(1.0),
-        java.lang.Double.valueOf(0.0)))          // x·err = 2e18: overflow
-    val df = (base ++ edge).toDF("x1", "y", "x2")
-    def train(thr: Long) = graft.ops.Classifier.logisticTrain(
-      df, Seq(col("x1"), col("x2")), col("y"), rounds = 5, lr = 4.0,
-      localThreshold = thr)
-    val dist = train(0L)       // force distributed
-    val local = train(1L << 20) // gate takes the driver loop
-    assert(dist == local, s"$dist vs $local — local twin diverged")
-  }
-
   test("q267: the trained filter beats the majority class on the " +
       "planted length label") {
     val scored = graft.queries.TextQueries.qQualityScores(spark, sf)

@@ -293,25 +293,6 @@ class Round5OpsSpec extends SparkSpecBase {
     assert(top3.map(_ / 10).toSet.size == 1)
   }
 
-  test("mmrRerank size-gated local greedy is bit-equal to the " +
-       "distributed rounds on the gate corpus") {
-    val emb = spark.read.parquet(s"$sf/embeddings.parquet")
-    val q = emb.filter(org.apache.spark.sql.functions.col("vec_id") < 20)
-    val cols = Seq("query_id", "neighbor_id", "rel", "step")
-      .map(org.apache.spark.sql.functions.col)
-    val local = graft.ops.VectorOps
-      .mmrRerank(q, emb, shortlistK = 12, selectK = 5).select(cols: _*)
-    val dist = graft.ops.VectorOps
-      .mmrRerank(q, emb, shortlistK = 12, selectK = 5,
-        localThreshold = 0).select(cols: _*)
-    assert(local.schema == dist.schema ||
-      local.schema.map(f => (f.name, f.dataType)) ==
-        dist.schema.map(f => (f.name, f.dataType)))
-    assert(local.except(dist).count() == 0 &&
-      dist.except(local).count() == 0)
-    assert(local.count() == 20 * 5)
-  }
-
   test("zipfFit recovers a planted exact power law") {
     // corpus where type t_k appears round(C·k^-1) times → slope ≈ -1
     import spark.implicits._

@@ -63,19 +63,4 @@ class BpeSpec extends SparkSpecBase {
     val got = Bpe.encode(docs, "doc_id", "text", Nil).head()
     assert(got.getLong(1) == 2L && got.getLong(2) == 5L)
   }
-
-  test("size-gated local trainer is bit-equal to the distributed fixpoint") {
-    // gate corpus (non-trivial vocabulary, multi-byte chars included via
-    // the generator's text) through BOTH paths: default gate routes
-    // local; localThreshold = 0 forces the distributed rounds
-    val docs = spark.read.parquet(s"$sf/documents.parquet")
-    val local = Bpe.train(docs, "text", 8)
-    val dist = Bpe.train(docs, "text", 8, localThreshold = 0)
-    assert(local == dist)
-    assert(local.size == 8)
-    // non-ASCII tie-break: UTF8 binary order, not UTF-16 code units
-    val uni = Seq("é½ é½ ab ab").toDF("text")
-    assert(Bpe.train(uni, "text", 2) ==
-      Bpe.train(uni, "text", 2, localThreshold = 0))
-  }
 }

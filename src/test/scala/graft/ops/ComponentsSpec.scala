@@ -6,18 +6,19 @@ import graft.SparkSpecBase
 class ComponentsSpec extends SparkSpecBase {
   import spark.implicits._
 
-  /** threshold 0 forces the distributed fixpoint; default uses the
-    * size-gated driver union-find. */
-  private def cc(edges: Seq[(Long, Long)], thr: Long = 1L << 20): Map[Long, Long] =
-    Components.connectedComponents(edges.toDF("a", "b"), "a", "b",
-        localThreshold = thr)
+  /** Small graphs take the size-gated driver union-find; `dist` runs
+    * the distributed fixpoint (gate off). */
+  private def cc(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    Components.connectedComponents(edges.toDF("a", "b"), "a", "b")
       .as[(Long, Long)].collect().toMap
+  private def dist(edges: Seq[(Long, Long)]): Map[Long, Long] =
+    gateOff(cc(edges))
 
   test("two separate components get their min ids as labels (both paths)") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L))
     val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 10L -> 10L, 11L -> 10L)
     assert(cc(edges) === want)
-    assert(cc(edges, thr = 0) === want)
+    assert(dist(edges) === want)
   }
 
   test("chain case greedy pair-dropping gets wrong: (1,3),(2,3)") {
@@ -30,50 +31,21 @@ class ComponentsSpec extends SparkSpecBase {
   test("long path converges on the distributed fixpoint") {
     val n = 12L
     val back = (1L until n).map(i => (i + 1, i)) // edges all point "down"
-    assert(cc(back, thr = 0) === (1L to n).map(_ -> 1L).toMap)
-  }
-
-  test("withStats reports rounds tracking diameter, not size") {
-    // path of 8 nodes (diameter 7) + a 3-node star: rounds must land in
-    // [7, 9] (min-label moves one hop per round; +1 detection round)
-    val path = (1L until 8L).map(i => (i + 1, i))
-    val star = Seq((100L, 101L), (100L, 102L))
-    val (labels, stats) = Components.connectedComponentsWithStats(
-      (path ++ star).toDF("a", "b"), "a", "b", localThreshold = 0L)
-    val got = labels.as[(Long, Long)].collect().toMap
-    assert(got === ((1L to 8L).map(_ -> 1L) ++
-      Seq(100L -> 100L, 101L -> 100L, 102L -> 100L)).toMap)
-    val st = stats.get
-    assert(st.nodes == 11 && st.edges == 9)
-    assert(st.rounds >= 7 && st.rounds <= 9, s"rounds = ${st.rounds}")
-    assert(st.perRound.size == st.rounds)
-    assert(st.perRound.last.changed == 0)       // fixpoint detected
-    assert(st.perRound.map(_.changed).init.forall(_ > 0))
-    // the local gate returns no stats (no rounds to report)
-    val (_, none) = Components.connectedComponentsWithStats(
-      star.toDF("a", "b"), "a", "b")
-    assert(none.isEmpty)
+    assert(dist(back) === (1L to n).map(_ -> 1L).toMap)
   }
 
   test("self-loops and duplicate edges are harmless (both paths)") {
     val edges = Seq((5L, 5L), (5L, 6L), (5L, 6L), (6L, 5L))
     assert(cc(edges) === Map(5L -> 5L, 6L -> 5L))
-    assert(cc(edges, thr = 0) === Map(5L -> 5L, 6L -> 5L))
-  }
-
-  test("local union-find and distributed fixpoint agree on a mixed graph") {
-    val edges = Seq((1L, 9L), (9L, 4L), (2L, 7L), (7L, 2L), (3L, 8L),
-      (8L, 30L), (30L, 31L), (40L, 41L), (41L, 4L))
-    assert(cc(edges) === cc(edges, thr = 0))
+    assert(dist(edges) === Map(5L -> 5L, 6L -> 5L))
   }
 
   test("labels are partitioning-invariant (distributed path)") {
     val edges = Seq((1L, 9L), (9L, 4L), (2L, 7L), (7L, 2L), (3L, 8L))
-    val base = cc(edges, thr = 0)
-    val repart = Components.connectedComponents(
-        edges.toDF("a", "b").repartition(7, col("b")), "a", "b",
-        localThreshold = 0)
-      .as[(Long, Long)].collect().toMap
+    val base = dist(edges)
+    val repart = gateOff(Components.connectedComponents(
+        edges.toDF("a", "b").repartition(7, col("b")), "a", "b")
+      .as[(Long, Long)].collect().toMap)
     assert(base === repart)
   }
 
@@ -96,15 +68,15 @@ class ComponentsSpec extends SparkSpecBase {
     for (trial <- 1 to 5) {
       val n = 20 + trial * 7
       val edges = (1 to n).map(_ => (nextInt(30).toLong, nextInt(30).toLong))
-      assert(cc(edges) === cc(edges, thr = 0), s"trial $trial: $edges")
+      assert(cc(edges) === dist(edges), s"trial $trial: $edges")
     }
   }
 
   test("non-convergence within maxIter fails loudly, never under-merges") {
     val path = (1L until 30L).map(i => (i, i + 1))
     val ex = intercept[IllegalArgumentException] {
-      Components.connectedComponents(path.toDF("a", "b"), "a", "b",
-        maxIter = 2, localThreshold = 0).collect()
+      gateOff(Components.connectedComponents(path.toDF("a", "b"), "a", "b",
+        maxIter = 2))
     }
     assert(ex.getMessage.contains("did not converge"))
   }

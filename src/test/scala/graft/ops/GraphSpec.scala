@@ -36,19 +36,6 @@ class GraphSpec extends SparkSpecBase {
     assert(math.abs(pr(1L) - 333333333333L) < 1000L)
   }
 
-  test("pageRankScaled: local and distributed paths are bit-equal") {
-    val s = spark
-    import s.implicits._
-    val edges = (1 to 60).map(i => (i.toLong, (i % 13).toLong + 100L)) ++
-      Seq((100L, 1L), (101L, 2L))
-    val df = edges.toDF("src", "dst")
-    val local = Graph.pageRankScaled(df, "src", "dst", iters = 8)
-      .orderBy("id").collect().toSeq
-    val dist = Graph.pageRankScaled(df, "src", "dst", iters = 8,
-      localThreshold = 0L).orderBy("id").collect().toSeq
-    assert(local === dist)
-  }
-
   test("pageRankScaled: result is independent of input partitioning") {
     val s = spark
     import s.implicits._
