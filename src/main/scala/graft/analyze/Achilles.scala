@@ -1,180 +1,103 @@
 package graft.analyze
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DoubleType, IntegerType, LongType,
+  StringType, StructField, StructType}
 
 /** Achilles-style analytics (SURVEY.md §2.4 A9/A10): the stratified-count
   * and distribution analyses the reference runs via OHDSI Achilles
   * (query_achilles_results.sh:144-230, achilles_config.json), re-expressed
   * as DataFrame aggregations producing the standard results shape
   * (analysis_id, stratum_1..5, count_value) and the distribution shape
-  * (analysis_id, min/p10/p25/median/p75/p90/max).
+  * (analysis_id, stratum_1, count/min/p10/p25/median/p75/p90/max).
   *
-  * Each analysis is one groupBy — map-side partial agg, shuffle ∝ strata
-  * cardinality, never input size. The union of analyses stays lazy; one
-  * write materializes the whole results table.
+  * Each table is ONE aggregate, as a set-based Achilles SQL run is: every
+  * analysis contributes a narrow projection of its rows, keyed by
+  * (analysis_id, strata), and a single groupBy over their union computes
+  * every analysis at once — map-side partial agg, shuffle ∝ total strata
+  * cardinality, never input size. One analysis per aggregate would cost a
+  * job or more each, which dominates the ETL at small and medium sizes.
+  *
+  * Results analyses (stratum_1 unless noted; X00 = persons with ≥1
+  * record, X01 = records):
+  *   - 1 persons (stratum_1 = ""), 2 by gender, 3 by year of birth,
+  *     4 by race;
+  *   - 200/201 visits by visit concept, 400/401 conditions;
+  *   - 600/601 procedures, 700/701 drug exposures, 800/801 observations
+  *     (query_achilles_results.sh:193-220), 1800/1801 measurements
+  *     (1801 in the summary's record counts, :152-155);
+  *   - 900 drug eras and 1000 condition eras by concept (records).
+  *
+  * Distribution analyses, over a `len` in days or years:
+  *   - 211 visit length (A9; the reference reads it from
+  *     `achilles_results_dist`, query_achilles_results.sh:228-230);
+  *   - 906 drug-era length;
+  *   - 103 age at first observation period, 104 the same by gender
+  *     (run_achilles.R:36-57 default set);
+  *   - 105 length of each person's first observation period, 106 by
+  *     gender, 107 by age decile at first observation.
   */
 object Achilles {
 
-  private val resultCols = Seq("analysis_id", "stratum_1", "stratum_2",
-    "stratum_3", "stratum_4", "stratum_5", "count_value")
+  private val strata = (1 to 5).map(i => s"stratum_$i")
 
-  private def result(analysisId: Int, df: DataFrame,
-                     strata: Seq[org.apache.spark.sql.Column]): DataFrame = {
-    val padded = strata.padTo(5, lit(null).cast("string"))
-    df.groupBy(strata: _*)
+  /** One analysis's rows before the count: (analysis_id, stratum_1..5),
+    * strata cast to string and padded with NULL. */
+  private def rows(analysisId: Int, df: DataFrame,
+                   by: Seq[Column], extra: Seq[Column] = Nil): DataFrame =
+    df.select((lit(analysisId).as("analysis_id") +:
+      by.padTo(5, lit(null)).zip(strata).map { case (c, s) =>
+        c.cast(StringType).as(s) }) ++ extra: _*)
+
+  /** Default-analyses run → one stacked results table. Domain inputs
+    * beyond the person/visit/condition core are optional so partial
+    * pipelines keep their analysis set. */
+  def run(person: DataFrame, visit: DataFrame, condition: DataFrame,
+          drugEra: Option[DataFrame] = None,
+          conditionEra: Option[DataFrame] = None,
+          procedure: Option[DataFrame] = None,
+          drugExposure: Option[DataFrame] = None,
+          observation: Option[DataFrame] = None,
+          measurement: Option[DataFrame] = None): DataFrame = {
+    // (X00 id, table, concept column); X01 is X00 + 1
+    val domains = Seq((200, visit, "visit_concept_id"),
+      (400, condition, "condition_concept_id")) ++
+      procedure.map((600, _, "procedure_concept_id")) ++
+      drugExposure.map((700, _, "drug_concept_id")) ++
+      observation.map((800, _, "observation_concept_id")) ++
+      measurement.map((1800, _, "measurement_concept_id"))
+    // X00: the person rides along, one row per distinct (analysis,
+    // concept, person) survives
+    val persons = domains
+      .map { case (id, df, c) =>
+        rows(id, df, Seq(col(c)), Seq(col("person_id"))) }
+      .reduce(_ unionByName _)
+      .distinct()
+      .drop("person_id")
+    val records = Seq(
+      rows(1, person, Seq(lit(""))),
+      rows(2, person, Seq(col("gender_concept_id"))),
+      rows(3, person, Seq(col("year_of_birth"))),
+      rows(4, person, Seq(col("race_concept_id")))) ++
+      domains.map { case (id, df, c) => rows(id + 1, df, Seq(col(c))) } ++
+      drugEra.map(rows(900, _, Seq(col("drug_concept_id")))) ++
+      conditionEra.map(rows(1000, _, Seq(col("condition_concept_id"))))
+    (persons +: records).reduce(_ unionByName _)
+      .groupBy(("analysis_id" +: strata).map(col): _*)
       .agg(count(lit(1)).as("count_value"))
-      .select(lit(analysisId).as("analysis_id") +:
-        padded.zipWithIndex.map { case (c, i) =>
-          c.cast("string").as(s"stratum_${i + 1}")
-        } :+ col("count_value"): _*)
-      .select(resultCols.map(col): _*)
   }
 
-  /** Analysis 1: number of persons. */
-  def a1NumPersons(person: DataFrame): DataFrame =
-    result(1, person, Seq(lit("")))
-
-  /** Analysis 2: persons by gender concept. */
-  def a2ByGender(person: DataFrame): DataFrame =
-    result(2, person, Seq(col("gender_concept_id")))
-
-  /** Analysis 3: persons by year of birth. */
-  def a3ByYearOfBirth(person: DataFrame): DataFrame =
-    result(3, person, Seq(col("year_of_birth")))
-
-  /** Analysis 4: persons by race concept. */
-  def a4ByRace(person: DataFrame): DataFrame =
-    result(4, person, Seq(col("race_concept_id")))
-
-  /** The OHDSI X00 shape — persons with ≥1 record, by concept: distinct
-    * (person, concept) then count. Two-stage hash agg; the shuffle carries
-    * one row per distinct pair, never per record. */
-  private def personsByConcept(id: Int, df: DataFrame,
-                               concept: String): DataFrame =
-    result(id,
-      df.select(col("person_id"), col(concept))
-        .dropDuplicates("person_id", concept),
-      Seq(col(concept)))
-
-  /** The OHDSI X01 shape — record counts by concept. */
-  private def recordsByConcept(id: Int, df: DataFrame,
-                               concept: String): DataFrame =
-    result(id, df, Seq(col(concept)))
-
-  /** Analysis 200: persons with ≥1 visit, by visit concept. */
-  def a200ByVisitConcept(visit: DataFrame): DataFrame =
-    personsByConcept(200, visit, "visit_concept_id")
-
-  /** Analysis 201: visit occurrence records by visit concept. */
-  def a201VisitRecords(visit: DataFrame): DataFrame =
-    recordsByConcept(201, visit, "visit_concept_id")
-
-  /** Analysis 400: persons with ≥1 condition, by condition concept. */
-  def a400ByConditionConcept(condition: DataFrame): DataFrame =
-    personsByConcept(400, condition, "condition_concept_id")
-
-  /** Analysis 401: condition occurrence records by concept. */
-  def a401ConditionRecords(condition: DataFrame): DataFrame =
-    recordsByConcept(401, condition, "condition_concept_id")
-
-  /** Analysis 600/601: procedure persons / records by concept
-    * (query_achilles_results.sh:203-210 "procedures" block). */
-  def a600ByProcedureConcept(procedure: DataFrame): DataFrame =
-    personsByConcept(600, procedure, "procedure_concept_id")
-  def a601ProcedureRecords(procedure: DataFrame): DataFrame =
-    recordsByConcept(601, procedure, "procedure_concept_id")
-
-  /** Analysis 700/701: drug-exposure persons / records by concept
-    * (query_achilles_results.sh:193-200 "drugs" block). */
-  def a700ByDrugConcept(drugExposure: DataFrame): DataFrame =
-    personsByConcept(700, drugExposure, "drug_concept_id")
-  def a701DrugRecords(drugExposure: DataFrame): DataFrame =
-    recordsByConcept(701, drugExposure, "drug_concept_id")
-
-  /** Analysis 800/801: observation persons / records by concept
-    * (query_achilles_results.sh:213-220 "observations" block). */
-  def a800ByObservationConcept(observation: DataFrame): DataFrame =
-    personsByConcept(800, observation, "observation_concept_id")
-  def a801ObservationRecords(observation: DataFrame): DataFrame =
-    recordsByConcept(801, observation, "observation_concept_id")
-
-  /** Analysis 1800/1801: measurement persons / records by concept
-    * (1801 appears in the summary's record-counts-by-domain list,
-    * query_achilles_results.sh:152-155). */
-  def a1800ByMeasurementConcept(measurement: DataFrame): DataFrame =
-    personsByConcept(1800, measurement, "measurement_concept_id")
-  def a1801MeasurementRecords(measurement: DataFrame): DataFrame =
-    recordsByConcept(1801, measurement, "measurement_concept_id")
-
   /** Person × first observation period: (person_id, gender_concept_id,
-    * age at first obs). Shared by analyses 101/103/104. */
+    * age at first obs). Shared by analyses 103/104. */
   private def ageAtFirstObs(person: DataFrame,
                             observationPeriod: DataFrame): DataFrame =
     person.join(
       observationPeriod.groupBy(col("person_id"))
         .agg(min(col("observation_period_start_date")).as("first_obs")),
       "person_id")
-      .withColumn("age", year(col("first_obs")) - col("year_of_birth"))
-
-  /** Analysis 101-shape: persons by age at first observation period. */
-  def a101AgeAtFirstObs(person: DataFrame,
-                        observationPeriod: DataFrame): DataFrame =
-    result(101, ageAtFirstObs(person, observationPeriod), Seq(col("age")))
-
-  /** The Achilles distribution shape over a `len` column, optionally
-    * stratified (stratum_1). One hash agg; for the stratified form the
-    * shuffle carries strata cardinality, never rows. Exact `percentile`
-    * for oracle parity — swap percentile_approx at scale (SURVEY §8). */
-  private def dist(analysisId: Int, values: DataFrame,
-                   stratum: Option[org.apache.spark.sql.Column] = None)
-      : DataFrame = {
-    val aggs = Seq(
-      count(lit(1)).as("count_value"),
-      min(col("len")).as("min_value"),
-      expr("percentile(len, 0.10)").as("p10_value"),
-      expr("percentile(len, 0.25)").as("p25_value"),
-      expr("percentile(len, 0.50)").as("median_value"),
-      expr("percentile(len, 0.75)").as("p75_value"),
-      expr("percentile(len, 0.90)").as("p90_value"),
-      max(col("len")).as("max_value"))
-    val out = stratum match {
-      case Some(s) =>
-        values.groupBy(s.cast("string").as("stratum_1"))
-          .agg(aggs.head, aggs.tail: _*)
-      case None =>
-        values.agg(aggs.head, aggs.tail: _*)
-          .withColumn("stratum_1", lit(null).cast("string"))
-    }
-    out.select(lit(analysisId).as("analysis_id") +: col("stratum_1") +:
-      distValueCols.map(col): _*)
-  }
-
-  private val distValueCols = Seq("count_value", "min_value", "p10_value",
-    "p25_value", "median_value", "p75_value", "p90_value", "max_value")
-
-  /** Analysis 211-shape: distribution of visit length in days (A9 —
-    * exact percentiles for oracle parity; percentile_approx at scale). */
-  def a211VisitLength(visit: DataFrame): DataFrame =
-    dist(211, visit.select(
-      datediff(col("visit_end_date"), col("visit_start_date"))
-        .cast("double").as("len")))
-
-  /** Analysis 103-shape: distribution of age at first observation period
-    * (OHDSI Achilles default set, run via run_achilles.R:36-57). */
-  def a103AgeAtFirstObsDist(person: DataFrame,
-                            observationPeriod: DataFrame): DataFrame =
-    dist(103, ageAtFirstObs(person, observationPeriod)
-      .select(col("age").cast("double").as("len")))
-
-  /** Analysis 104-shape: age at first observation period, by gender
-    * (stratum_1 = gender_concept_id). */
-  def a104AgeAtFirstObsByGender(person: DataFrame,
-                                observationPeriod: DataFrame): DataFrame =
-    dist(104, ageAtFirstObs(person, observationPeriod)
-      .select(col("gender_concept_id"),
-        col("age").cast("double").as("len")),
-      Some(col("gender_concept_id")))
+      .withColumn("len",
+        (year(col("first_obs")) - col("year_of_birth")).cast(DoubleType))
 
   /** Per-person FIRST observation period, picked by lexicographic
     * min(start, end) — deterministic under start-date ties, no window.
@@ -188,90 +111,64 @@ object Achilles {
         col("first.observation_period_start_date").as("first_start"),
         datediff(col("first.observation_period_end_date"),
           col("first.observation_period_start_date"))
-          .cast("double").as("len"))
+          .cast(DoubleType).as("len"))
 
-  /** Analysis 105-shape: length in days of each person's FIRST
-    * observation period. */
-  def a105ObsPeriodLength(observationPeriod: DataFrame): DataFrame =
-    dist(105, firstPeriodLength(observationPeriod))
-
-  /** Analysis 106-shape: first-period length by gender
-    * (stratum_1 = gender_concept_id). */
-  def a106ObsPeriodLengthByGender(person: DataFrame,
-                                  observationPeriod: DataFrame): DataFrame =
-    dist(106, firstPeriodLength(observationPeriod)
-      .join(person.select(col("person_id"), col("gender_concept_id")),
-        "person_id"),
-      Some(col("gender_concept_id")))
-
-  /** Analysis 107-shape: first-period length by age decile at first
-    * observation (stratum_1 = floor(age/10)). */
-  def a107ObsPeriodLengthByAgeDecile(person: DataFrame,
-                                     observationPeriod: DataFrame)
-      : DataFrame =
-    dist(107, firstPeriodLength(observationPeriod)
-      .join(person.select(col("person_id"), col("year_of_birth")),
-        "person_id")
-      .withColumn("decile",
-        floor((year(col("first_start")) - col("year_of_birth")) / 10)),
-      Some(col("decile")))
-
-  /** Analysis 900-shape: drug eras by drug concept
-    * (query_achilles_results.sh drug-era block). */
-  def a900ByDrugEraConcept(drugEra: DataFrame): DataFrame =
-    result(900, drugEra, Seq(col("drug_concept_id")))
-
-  /** Analysis 906-shape: distribution of drug-era length in days. */
-  def a906DrugEraLength(drugEra: DataFrame): DataFrame =
-    dist(906, drugEra.select(datediff(col("drug_era_end_date"),
-      col("drug_era_start_date")).cast("double").as("len")))
-
-  /** Analysis 1000-shape: condition eras by condition concept. */
-  def a1000ByConditionEraConcept(conditionEra: DataFrame): DataFrame =
-    result(1000, conditionEra, Seq(col("condition_concept_id")))
-
-  /** Distribution analyses → the separate achilles_results_dist table the
-    * reference reads (query_achilles_results.sh:228-230 reads 211 from
-    * `achilles_results_dist`, not `achilles_results`). With person +
-    * observation_period inputs the run also covers the observation-period
-    * defaults of the R Achilles set (103/104/105, run_achilles.R). */
+  /** Distribution analyses → the separate achilles_results_dist table.
+    * With person + observation_period inputs the run also covers the
+    * observation-period defaults of the R Achilles set (103–107).
+    *
+    * Every analysis contributes (analysis_id, stratum_1, len, w) rows of
+    * weight 1. An unstratified analysis reports one row even over empty
+    * input (count 0, NULL statistics), as a global aggregate does: each
+    * gets one seed row with a NULL `len` and weight 0, and `count_value`
+    * sums the weights. Exact `percentile` for oracle parity — swap
+    * percentile_approx at scale (SURVEY §8). */
   def runDist(visit: DataFrame,
               drugEra: Option[DataFrame] = None,
               person: Option[DataFrame] = None,
-              observationPeriod: Option[DataFrame] = None): DataFrame =
-    (Seq(a211VisitLength(visit))
-      ++ drugEra.map(a906DrugEraLength)
-      ++ (for (p <- person; op <- observationPeriod) yield Seq(
-           a103AgeAtFirstObsDist(p, op), a104AgeAtFirstObsByGender(p, op),
-           a106ObsPeriodLengthByGender(p, op),
-           a107ObsPeriodLengthByAgeDecile(p, op))).toSeq.flatten
-      ++ observationPeriod.map(a105ObsPeriodLength))
-      .reduce(_ unionByName _)
-
-  /** Full default-analyses run → one stacked results table. Domain inputs
-    * beyond the person/visit/condition core are optional so partial
-    * pipelines keep their analysis set. */
-  def run(person: DataFrame, visit: DataFrame, condition: DataFrame,
-          drugEra: Option[DataFrame] = None,
-          conditionEra: Option[DataFrame] = None,
-          procedure: Option[DataFrame] = None,
-          drugExposure: Option[DataFrame] = None,
-          observation: Option[DataFrame] = None,
-          measurement: Option[DataFrame] = None): DataFrame =
-    (Seq(
-      a1NumPersons(person), a2ByGender(person), a3ByYearOfBirth(person),
-      a4ByRace(person),
-      a200ByVisitConcept(visit), a201VisitRecords(visit),
-      a400ByConditionConcept(condition), a401ConditionRecords(condition)
-    ) ++ procedure.toSeq.flatMap(p =>
-        Seq(a600ByProcedureConcept(p), a601ProcedureRecords(p)))
-      ++ drugExposure.toSeq.flatMap(d =>
-        Seq(a700ByDrugConcept(d), a701DrugRecords(d)))
-      ++ observation.toSeq.flatMap(o =>
-        Seq(a800ByObservationConcept(o), a801ObservationRecords(o)))
-      ++ measurement.toSeq.flatMap(m =>
-        Seq(a1800ByMeasurementConcept(m), a1801MeasurementRecords(m)))
-      ++ drugEra.map(a900ByDrugEraConcept)
-      ++ conditionEra.map(a1000ByConditionEraConcept)
-    ).reduce(_ unionByName _)
+              observationPeriod: Option[DataFrame] = None): DataFrame = {
+    def days(end: String, start: String) =
+      datediff(col(end), col(start)).cast(DoubleType).as("len")
+    // (analysis_id, rows with a `len`, stratum_1 if stratified)
+    val withPerson = for (p <- person; op <- observationPeriod) yield {
+      val age = ageAtFirstObs(p, op)
+      val first = firstPeriodLength(op)
+      Seq((103, age, None),
+        (104, age, Some(col("gender_concept_id"))),
+        (106, first.join(
+          p.select(col("person_id"), col("gender_concept_id")), "person_id"),
+          Some(col("gender_concept_id"))),
+        (107, first.join(
+          p.select(col("person_id"), col("year_of_birth")), "person_id"),
+          Some(floor((year(col("first_start")) - col("year_of_birth")) / 10))))
+    }
+    val analyses: Seq[(Int, DataFrame, Option[Column])] =
+      Seq((211, visit.select(days("visit_end_date", "visit_start_date")),
+        None)) ++
+      drugEra.map(e => (906,
+        e.select(days("drug_era_end_date", "drug_era_start_date")), None)) ++
+      withPerson.toSeq.flatten ++
+      observationPeriod.map(op => (105, firstPeriodLength(op), None))
+    val values = analyses.map { case (id, df, stratum) =>
+      df.select(lit(id).as("analysis_id"),
+        stratum.getOrElse(lit(null)).cast(StringType).as("stratum_1"),
+        col("len"), lit(1L).as("w"))
+    }
+    val seeds = visit.sparkSession.createDataFrame(
+      java.util.Arrays.asList(analyses.collect { case (id, _, None) =>
+        Row(id, null, null, 0L) }: _*),
+      StructType(Seq(StructField("analysis_id", IntegerType, nullable = false),
+        StructField("stratum_1", StringType), StructField("len", DoubleType),
+        StructField("w", LongType, nullable = false))))
+    (values :+ seeds).reduce(_ unionByName _)
+      .groupBy(col("analysis_id"), col("stratum_1"))
+      .agg(sum(col("w")).as("count_value"),
+        min(col("len")).as("min_value"),
+        expr("percentile(len, 0.10)").as("p10_value"),
+        expr("percentile(len, 0.25)").as("p25_value"),
+        expr("percentile(len, 0.50)").as("median_value"),
+        expr("percentile(len, 0.75)").as("p75_value"),
+        expr("percentile(len, 0.90)").as("p90_value"),
+        max(col("len")).as("max_value"))
+  }
 }

@@ -27,6 +27,14 @@ object Sessions {
       .config("spark.sql.warehouse.dir",
         s"${System.getProperty("java.io.tmpdir")}/graft-warehouse")
       .config("spark.ui.enabled", "false")
+      // With artifact isolation on (the default), every Dataset task runs
+      // under the session's ExecutorClassLoader, and concurrent tasks that
+      // load classes cold serialize on its monitor: ETL task threads spent
+      // seconds blocked there. graft never adds session artifacts, so the
+      // isolation buys nothing; off, Dataset tasks use the executor's
+      // shared class loader, as RDD tasks already do. Only takes effect
+      // when the session is created.
+      .config("spark.sql.artifact.isolation.enabled", "false")
 
   /** NOTE: getOrCreate returns a pre-existing session AS-IS — a second
     * call with a different core count does NOT re-master or re-size

@@ -16,22 +16,11 @@ object Domains {
 
   /** person_map / visit_map: UUID → dense int (SURVEY §1.4, W2/M1;
     * enhanced_synthea_to_omop.py:770-777,935-944). */
-  def buildIdMap(spark: SparkSession, existing: Option[DataFrame],
-                 source: DataFrame, srcCol: String, idCol: String): DataFrame = {
-    // explicit schema, not a reflection-derived Encoder: keeps the library
-    // usable from REPL/embedded classloaders where runtime type reflection
-    // for toDF breaks
-    val empty = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](),
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(srcCol,
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField(idCol,
-          org.apache.spark.sql.types.LongType))))
-    DenseId.extendIdMap(existing.getOrElse(empty),
+  def buildIdMap(existing: Option[DataFrame], source: DataFrame,
+                 srcCol: String, idCol: String): DataFrame =
+    DenseId.extendIdMap(existing,
       source.select(col(srcCol)).filter(col(srcCol).isNotNull),
       srcCol, idCol)
-  }
 
   /** Closed-form dense-id bucket for the ETL's person-leading orderings:
     * person_id is [[buildIdMap]]'s dense 1..n output, so
@@ -41,11 +30,12 @@ object Domains {
     * full-width pass). */
   private def personBucket(personCount: Option[Long],
                            in: DataFrame): Option[Column] =
-    personCount.map { n =>
-      val parts = math.min(1024,
-        in.sparkSession.sessionState.conf.numShufflePartitions)
-      DenseId.denseLeadingIdBucket(col("person_id"), n, parts)
-    }
+    personCount.map(n =>
+      DenseId.denseLeadingIdBucket(col("person_id"), n, bucketParts(in)))
+
+  /** Buckets of a closed-form dense-id bucket: DenseId's own cap. */
+  private def bucketParts(in: DataFrame): Int =
+    math.min(1024, in.sparkSession.sessionState.conf.numShufflePartitions)
 
   /** omop.person (enhanced_synthea_to_omop.py:786-859): demographic
     * lookups joined case-insensitively (broadcast), unmapped → 0, dense
@@ -194,7 +184,8 @@ object Domains {
     * exposure of the visit). We keep the 1:1 intent: one cost row per
     * surviving exposure row, using the survivor's cost columns. Cost rows
     * carry no cost_id here — [[cost]] assigns one dense sequence across
-    * all three domains, mirroring the reference's shared staging.cost_seq. */
+    * all three domains, mirroring the reference's shared staging.cost_seq
+    * — and keep `person_id` for its closed-form bucket. */
   def drugExposureAndCost(typedMedications: DataFrame, personMap: DataFrame,
                           visitMap: DataFrame,
                           personCount: Option[Long] = None)
@@ -225,6 +216,7 @@ object Domains {
         col("payer_coverage").isNotNull)
       .select(
         col("drug_exposure_id").as("cost_event_id"),
+        col("person_id"),
         lit("Drug").as("cost_domain_id"),
         col("total_cost").as("total_charge"),
         col("base_cost").as("total_cost"),
@@ -270,6 +262,7 @@ object Domains {
       .filter(col("base_cost").isNotNull)
       .select(
         col("procedure_occurrence_id").as("cost_event_id"),
+        col("person_id"),
         lit("Procedure").as("cost_domain_id"),
         col("base_cost").as("total_charge"),
         col("base_cost").as("total_cost"),
@@ -513,16 +506,34 @@ object Domains {
     * type/currency concepts (5031 "Calculated", 44818668 USD,
     * transform_cost.sql:36-37) applied once here. unionByName with
     * explicit decimal widening: the subtraction branches carry
-    * DecimalType(11,2) while Procedure's NULLs are (10,2). */
+    * DecimalType(11,2) while Procedure's NULLs are (10,2).
+    *
+    * With the person and visit counts, the id pass takes a closed-form
+    * bucket that is monotone along (domain, event id), so [[DenseId]]
+    * skips its bounds-sampling pass: Drug rows (first by name) take
+    * [[personBucket]] — drug ids are assigned in person-leading order —
+    * Procedure rows P + the same, and Visit rows 2P + the dense visit id's
+    * bucket (visit ids are 1..nVisits). The drug and procedure rows must
+    * then carry `person_id`, which is not written. */
   def cost(visitRows: DataFrame, drugRows: DataFrame,
-           procedureRows: DataFrame): DataFrame = {
+           procedureRows: DataFrame, personCount: Option[Long] = None,
+           visitCount: Option[Long] = None): DataFrame = {
     val widened = Seq(visitRows, drugRows, procedureRows).map { df =>
       df.withColumn("paid_by_patient",
         col("paid_by_patient").cast(DecimalType(11, 2)))
     }
+    val bucket = for (np <- personCount; nv <- visitCount) yield {
+      val parts = bucketParts(visitRows)
+      val person = DenseId.denseLeadingIdBucket(col("person_id"), np, parts)
+      when(col("cost_domain_id") === "Drug", person)
+        .when(col("cost_domain_id") === "Procedure", person + parts)
+        .otherwise(DenseId.denseLeadingIdBucket(col("cost_event_id"), nv,
+          parts) + 2 * parts)
+    }
     DenseId.withDenseIdScalable(
-      widened.reduce(_ unionByName _),
-      Seq(col("cost_domain_id"), col("cost_event_id")), "cost_id")
+      widened.reduce(_.unionByName(_, allowMissingColumns = true)),
+      Seq(col("cost_domain_id"), col("cost_event_id")), "cost_id",
+      bucketBy = bucket)
       .select(
         col("cost_id"),
         col("cost_event_id"),

@@ -21,20 +21,27 @@ import org.apache.spark.sql.functions._
   * (etl_pipeline/etl_main.py:44-96). A step writes one typed table, id
   * map, gold table, era, Achilles table, `observation_period` or the
   * validation report, or prepares what several of them read: the
-  * vocabulary, the person count, the allergy spans, and the dense-id
-  * passes a domain shares with its cost rows. It starts as soon as the
-  * steps it reads have finished, so its driver-side work (header reads,
-  * DenseId count/bounds collects, planning, the write and its read-back)
-  * overlaps the jobs of the other steps on the shared SparkContext:
+  * vocabulary code map, the person and visit counts, the allergy spans,
+  * and the dense-id passes a domain shares with its cost rows. It starts
+  * as soon as the steps it reads have finished, so its driver-side work
+  * (header reads, DenseId count/bounds collects, planning, the write and
+  * its read-back) overlaps the jobs of the other steps on the shared
+  * SparkContext. Each step's jobs carry the description
+  * `etl step: <name>`, so a listener can attribute them:
   *
-  *   1. the six typed tables (`_typed/`), read from the CSVs;
+  *   1. the six typed tables (`_typed/`), read from the CSVs, and the
+  *      vocabulary step, which resolves the three mapping stages once for
+  *      all five mapped domains into `_typed/concept_code_map`
+  *      ([[Vocab.codeMap]]);
   *   1. `person_map` ← patients and `visit_map` ← encounters, then the
-  *      person count;
+  *      person count and the visit count (`visit_count`);
   *   1. person, visit_occurrence, death, the five vocabulary-mapped
   *      domains (condition_occurrence, drug_exposure,
-  *      procedure_occurrence, measurement, observation), cost and the
-  *      optional sources (immunizations, patient_expenses, devices,
-  *      allergies, the vocabulary's ancestor and synonym tables);
+  *      procedure_occurrence, measurement, observation; one broadcast
+  *      join on the code map each), cost (its id pass bucketed in closed
+  *      form from both counts) and the optional sources (immunizations,
+  *      patient_expenses, devices, allergies, the vocabulary's ancestor
+  *      and synonym tables);
   *   1. drug_era ← drug_exposure and condition_era ← condition_occurrence;
   *   1. achilles_results and observation_period;
   *   1. achilles_results_dist ← observation_period, and validation.
@@ -102,11 +109,12 @@ object EtlRunner {
     import steps.{ec, step}
     // save returns the written table read back, so every consumer scans
     // the parquet rather than recomputing the step's lineage
-    def save[I](n: String, input: Future[I])(body: I => DataFrame)
-        : Future[DataFrame] = step(n, input) { i =>
-      body(i).write.mode("overwrite").parquet(s"$outDir/$n")
+    def write(n: String, df: DataFrame): DataFrame = {
+      df.write.mode("overwrite").parquet(s"$outDir/$n")
       spark.read.parquet(s"$outDir/$n")
     }
+    def save[I](n: String, input: Future[I])(body: I => DataFrame)
+        : Future[DataFrame] = step(n, input)(i => write(n, body(i)))
     try {
       // bronze → typed (repair pass only where malformed rows can occur:
       // free-text description columns). Typed tables materialize ONCE as
@@ -137,11 +145,11 @@ object EtlRunner {
         Typing.observations(Ingest.readRepaired(spark, in("observations"))))
 
       // id maps (the only global coordination)
-      val personMap = save("person_map", tPat)(p => Domains.buildIdMap(spark,
-        None, p.filter(col("id").isNotNull), "id", "person_id")
+      val personMap = save("person_map", tPat)(p => Domains.buildIdMap(None,
+        p.filter(col("id").isNotNull), "id", "person_id")
         .withColumnRenamed("id", "source_patient_id"))
-      val visitMap = save("visit_map", tEnc)(e => Domains.buildIdMap(spark,
-        None, e, "id", "visit_occurrence_id")
+      val visitMap = save("visit_map", tEnc)(e => Domains.buildIdMap(None,
+        e, "id", "visit_occurrence_id")
         .withColumnRenamed("id", "source_visit_id"))
       // nPersons feeds the closed-form person-leading dense-id bucket
       // (Domains.personBucket): person ids are dense 1..n, so every
@@ -151,6 +159,8 @@ object EtlRunner {
       val nPersons = step("person_count", personMap)(p => Some(p.count()))
       val ids = for (p <- personMap; v <- visitMap; n <- nPersons)
         yield IdMaps(p, v, n)
+      // visit ids are dense 1..n as well: cost's closed-form bucket
+      val nVisits = step("visit_count", visitMap)(v => Some(v.count()))
 
       // gold domains
       val person = save("person", tPat.zip(ids)) { case (p, m) =>
@@ -158,11 +168,15 @@ object EtlRunner {
       val visit = save("visit_occurrence", tEnc.zip(ids)) { case (e, m) =>
         Domains.visitOccurrence(e, m.person, m.visit) }
 
-      // vocabulary concept mapping (stage-3 chain) when a vocab dir is given
+      // vocabulary concept mapping when a vocab dir is given: the 3-stage
+      // chain resolved once for all five domains into one code map,
+      // written with the typed tables (infrastructure, not a gold table)
       val vocab = step("vocabulary", Future.unit)(_ => vocabDir.map { vd =>
-        (Vocab.loadConcept(spark, s"$vd/CONCEPT.csv"),
+        new Vocab.CodeMap(write("_typed/concept_code_map", Vocab.codeMap(
+          Vocab.loadConcept(spark, s"$vd/CONCEPT.csv"),
           Vocab.loadConceptRelationship(spark,
-            s"$vd/CONCEPT_RELATIONSHIP.csv"))
+            s"$vd/CONCEPT_RELATIONSHIP.csv"),
+          VocabularyOf.toSeq.map(_.swap))))
       })
       // optional hierarchy/synonym tables ship with full OMOP vocab drops
       // (enhanced_vocabulary_loader.py:492,564); persisted for rollup queries
@@ -174,14 +188,11 @@ object EtlRunner {
           save("concept_synonym", Future.unit)(_ =>
             Vocab.loadConceptSynonym(spark, s"$vd/CONCEPT_SYNONYM.csv"))
       }
-      def mapConcepts(vocab: Option[(DataFrame, DataFrame)], df: DataFrame,
+      def mapConcepts(vocab: Option[Vocab.CodeMap], df: DataFrame,
                       srcValue: String, srcConcept: String,
-                      tgtConcept: String, vocabulary: String,
-                      domain: String): DataFrame =
-        vocab.fold(df) { case (c, r) =>
-          Vocab.mapDomain(df.withColumn(srcConcept, lit(0L)), c, r,
-            srcValue, srcConcept, tgtConcept, vocabulary, domain)
-        }
+                      tgtConcept: String, domain: String): DataFrame =
+        vocab.fold(df)(Vocab.mapDomain(df, _, srcValue, srcConcept,
+          tgtConcept, VocabularyOf(domain), domain))
 
       // concept mapping covers the reference's full five-domain sweep
       // (enhanced_synthea_to_omop.py:2300-2400: condition/SNOMED,
@@ -193,7 +204,7 @@ object EtlRunner {
         case ((c, m), v) => mapConcepts(v,
           Domains.conditionOccurrence(c, m.person, m.visit, m.nPersons),
           "condition_source_value", "condition_source_concept_id",
-          "condition_concept_id", "SNOMED", "Condition")
+          "condition_concept_id", "Condition")
       }
       // the id passes shared by each domain and its cost rows
       val drugIds = step("drug_exposure ids", tMed.zip(ids)) { case (t, m) =>
@@ -201,7 +212,7 @@ object EtlRunner {
       val drug = save("drug_exposure", drugIds.zip(vocab)) {
         case ((d, _), v) => mapConcepts(v, d,
           "drug_source_value", "drug_source_concept_id",
-          "drug_concept_id", "RxNorm", "Drug")
+          "drug_concept_id", "Drug")
       }
       val procIds = step("procedure_occurrence ids", tPro.zip(ids)) {
         case (t, m) =>
@@ -210,7 +221,7 @@ object EtlRunner {
       val proc = save("procedure_occurrence", procIds.zip(vocab)) {
         case ((p, _), v) => mapConcepts(v, p,
           "procedure_source_value", "procedure_source_concept_id",
-          "procedure_concept_id", "SNOMED", "Procedure")
+          "procedure_concept_id", "Procedure")
       }
       // OHDSI-standard era derivations (30-day persistence window) —
       // AFTER mapping, so eras merge per standard concept, not per source 0
@@ -225,20 +236,21 @@ object EtlRunner {
       val measT = save("measurement", measObsIds.zip(vocab)) {
         case ((meas, _), v) => mapConcepts(v, meas,
           "measurement_source_value", "measurement_source_concept_id",
-          "measurement_concept_id", "LOINC", "Measurement")
+          "measurement_concept_id", "Measurement")
       }
       val obsT = save("observation", measObsIds.zip(vocab)) {
         case ((_, obs), v) => mapConcepts(v, obs,
           "observation_source_value", "observation_source_concept_id",
-          "observation_concept_id", "LOINC", "Observation")
+          "observation_concept_id", "Observation")
       }
       save("death", tPat.zip(ids)) { case (p, m) =>
         Domains.death(p, m.person) }
       // cost: all three reference strata (Visit/Drug/Procedure,
       // transform_cost.sql's three INSERT blocks) under one dense cost_id
-      save("cost", tEnc.zip(ids).zip(drugIds).zip(procIds)) {
-        case (((e, m), (_, drugCost)), (_, procCost)) =>
-          Domains.cost(Domains.visitCost(e, m.visit), drugCost, procCost)
+      save("cost", tEnc.zip(ids).zip(nVisits).zip(drugIds).zip(procIds)) {
+        case ((((e, m), nv), (_, drugCost)), (_, procCost)) =>
+          Domains.cost(Domains.visitCost(e, m.visit), drugCost, procCost,
+            m.nPersons, nv)
       }
       // optional source: immunizations → drug_exposure rows
       val immDrug =
@@ -347,10 +359,16 @@ object EtlRunner {
   private final case class IdMaps(person: DataFrame, visit: DataFrame,
                                   nPersons: Option[Long])
 
+  /** The vocabulary each vocabulary-mapped domain's source codes are in. */
+  private val VocabularyOf = Map("Condition" -> "SNOMED", "Drug" -> "RxNorm",
+    "Procedure" -> "SNOMED", "Measurement" -> "LOINC",
+    "Observation" -> "LOINC")
+
   /** Threads of one run's step pool: wider than the widest level of the
-    * DAG (9 steps at the start, 11 once the id maps exist), so a ready
-    * step never waits for a thread. Steps never block on one another, so
-    * the width bounds the overlap but cannot deadlock the run. */
+    * DAG (9 steps at the start, about a dozen once the id maps exist), so
+    * a ready step never waits for a thread. Steps never block on one
+    * another, so the width bounds the overlap but cannot deadlock the
+    * run. */
   private val StepThreads = 16
 
   /** The step scheduler of one run. A step is started when its input
@@ -384,6 +402,7 @@ object EtlRunner {
       * start and end offsets from the start of the run. */
     def step[I, A](name: String, input: Future[I])(body: I => A): Future[A] = {
       val f = input.map { i =>
+        spark.sparkContext.setJobDescription(s"etl step: $name")
         val s = System.nanoTime()
         val out =
           try body(i)

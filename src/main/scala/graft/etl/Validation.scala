@@ -1,52 +1,45 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Post-ETL validation suite (SURVEY.md §5) — the reference's real
-  * correctness net (etl_pipeline/etl_validation.py), re-expressed as
-  * DataFrame checks that return one (check_name, failed_count) row each,
-  * stacked U2-style. A clean run returns all zeros.
+  * correctness net (etl_pipeline/etl_validation.py), re-expressed as one
+  * set-based statement that returns one (check_name, failed_count) row per
+  * check. A clean run returns all zeros.
   *
-  * The report is ONE lazy union of one-row aggregates, so the caller's
-  * single action submits every check as independent stages of one job —
-  * on a 32-core box (or a 1000-executor cluster) the per-table scans run
-  * concurrently instead of as ~15 sequential driver-blocking counts, and
-  * the widest scan (62.6M-row measurement at the 101.66M-row scale run)
-  * overlaps the rest instead of serializing after them.
+  * The report is ONE aggregate: every failing record contributes a
+  * (check_name, 1) row, and a (check_name, 0) row per check keeps a check
+  * in the report when its table is empty; one groupBy(check_name) sums
+  * them. The failing rows come from per-record predicates, one left anti
+  * join per parent key (all person-keyed children in one union against
+  * person, the conditions against visit) and the duplicate-key count, so
+  * the whole suite scans each table once or twice in a handful of jobs
+  * rather than one aggregate per check. A predicate on a NULL value is
+  * not a failure, and a NULL foreign key is not an orphan.
   */
 object Validation {
 
-  case class Check(name: String, failedCount: Long)
+  /** (check_name, 1) for each row of `df` that `failed` holds for. */
+  private def failing(name: String, df: DataFrame, failed: Column)
+      : DataFrame =
+    df.filter(failed).select(lit(name).as("check_name"),
+      lit(1L).as("failed_count"))
 
-  private def asCheck(name: String, oneRowCount: DataFrame): DataFrame =
-    oneRowCount.select(lit(name).as("check_name"),
-      col("failed_count").cast("long").as("failed_count"))
-
-  private def countDf(df: DataFrame): DataFrame =
-    df.agg(count(lit(1)).as("failed_count"))
-
-  /** Orphaned FKs: child rows whose parent key is missing
-    * (etl_validation.py:236-246). One-row count frame; the anti join's
-    * build side is the parent's pruned key column, so Catalyst/AQE picks
-    * broadcast vs shuffle from its measured size — correct at both the
-    * 2.3M-person test shape and a cluster-scale parent. */
-  def orphans(child: DataFrame, childKey: String,
-              parent: DataFrame, parentKey: String): DataFrame =
-    countDf(child.select(col(childKey)).filter(col(childKey).isNotNull)
-      .join(parent.select(col(parentKey).as(childKey)), Seq(childKey),
-        "left_anti"))
-
-  /** Date sanity: end before start / future dates
-    * (etl_validation.py:313-330). */
-  def endBeforeStart(df: DataFrame, startCol: String,
-                     endCol: String): DataFrame =
-    countDf(df.filter(col(endCol) < col(startCol)))
-
-  /** Domain check: gender concept ∈ {8507, 8532, 0}
-    * (etl_validation.py:369-401). */
-  def invalidGender(person: DataFrame): DataFrame =
-    countDf(person.filter(!col("gender_concept_id").isin(8507L, 8532L, 0L)))
+  /** Orphaned FKs: (check_name, 1) per child row whose non-null key has no
+    * parent (etl_validation.py:236-246). `children` are (check_name, key)
+    * rows of any number of child tables; the anti join's build side is
+    * the parent's pruned key column, so Catalyst/AQE picks broadcast vs
+    * shuffle from its measured size. */
+  private def orphans(children: Seq[(String, DataFrame, String)],
+                      parent: DataFrame, key: String): DataFrame =
+    children.map { case (name, df, childKey) =>
+      df.select(lit(name).as("check_name"), col(childKey).as(key))
+        .filter(col(key).isNotNull)
+    }.reduce(_ unionByName _)
+      .join(parent.select(col(key)), Seq(key), "left_anti")
+      .select(col("check_name"), lit(1L).as("failed_count"))
 
   /** Mapping-rate stats: unmapped (=0) concept counts + pct per table
     * (A4; enhanced_synthea_to_omop.py:2418-2453). */
@@ -58,66 +51,57 @@ object Validation {
         round(lit(100.0) * col("unmapped") /
           nullif(col("total"), lit(0)), 2).as("unmapped_pct"))
 
-  /** Era-derivation invariants: an era must be well-ordered, belong to a
-    * known person, and contain at least one contributing row. The two
-    * per-era predicates come from ONE aggregate row over the era table,
-    * exploded into the two report rows — the plan itself guarantees a
-    * single scan (no reliance on exchange reuse firing) — plus the
-    * orphan anti join. */
-  def eraChecks(prefix: String, era: DataFrame, person: DataFrame,
-                startCol: String, endCol: String,
-                countCol: String): Seq[DataFrame] = {
-    def cnt(p: Column) = sum(when(p, 1L).otherwise(0L))
-    val scanOnce = era.agg(
-      cnt(col(endCol) < col(startCol)).as("end_before_start"),
-      cnt(col(countCol) < 1).as("empty"))
-    val bothFromOneScan = scanOnce.select(explode(array(
-      struct(lit(s"${prefix}_end_before_start").as("check_name"),
-        col("end_before_start").cast("long").as("failed_count")),
-      struct(lit(s"${prefix}_empty").as("check_name"),
-        col("empty").cast("long").as("failed_count")))).as("c"))
-      .select(col("c.check_name").as("check_name"),
-        col("c.failed_count").as("failed_count"))
-    Seq(
-      bothFromOneScan,
-      asCheck(s"${prefix}_orphan_person",
-        orphans(era, "person_id", person, "person_id")))
-  }
-
-  /** Full report over a built OMOP set — a single lazy plan; the caller's
-    * one action (collect or write) runs every check concurrently. */
+  /** Full report over a built OMOP set — one lazy aggregate; the caller's
+    * one action (collect or write) runs every check. Checks: orphaned
+    * person/visit keys, end before start (etl_validation.py:313-330), the
+    * gender domain {8507, 8532, 0} (:369-401), duplicate person ids, and
+    * per era table the era invariants: well-ordered, a known person, at
+    * least one contributing row. */
   def report(spark: SparkSession, person: DataFrame, visit: DataFrame,
              condition: DataFrame, measurement: DataFrame,
              observation: DataFrame,
              drugEra: Option[DataFrame] = None,
              conditionEra: Option[DataFrame] = None): DataFrame = {
-    val checks: Seq[DataFrame] =
-      drugEra.toSeq.flatMap(e => eraChecks("drug_era", e, person,
-        "drug_era_start_date", "drug_era_end_date",
-        "drug_exposure_count")) ++
-      conditionEra.toSeq.flatMap(e => eraChecks("condition_era", e, person,
-        "condition_era_start_date", "condition_era_end_date",
-        "condition_occurrence_count")) ++
+    // (prefix, era, start, end, count column) of each era table
+    val eras =
+      drugEra.map(("drug_era", _, "drug_era_start_date",
+        "drug_era_end_date", "drug_exposure_count")).toSeq ++
+      conditionEra.map(("condition_era", _, "condition_era_start_date",
+        "condition_era_end_date", "condition_occurrence_count"))
+    val personChildren =
+      eras.map { case (p, e, _, _, _) => (s"${p}_orphan_person", e,
+        "person_id") } ++
+      Seq(("visit_orphan_person", visit, "person_id"),
+        ("condition_orphan_person", condition, "person_id"),
+        ("measurement_orphan_person", measurement, "person_id"),
+        ("observation_orphan_person", observation, "person_id"))
+    val visitChildren =
+      Seq(("condition_orphan_visit", condition, "visit_occurrence_id"))
+    // (check, table, predicate of a failing row)
+    val perRecord: Seq[(String, DataFrame, Column)] =
+      eras.flatMap { case (p, e, start, end, n) => Seq(
+        (s"${p}_end_before_start", e, col(end) < col(start)),
+        (s"${p}_empty", e, col(n) < 1)) } ++
       Seq(
-        asCheck("visit_orphan_person",
-          orphans(visit, "person_id", person, "person_id")),
-        asCheck("condition_orphan_person",
-          orphans(condition, "person_id", person, "person_id")),
-        asCheck("condition_orphan_visit",
-          orphans(condition, "visit_occurrence_id", visit,
-            "visit_occurrence_id")),
-        asCheck("measurement_orphan_person",
-          orphans(measurement, "person_id", person, "person_id")),
-        asCheck("observation_orphan_person",
-          orphans(observation, "person_id", person, "person_id")),
-        asCheck("visit_end_before_start",
-          endBeforeStart(visit, "visit_start_date", "visit_end_date")),
-        asCheck("condition_end_before_start",
-          endBeforeStart(condition, "condition_start_date",
-            "condition_end_date")),
-        asCheck("invalid_gender_concept", invalidGender(person)),
-        asCheck("duplicate_person_ids", countDf(
-          person.groupBy("person_id").count().filter(col("count") > 1))))
-    checks.reduce(_ unionByName _)
+        ("visit_end_before_start", visit,
+          col("visit_end_date") < col("visit_start_date")),
+        ("condition_end_before_start", condition,
+          col("condition_end_date") < col("condition_start_date")),
+        ("invalid_gender_concept", person,
+          !col("gender_concept_id").isin(8507L, 8532L, 0L)),
+        ("duplicate_person_ids", person.groupBy("person_id").count(),
+          col("count") > 1))
+    val failed = perRecord.map { case (name, df, p) => failing(name, df, p) } ++
+      Seq(orphans(personChildren, person, "person_id"),
+        orphans(visitChildren, visit, "visit_occurrence_id"))
+    val checks = perRecord.map(_._1) ++
+      (personChildren ++ visitChildren).map(_._1)
+    val zeros = spark.createDataFrame(
+      java.util.Arrays.asList(checks.map(Row(_, 0L)): _*),
+      new StructType().add("check_name", "string", nullable = false)
+        .add("failed_count", "long", nullable = false))
+    (failed :+ zeros).reduce(_ unionByName _)
+      .groupBy(col("check_name"))
+      .agg(sum(col("failed_count")).as("failed_count"))
   }
 }

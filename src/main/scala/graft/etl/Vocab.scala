@@ -1,23 +1,29 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 import graft.ops.ConceptMap
 
 /** Vocabulary concept mapping (SURVEY.md §2.3 J7–J9), the reference's
   * 3-stage UPDATE chain (etl_pipeline/etl_concept_mapping.py:136-180)
-  * re-expressed functionally:
+  * re-expressed set-based:
   *
   *   1. source concept: concept_code = source_value, vocabulary match
   *   2. standard concept via 'Maps to' relationship traversal (J8)
   *   3. fallback: direct standard-concept code match for rows still 0
   *
-  * Each stage is a left join + coalesce threading a NEW DataFrame (no
-  * mutation; stage N sees stage N−1's effects, SURVEY §7.4 risk 7). The
-  * concept table (~500k rows, enhanced_vocabulary_loader.py:75) broadcasts
-  * at default thresholds; at bigger vocab scale Catalyst shifts to a
-  * shuffled hash join on the code column, which is the right plan.
+  * The three stages are resolved once per run, for every mapped
+  * (vocabulary, domain) pair together, into one code map ([[codeMap]]):
+  * code → (source concept, target concept). Each domain table then takes
+  * its concepts in one broadcast left join on the code ([[mapDomain]]),
+  * instead of re-reading the concept table and running three deduped
+  * lookups of its own. Nothing is mutated; the map is a pure function of
+  * the vocabulary tables. The map has at most one row per concept of the
+  * mapped vocabularies per domain, so at the reference's ~500k-row concept
+  * table (enhanced_vocabulary_loader.py:75) it broadcasts like the
+  * per-stage lookups it replaces.
   */
 object Vocab {
 
@@ -101,63 +107,107 @@ object Vocab {
         countDistinct(col("person_id")).as("person_count"))
   }
 
-  /** Apply the 3-stage mapping to one domain table.
+  /** The concept code map of one run (J7–J9), for the given (vocabulary,
+    * domain) pairs: one row per pair and source code, with the source
+    * concept (`source_concept_id`) and the standard concept
+    * (`target_concept_id`) the reference's 3-stage UPDATE chain gives it,
+    * from three min-aggregates:
     *
-    * @param table          domain rows with `sourceValueCol` and the two
-    *                       concept columns pre-initialized to 0
+    *   1. source concept = the lowest concept id with the code in the
+    *      vocabulary (a code carried by several concept rows, e.g. a
+    *      valid and a deprecated one, resolves the same way on every
+    *      rerun; `loadConcept` drops NULL ids, so none can win);
+    *   1. standard concept = the lowest standard concept in the domain
+    *      that the source concept `Maps to` (J8);
+    *   1. direct match = the lowest standard concept of the domain and
+    *      vocabulary with the code itself.
+    *
+    * The target is the standard concept when it is non-zero, else the
+    * direct match, else 0. Each pair also gets one no-match row (NULL
+    * `concept_code`) for a NULL or unknown code: source 0, target the
+    * `Maps to` standard concept of concept 0 in the domain, else 0. */
+  def codeMap(concept: DataFrame, rel: DataFrame,
+              pairs: Seq[(String, String)]): DataFrame = {
+    val pairRows = concept.sparkSession.createDataFrame(
+      java.util.Arrays.asList(pairs.map { case (v, d) => Row(v, d) }: _*),
+      new StructType().add("vocabulary_id", "string")
+        .add("domain_id", "string"))
+    val inVocab = concept.filter(
+      col("vocabulary_id").isin(pairs.map(_._1).distinct: _*))
+    val source = inVocab.filter(col("concept_code").isNotNull)
+      .groupBy(col("vocabulary_id"), col("concept_code"))
+      .agg(min(col("concept_id")).as("source_concept_id"))
+    val mapsTo = ConceptMap.mapsToStandard(rel, concept)
+      .groupBy(col("source_concept_id"), col("domain_id"))
+      .agg(min(col("standard_concept_id")).as("__std"))
+    val direct = inVocab.filter(col("standard_concept") === "S")
+      .groupBy(col("vocabulary_id"), col("domain_id"), col("concept_code"))
+      .agg(min(col("concept_id")).as("__direct"))
+    val hits = source
+      .join(pairRows, Seq("vocabulary_id"))
+      .join(mapsTo, Seq("source_concept_id", "domain_id"), "left")
+      .join(direct, Seq("vocabulary_id", "domain_id", "concept_code"), "left")
+      .select(col("vocabulary_id"), col("domain_id"), col("concept_code"),
+        col("source_concept_id"),
+        when(col("__std").isNotNull && col("__std") =!= 0L, col("__std"))
+          .otherwise(coalesce(col("__direct"), lit(0L)))
+          .as("target_concept_id"))
+    val misses = pairRows
+      .join(mapsTo.filter(col("source_concept_id") === 0L)
+        .drop("source_concept_id"), Seq("domain_id"), "left")
+      .select(col("vocabulary_id"), col("domain_id"),
+        lit(null).cast("string").as("concept_code"),
+        lit(0L).as("source_concept_id"),
+        coalesce(col("__std"), lit(0L)).as("target_concept_id"))
+    hits.unionByName(misses)
+  }
+
+  /** A [[codeMap]] ready for [[mapDomain]]: the code rows to join, and the
+    * no-match pair of each (vocabulary, domain), collected once. */
+  final class CodeMap(codes: DataFrame) {
+    val hits: DataFrame = codes.filter(col("concept_code").isNotNull)
+    val noMatch: Map[(String, String), (Long, Long)] =
+      codes.filter(col("concept_code").isNull)
+        .select("vocabulary_id", "domain_id", "source_concept_id",
+          "target_concept_id")
+        .collect().map(r => (r.getString(0), r.getString(1)) ->
+          ((r.getLong(2), r.getLong(3)))).toMap
+  }
+
+  /** Map one domain table's source codes through the code map: one
+    * broadcast left join on the code, and the pair's no-match concepts
+    * where the code has no row.
+    *
+    * @param table          domain rows with `sourceValueCol`
     * @param vocabularyId   e.g. "SNOMED", "RxNorm", "LOINC"
     * @param domainId       e.g. "Condition", "Drug", "Procedure"
+    * @return `[sourceValueCol, sourceConceptCol, the other columns of
+    *         table…]`, with `targetConceptCol` replaced in place (or
+    *         appended when `table` lacks it)
     */
-  def mapDomain(table: DataFrame, concept: DataFrame, rel: DataFrame,
+  def mapDomain(table: DataFrame, codes: CodeMap,
                 sourceValueCol: String, sourceConceptCol: String,
                 targetConceptCol: String, vocabularyId: String,
                 domainId: String): DataFrame = {
-    // stage 1: source concept by exact code in the vocabulary.
-    // Lookup dedup is firstRowPerGroup with a concept-id tiebreak, NOT
-    // dropDuplicates: a code carried by several concept rows (e.g. a
-    // valid and a deprecated concept sharing the code) would otherwise
-    // resolve to whichever row a partition delivered first — concept
-    // assignments flipping between reruns, against the pipeline's
-    // byte-stable contract. Same below for the Maps-to and direct-code
-    // tiers.
-    val byCode = concept
-      .filter(col("vocabulary_id") === vocabularyId)
-      .select(col("concept_code").as(sourceValueCol),
-        col("concept_id").as("__src_concept"))
-    val s1 = table
-      .join(broadcast(graft.ops.Dedup.firstRowPerGroup(byCode,
-          Seq(col(sourceValueCol)), Seq(col("__src_concept").asc))),
-        Seq(sourceValueCol), "left")
-      .withColumn(sourceConceptCol, coalesce(col("__src_concept"), lit(0L)))
-      .drop("__src_concept")
-
-    // stage 2: standard concept via Maps-to traversal from the source
-    // concept (J8)
-    val mapsTo = ConceptMap.mapsToStandard(rel, concept)
-      .filter(col("domain_id") === domainId)
-      .select(col("source_concept_id").as(sourceConceptCol),
-        col("standard_concept_id").as("__std_concept"))
-    val s2 = s1
-      .join(broadcast(graft.ops.Dedup.firstRowPerGroup(mapsTo,
-          Seq(col(sourceConceptCol)), Seq(col("__std_concept").asc))),
-        Seq(sourceConceptCol), "left")
-      .withColumn(targetConceptCol, coalesce(col("__std_concept"), lit(0L)))
-      .drop("__std_concept")
-
-    // stage 3: fallback direct standard-code match for still-unmapped rows
-    val standardByCode = concept
+    val (missSource, missTarget) = codes.noMatch.getOrElse(
+      (vocabularyId, domainId), throw new IllegalArgumentException(
+        s"the code map has no ($vocabularyId, $domainId) pair"))
+    val lookup = codes.hits
       .filter(col("vocabulary_id") === vocabularyId &&
-        col("standard_concept") === "S" && col("domain_id") === domainId)
+        col("domain_id") === domainId)
       .select(col("concept_code").as(sourceValueCol),
-        col("concept_id").as("__direct_concept"))
-    s2.join(broadcast(graft.ops.Dedup.firstRowPerGroup(standardByCode,
-          Seq(col(sourceValueCol)), Seq(col("__direct_concept").asc))),
-        Seq(sourceValueCol), "left")
-      .withColumn(targetConceptCol,
-        when(col(targetConceptCol) === 0,
-          coalesce(col("__direct_concept"), lit(0L)))
-          .otherwise(col(targetConceptCol)))
-      .drop("__direct_concept")
+        col("source_concept_id").as("__src"),
+        col("target_concept_id").as("__tgt"))
+    val target = coalesce(col("__tgt"), lit(missTarget)).as(targetConceptCol)
+    val rest = table.columns.toSeq
+      .filterNot(Set(sourceValueCol, sourceConceptCol))
+      .map(c => if (c == targetConceptCol) target else col(c))
+    table.join(broadcast(lookup), Seq(sourceValueCol), "left")
+      .select((col(sourceValueCol) +:
+        coalesce(col("__src"), lit(missSource)).as(sourceConceptCol) +:
+        rest) ++
+        (if (table.columns.contains(targetConceptCol)) Nil else Seq(target))
+        : _*)
   }
 
   /** Mapping-rate stats per the reference's post-mapping report

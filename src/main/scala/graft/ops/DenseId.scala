@@ -190,22 +190,24 @@ object DenseId {
     * not-yet-mapped keys of `incoming`, first-writer-wins, appended after
     * the current max id. Mirrors the reference's
     * `INSERT ... SELECT nextval(seq) ... WHERE NOT IN (SELECT source_id)`
-    * (enhanced_synthea_to_omop.py:770-777).
+    * (enhanced_synthea_to_omop.py:770-777). A first load (`existing` =
+    * None) numbers from 1 with no max-id job and no anti join.
     *
     * New-key ids go through the scalable deterministic-bounds path — a
     * bulk first load maps EVERY source id here, so the single-partition
     * global window would be the whole pipeline's bottleneck at scale. */
-  def extendIdMap(existing: DataFrame, incoming: DataFrame,
+  def extendIdMap(existing: Option[DataFrame], incoming: DataFrame,
                   sourceKeyCol: String, idCol: String): DataFrame = {
-    val maxId: Long = existing.agg(coalesce(max(col(idCol)), lit(0L)))
-      .head().getLong(0)
-    val fresh = Dedup.antiAppend(
-      incoming.select(col(sourceKeyCol)).distinct(), existing,
-      Seq(sourceKeyCol))
+    val keys = incoming.select(col(sourceKeyCol)).distinct()
+    val (maxId, fresh) = existing.fold((0L, keys)) { ex =>
+      (ex.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0),
+        Dedup.antiAppend(keys, ex, Seq(sourceKeyCol)))
+    }
     val newRows = withDenseIdScalable(
       fresh, Seq(col(sourceKeyCol)), idCol, maxId)
       .select(col(sourceKeyCol), col(idCol).cast(LongType))
-    existing.select(col(sourceKeyCol), col(idCol).cast(LongType))
-      .unionByName(newRows)
+    existing.fold(newRows)(
+      _.select(col(sourceKeyCol), col(idCol).cast(LongType))
+        .unionByName(newRows))
   }
 }

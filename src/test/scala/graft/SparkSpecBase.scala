@@ -21,4 +21,25 @@ trait SparkSpecBase extends AnyFunSuite with BeforeAndAfterAll {
     try body
     finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
   }
+
+  /** `got` equals `want`: the same column names and types in the same
+    * order, and the same rows as a multiset (exceptAll both ways), with
+    * doubles compared by their bits. */
+  def assertSameRows(got: org.apache.spark.sql.DataFrame,
+                     want: org.apache.spark.sql.DataFrame): Unit = {
+    def cols(df: org.apache.spark.sql.DataFrame) =
+      df.schema.fields.toSeq.map(f => f.name -> f.dataType)
+    assert(cols(got) == cols(want))
+    def canon(x: Any): Any = x match {
+      case d: Double => ("double bits", java.lang.Double.doubleToLongBits(d))
+      case r: org.apache.spark.sql.Row => r.toSeq.map(canon)
+      case other => other
+    }
+    def bag(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(canon).groupBy(identity).view
+        .mapValues(_.size).toMap
+    val (g, w) = (bag(got), bag(want))
+    assert(g == w, s"\nonly got: ${g.toSet -- w.toSet}" +
+      s"\nonly want: ${w.toSet -- g.toSet}")
+  }
 }

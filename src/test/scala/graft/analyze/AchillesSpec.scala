@@ -77,7 +77,8 @@ class AchillesSpec extends SparkSpecBase {
     assert(byAnalysis(900).map(r => r.getString(1) -> r.getLong(6)).toMap
       == Map("10" -> 2, "20" -> 1))
     assert(byAnalysis(1000).head.getLong(6) == 1)
-    val dist = Achilles.a906DrugEraLength(drugEra).head()
+    val dist = Achilles.runDist(visit, Some(drugEra))
+      .filter(col("analysis_id") === 906).head()
     assert(dist.getAs[Long]("count_value") == 3)
     assert(dist.getAs[Double]("max_value") == 19.0)
   }
@@ -146,17 +147,132 @@ class AchillesSpec extends SparkSpecBase {
     val op = Seq((1L, 1L, "2020-01-01"), (2L, 2L, "2020-06-01"))
       .toDF("observation_period_id", "person_id", "s")
       .select(col("*"),
-        col("s").cast("date").as("observation_period_start_date"))
-    val res = Achilles.a101AgeAtFirstObs(person, op)
-      .collect().map(r => r.getString(1) -> r.getLong(6)).toMap
-    assert(res == Map("40" -> 2)) // both obs-persons born 1980, first obs 2020
+        col("s").cast("date").as("observation_period_start_date"),
+        col("s").cast("date").as("observation_period_end_date"))
+    val byA = Achilles.runDist(visit, person = Some(person),
+      observationPeriod = Some(op)).collect().groupBy(_.getInt(0))
+    // both obs-persons born 1980, first obs 2020: age 40, one per gender
+    val a103 = byA(103).head
+    assert((a103.getAs[Long]("count_value"), a103.getAs[Double]("min_value"),
+      a103.getAs[Double]("max_value")) == ((2L, 40.0, 40.0)))
+    assert(byA(104).map(r => r.getString(1) ->
+      (r.getAs[Long]("count_value"), r.getAs[Double]("median_value"))).toMap
+      == Map("8507" -> ((1L, 40.0)), "8532" -> ((1L, 40.0))))
   }
 
   test("visit-length distribution computes exact percentiles") {
-    val d = Achilles.a211VisitLength(visit).head()
+    val d = Achilles.runDist(visit).head()
     assert(d.getAs[Long]("count_value") == 2)
     assert(d.getAs[Double]("min_value") == 0.0)
     assert(d.getAs[Double]("max_value") == 4.0)
     assert(d.getAs[Double]("median_value") == 2.0)
+  }
+
+  // ---- the single aggregates equal the per-analysis reference ----
+
+  private def dates(df: org.apache.spark.sql.DataFrame,
+                    cols: (String, String)*) =
+    cols.foldLeft(df) { case (d, (from, to)) =>
+      d.withColumn(to, col(from).cast("date")).drop(from) }
+
+  /** Edge rows: NULL concepts, NULL person ids, NULL end dates (a NULL
+    * `len`), a NULL year of birth, duplicate (person, concept) pairs. */
+  private lazy val edgePerson = Seq[(Option[Long], Option[Long], Option[Int],
+    Option[Long])](
+    (Some(1L), Some(8507L), Some(1980), Some(8527L)),
+    (Some(2L), None, Some(1980), None),
+    (Some(3L), Some(8507L), None, Some(8527L)),
+    (Some(4L), Some(8532L), Some(1990), Some(8516L)),
+    (None, Some(8532L), Some(1990), Some(8516L))
+  ).toDF("person_id", "gender_concept_id", "year_of_birth", "race_concept_id")
+
+  private lazy val edgeVisit = dates(Seq[(Long, Option[Long], Option[Long],
+    String, Option[String])](
+    (1L, Some(1L), Some(9201L), "2020-01-01", Some("2020-01-05")),
+    (2L, Some(1L), Some(9201L), "2020-02-01", None),
+    (3L, None, None, "2020-03-01", Some("2020-03-02")),
+    (4L, None, None, "2020-03-01", Some("2020-03-09")),
+    (5L, Some(2L), None, "2020-04-01", Some("2020-04-01")),
+    (6L, Some(4L), Some(9202L), "2021-04-01", Some("2021-05-01"))
+  ).toDF("visit_occurrence_id", "person_id", "visit_concept_id", "s", "e"),
+    "s" -> "visit_start_date", "e" -> "visit_end_date")
+
+  private def edgeDomain(idCol: String, conceptCol: String) =
+    Seq[(Long, Option[Long], Option[Long])](
+      (1L, Some(1L), Some(10L)), (2L, Some(1L), Some(10L)),
+      (3L, None, Some(10L)), (4L, None, Some(10L)),
+      (5L, Some(2L), None), (6L, Some(2L), None), (7L, None, None),
+      (8L, Some(3L), Some(20L))
+    ).toDF(idCol, "person_id", conceptCol)
+
+  private lazy val edgeDrugEra = dates(Seq[(Long, Option[Long], Option[Long],
+    String, Option[String])](
+    (1L, Some(1L), Some(10L), "2020-01-01", Some("2020-01-20")),
+    (2L, Some(1L), None, "2020-06-01", None),
+    (3L, None, Some(20L), "2020-01-01", Some("2020-01-02"))
+  ).toDF("drug_era_id", "person_id", "drug_concept_id", "s", "e"),
+    "s" -> "drug_era_start_date", "e" -> "drug_era_end_date")
+
+  private lazy val edgeObsPeriod = dates(Seq[(Long, Option[Long], String,
+    Option[String])](
+    (1L, Some(1L), "2020-01-01", Some("2020-01-11")),
+    (2L, Some(1L), "2020-01-01", Some("2020-01-05")),
+    (3L, Some(2L), "2019-06-01", None),
+    (4L, Some(3L), "2021-03-01", Some("2021-03-21")),
+    (5L, Some(4L), "2001-03-01", Some("2001-03-02")),
+    (6L, None, "2021-03-01", Some("2021-03-21"))
+  ).toDF("observation_period_id", "person_id", "s", "e"),
+    "s" -> "observation_period_start_date",
+    "e" -> "observation_period_end_date")
+
+  test("run equals the per-analysis reference on edge rows") {
+    val cond = edgeDomain("condition_occurrence_id", "condition_concept_id")
+    val domains = Seq(
+      edgeDomain("procedure_occurrence_id", "procedure_concept_id"),
+      edgeDomain("drug_exposure_id", "drug_concept_id"),
+      edgeDomain("observation_id", "observation_concept_id"),
+      edgeDomain("measurement_id", "measurement_concept_id"))
+    val condEra = Seq[(Long, Option[Long], Option[Long])](
+      (1L, Some(1L), Some(100L)), (2L, None, None), (3L, Some(2L), None))
+      .toDF("condition_era_id", "person_id", "condition_concept_id")
+    assertSameRows(Achilles.run(edgePerson, edgeVisit, cond),
+      AchillesReference.run(edgePerson, edgeVisit, cond))
+    val Seq(pr, d, o, m) = domains
+    assertSameRows(
+      Achilles.run(edgePerson, edgeVisit, cond, Some(edgeDrugEra),
+        Some(condEra), Some(pr), Some(d), Some(o), Some(m)),
+      AchillesReference.run(edgePerson, edgeVisit, cond, Some(edgeDrugEra),
+        Some(condEra), Some(pr), Some(d), Some(o), Some(m)))
+    // empty inputs: no rows, as the per-analysis groupBys give
+    val none = lit(false)
+    assertSameRows(
+      Achilles.run(edgePerson.filter(none), edgeVisit.filter(none),
+        cond.filter(none), Some(edgeDrugEra.filter(none))),
+      AchillesReference.run(edgePerson.filter(none), edgeVisit.filter(none),
+        cond.filter(none), Some(edgeDrugEra.filter(none))))
+  }
+
+  test("runDist equals the per-analysis reference, empty inputs included") {
+    def both(visit: org.apache.spark.sql.DataFrame,
+             drugEra: Option[org.apache.spark.sql.DataFrame],
+             person: Option[org.apache.spark.sql.DataFrame],
+             op: Option[org.apache.spark.sql.DataFrame]): Unit =
+      assertSameRows(Achilles.runDist(visit, drugEra, person, op),
+        AchillesReference.runDist(visit, drugEra, person, op))
+    both(edgeVisit, None, None, None)
+    both(edgeVisit, Some(edgeDrugEra), Some(edgePerson), Some(edgeObsPeriod))
+    both(edgeVisit, Some(edgeDrugEra), None, Some(edgeObsPeriod))
+    // an empty drug era and observation period still give their
+    // unstratified rows (count 0, NULL statistics)
+    val none = lit(false)
+    both(edgeVisit, Some(edgeDrugEra.filter(none)), Some(edgePerson),
+      Some(edgeObsPeriod.filter(none)))
+    both(edgeVisit.filter(none), Some(edgeDrugEra.filter(none)),
+      Some(edgePerson.filter(none)), Some(edgeObsPeriod.filter(none)))
+    val empty = Achilles.runDist(edgeVisit.filter(none),
+      Some(edgeDrugEra.filter(none)), Some(edgePerson),
+      Some(edgeObsPeriod.filter(none))).collect()
+    assert(empty.map(_.getInt(0)).sorted.toSeq == Seq(103, 105, 211, 906))
+    assert(empty.forall(r => r.getLong(2) == 0L && r.isNullAt(3)))
   }
 }

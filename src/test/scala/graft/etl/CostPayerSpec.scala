@@ -62,4 +62,33 @@ class CostPayerSpec extends SparkSpecBase {
     assert(ppp(1).getAs[java.sql.Date]("payer_plan_period_end_date")
       .toString == "2021-02-27")
   }
+
+  test("cost: the closed-form bucket gives the sampled path's ids") {
+    // events in person-leading id order, as the domain id passes assign
+    // them: person 1 has drug, procedure and visit cost rows; ids and
+    // persons spread over several of the 3 x 4 buckets
+    def rows(domain: String, events: Seq[(Long, Long)]) =
+      events.toDF("cost_event_id", "person_id")
+        .select(col("cost_event_id"), col("person_id"),
+          lit(domain).as("cost_domain_id"),
+          lit("10.00").cast(DecimalType(10, 2)).as("total_charge"),
+          (col("cost_event_id") / 100).cast(DecimalType(10, 2))
+            .as("total_cost"),
+          lit(null).cast(DecimalType(10, 2)).as("total_paid"),
+          lit("1.50").cast(DecimalType(10, 2)).as("paid_by_payer"),
+          lit("2.25").cast(DecimalType(11, 2)).as("paid_by_patient"))
+    val nPersons = 9L
+    val drug = rows("Drug", Seq(1L -> 1L, 2L -> 1L, 3L -> 2L, 5L -> 4L,
+      8L -> 7L, 9L -> 9L, 10L -> 9L))
+    val proc = rows("Procedure", Seq(1L -> 1L, 4L -> 3L, 6L -> 8L))
+    val nVisits = 12L
+    val visit = rows("Visit", Seq(1L -> 1L, 2L -> 1L, 5L -> 3L, 11L -> 8L,
+      12L -> 9L)).drop("person_id")
+    val closed = Domains.cost(visit, drug, proc, Some(nPersons),
+      Some(nVisits))
+    assert(!closed.columns.contains("person_id"))
+    assertSameRows(closed, Domains.cost(visit, drug, proc))
+    assert(closed.select("cost_id").as[Long].collect().sorted.toSeq
+      == (1L to 15L))
+  }
 }

@@ -60,10 +60,10 @@ class EtlPipelineSpec extends SparkSpecBase {
     Typing.patients(Ingest.readAllString(spark, s"$dir/patients.csv"))
   private lazy val typedEncounters =
     Typing.encounters(Ingest.readAllString(spark, s"$dir/encounters.csv"))
-  private lazy val personMap = Domains.buildIdMap(spark, None,
+  private lazy val personMap = Domains.buildIdMap(None,
     typedPatients.filter(col("id").isNotNull), "id", "person_id")
     .withColumnRenamed("id", "source_patient_id")
-  private lazy val visitMap = Domains.buildIdMap(spark, None,
+  private lazy val visitMap = Domains.buildIdMap(None,
     typedEncounters, "id", "visit_occurrence_id")
     .withColumnRenamed("id", "source_visit_id")
 

@@ -208,6 +208,29 @@ class EtlRunnerSpec extends SparkSpecBase {
     }
   }
 
+  test("every job of a run carries its step's description") {
+    val (in, _, vocab) = dirs
+    val out = Files.createTempDirectory("runner_out_jobs").toString
+    val sc = spark.sparkContext
+    val seen = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        seen.add(String.valueOf(Option(e.properties)
+          .map(_.getProperty("spark.job.description")).orNull))
+    }
+    org.apache.spark.ListenerBusDrain(sc)
+    sc.addSparkListener(listener)
+    try {
+      EtlRunner.run(spark, in, out, Some(vocab))
+      org.apache.spark.ListenerBusDrain(sc)
+    } finally sc.removeSparkListener(listener)
+    val descriptions = seen.asScala.toSet
+    assert(descriptions.forall(_.startsWith("etl step: ")), descriptions)
+    assert(Set("etl step: vocabulary", "etl step: cost",
+      "etl step: validation").subsetOf(descriptions), descriptions)
+  }
+
   test("a failing step cancels the run's jobs and stops its threads") {
     val (_, _, vocab) = dirs
     val in = Files.createTempDirectory("runner_fail_in").toString

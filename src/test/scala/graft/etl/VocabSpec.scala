@@ -45,6 +45,19 @@ class VocabSpec extends SparkSpecBase {
     d
   }
 
+  /** The live path for one (vocabulary, domain) pair: its code map, then
+    * the join. */
+  private def mapDomain(table: org.apache.spark.sql.DataFrame,
+                        concept: org.apache.spark.sql.DataFrame,
+                        rel: org.apache.spark.sql.DataFrame,
+                        sourceValueCol: String, sourceConceptCol: String,
+                        targetConceptCol: String, vocabularyId: String,
+                        domainId: String) =
+    Vocab.mapDomain(table, new Vocab.CodeMap(
+        Vocab.codeMap(concept, rel, Seq((vocabularyId, domainId)))),
+      sourceValueCol, sourceConceptCol, targetConceptCol, vocabularyId,
+      domainId)
+
   test("3-stage mapping: Maps-to, fallback-standard, and unmapped → 0") {
     val concept = Vocab.loadConcept(spark, s"$vocabDir/CONCEPT.csv")
     val rel = Vocab.loadConceptRelationship(spark,
@@ -57,7 +70,7 @@ class VocabSpec extends SparkSpecBase {
       .withColumn("condition_source_concept_id", lit(0L))
       .withColumn("condition_concept_id", lit(0L))
 
-    val mapped = Vocab.mapDomain(table, concept, rel,
+    val mapped = mapDomain(table, concept, rel,
       "condition_source_value", "condition_source_concept_id",
       "condition_concept_id", "SNOMED", "Condition")
       .collect()
@@ -91,7 +104,7 @@ class VocabSpec extends SparkSpecBase {
       .withColumn("condition_source_concept_id", lit(0L))
       .withColumn("condition_concept_id", lit(0L))
     for (parts <- Seq(1, 5)) {
-      val mapped = Vocab.mapDomain(table.repartition(parts), concept, rel,
+      val mapped = mapDomain(table.repartition(parts), concept, rel,
         "condition_source_value", "condition_source_concept_id",
         "condition_concept_id", "SNOMED", "Condition")
         .collect()
@@ -153,11 +166,101 @@ class VocabSpec extends SparkSpecBase {
     val table = Seq((1L, "44054006"), (2L, "99999"))
       .toDF("id", "condition_source_value")
       .withColumn("src", lit(0L)).withColumn("tgt", lit(0L))
-    val mapped = Vocab.mapDomain(table, concept, rel,
+    val mapped = mapDomain(table, concept, rel,
       "condition_source_value", "src", "tgt", "SNOMED", "Condition")
     val stats = Vocab.mappingStats(mapped, "tgt").head()
     assert(stats.getAs[Long]("total") == 2)
     assert(stats.getAs[Long]("mapped") == 1)
     assert(stats.getAs[Long]("unmapped") == 1)
+  }
+
+  test("the code map equals the 3-stage reference on edge codes") {
+    val none: Option[String] = None
+    def c(id: Long, domain: String, vocabulary: String, std: String,
+          code: String, invalid: Option[String] = none) =
+      (id, s"$vocabulary $code", domain, vocabulary, "Clinical", std, code,
+        invalid)
+    val concept = Seq(
+      // concept 0 is standard here, and Maps to 1400: NULL and unknown
+      // codes then map to 1400 in Condition
+      c(0L, "Condition", "None", "S", "No matching concept"),
+      c(1400L, "Condition", "SNOMED", "S", "STD1400"),
+      // C1: Maps to 1200 AND a direct match (itself); the lower-id Maps-to
+      // targets are non-standard or deprecated, so stage 2 skips them
+      c(1100L, "Condition", "SNOMED", "S", "C1"),
+      c(1200L, "Condition", "SNOMED", "S", "STD1200"),
+      c(1050L, "Condition", "SNOMED", "", "ALT1050"),
+      c(1051L, "Condition", "SNOMED", "S", "OLD1051", Some("D")),
+      // C2: a deprecated higher-id duplicate with its own Maps-to target
+      c(1101L, "Condition", "SNOMED", "", "C2"),
+      c(1190L, "Condition", "SNOMED", "", "C2", Some("U")),
+      c(1201L, "Condition", "SNOMED", "S", "STD1201"),
+      c(1202L, "Condition", "SNOMED", "S", "STD1202"),
+      // SHARED: one code in SNOMED (Maps to) and LOINC (direct)
+      c(1300L, "Condition", "SNOMED", "", "SHARED"),
+      c(1301L, "Measurement", "LOINC", "S", "SHARED"),
+      // Z: Maps to concept 0, so the direct match 1501 wins
+      c(1500L, "Condition", "SNOMED", "", "Z"),
+      c(1501L, "Condition", "SNOMED", "S", "Z"),
+      // L1: one source concept, a target per domain
+      c(1700L, "Measurement", "LOINC", "", "L1"),
+      c(1701L, "Measurement", "LOINC", "S", "STD1701"),
+      c(1702L, "Observation", "LOINC", "S", "STD1702"),
+      c(1800L, "Drug", "RxNorm", "S", "R1"),
+      c(1900L, "Procedure", "SNOMED", "", "P1"),
+      c(1901L, "Procedure", "SNOMED", "S", "STD1901"))
+      .toDF("concept_id", "concept_name", "domain_id", "vocabulary_id",
+        "concept_class_id", "standard_concept", "concept_code",
+        "invalid_reason")
+    val rel = Seq((0L, 1400L, "Maps to"), (1100L, 1200L, "Maps to"),
+      (1100L, 1050L, "Maps to"), (1100L, 1051L, "Maps to"),
+      (1101L, 1202L, "Maps to"), (1190L, 1201L, "Maps to"),
+      (1300L, 1202L, "Maps to"), (1500L, 0L, "Maps to"),
+      (1700L, 1701L, "Maps to"), (1700L, 1702L, "Maps to"),
+      (1900L, 1901L, "Maps to"), (1900L, 1200L, "Is a"))
+      .toDF("concept_id_1", "concept_id_2", "relationship_id")
+    val pairs = Seq("Condition" -> "SNOMED", "Drug" -> "RxNorm",
+      "Procedure" -> "SNOMED", "Measurement" -> "LOINC",
+      "Observation" -> "LOINC")
+    val codes = new Vocab.CodeMap(
+      Vocab.codeMap(concept, rel, pairs.map(_.swap)))
+    val values = Seq(None, Some("UNKNOWN"), Some("C1"), Some("C2"),
+      Some("C2"), Some("SHARED"), Some("Z"), Some("L1"), Some("R1"),
+      Some("P1"), Some("No matching concept"))
+    // as the ETL calls it: no source-concept column, the target in place
+    val etlShape = values.zipWithIndex.map { case (v, i) =>
+      (i.toLong, 7L, 0L, v, s"x$i") }
+      .toDF("id", "person_id", "tgt", "src_value", "extra")
+    // a source-concept column in the middle
+    val inline = etlShape.select(col("id"), lit(5L).as("src"), col("tgt"),
+      col("extra"), col("src_value"))
+    def triples(df: org.apache.spark.sql.DataFrame) =
+      df.select("src_value", "src", "tgt").collect()
+        .map(r => Option(r.getString(0)) -> ((r.getLong(1), r.getLong(2))))
+        .toMap
+    val got = pairs.map { case (domain, vocabulary) =>
+      for (table <- Seq(etlShape, inline)) {
+        val reference = VocabReference.mapDomain(
+          if (table.columns.contains("src")) table
+          else table.withColumn("src", lit(0L)),
+          concept, rel, "src_value", "src", "tgt", vocabulary, domain)
+        assertSameRows(Vocab.mapDomain(table, codes, "src_value", "src",
+          "tgt", vocabulary, domain), reference)
+      }
+      domain -> triples(Vocab.mapDomain(etlShape, codes, "src_value", "src",
+        "tgt", vocabulary, domain))
+    }.toMap
+    val cond = got("Condition")
+    assert(cond(None) == ((0L, 1400L)) && cond(Some("UNKNOWN")) == ((0L, 1400L)))
+    assert(cond(Some("C1")) == ((1100L, 1200L)))
+    assert(cond(Some("C2")) == ((1101L, 1202L)))
+    assert(cond(Some("SHARED")) == ((1300L, 1202L)))
+    assert(cond(Some("Z")) == ((1500L, 1501L)))
+    assert(got("Procedure")(Some("C1")) == ((1100L, 0L)))
+    assert(got("Measurement")(None) == ((0L, 0L)))
+    assert(got("Measurement")(Some("SHARED")) == ((1301L, 1301L)))
+    assert(got("Measurement")(Some("L1")) == ((1700L, 1701L)))
+    assert(got("Observation")(Some("L1")) == ((1700L, 1702L)))
+    assert(got("Drug")(Some("R1")) == ((1800L, 1800L)))
   }
 }

@@ -81,11 +81,15 @@ class DenseIdSpec extends SparkSpecBase {
     import spark.implicits._
     val existing = Seq(("u1", 1L), ("u2", 2L)).toDF("src", "id")
     val incoming = Seq("u2", "u3", "u3", "u4").toDF("src")
-    val round1 = DenseId.extendIdMap(existing, incoming, "src", "id")
+    val round1 = DenseId.extendIdMap(Some(existing), incoming, "src", "id")
     val got = round1.as[(String, Long)].collect().toMap
     assert(got == Map("u1" -> 1L, "u2" -> 2L, "u3" -> 3L, "u4" -> 4L))
     // re-running with the same incoming changes nothing
-    val round2 = DenseId.extendIdMap(round1, incoming, "src", "id")
+    val round2 = DenseId.extendIdMap(Some(round1), incoming, "src", "id")
     assert(round2.as[(String, Long)].collect().toMap == got)
+    // a first load numbers the distinct keys from 1
+    assert(DenseId.extendIdMap(None, incoming, "src", "id")
+      .as[(String, Long)].collect().toMap
+      == Map("u2" -> 1L, "u3" -> 2L, "u4" -> 3L))
   }
 }
