@@ -6,28 +6,6 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args.take(2)
-    // optional extra args: only dump queries whose name starts with one
-    // of them (local iteration; the driver always passes exactly two)
-    // GRAFT_VERIFY_EXCLUDE: comma-separated exact names to skip — for the
-    // above-driver-scale (sf1) board, where the two output-cardinality-
-    // bound queries (q150 dup² id-pairs, q201 proximity ∝ density²) are
-    // excluded by documented contract (SCALE.md). Unset for driver runs.
-    val excluded = sys.env.get("GRAFT_VERIFY_EXCLUDE")
-      .map(_.split(',').map(_.trim).toSet).getOrElse(Set.empty[String])
-    // audit trail for exclusion runs: print what is ACTUALLY excluded and
-    // call out names matching no query — a typo would otherwise exclude
-    // nothing, silently, and the sf1 board would quietly run the query it
-    // meant to skip (or skip nothing and look green for the wrong reason)
-    if (excluded.nonEmpty) {
-      val (known, unknown) = excluded.partition(SparkEntry.queries.contains)
-      System.err.println(
-        s"[verify] GRAFT_VERIFY_EXCLUDE active: skipping " +
-          s"${known.toSeq.sorted.mkString(", ")}")
-      if (unknown.nonEmpty)
-        System.err.println(
-          s"[verify] WARNING: excluded names matching NO query (typo?): " +
-            s"${unknown.toSeq.sorted.mkString(", ")}")
-    }
     // GRAFT_SCALE_OVERRIDES=1 (sf1-board runs only): swap in the
     // resource-bounded twins — folded query projections AND their
     // matching oracle forms (SparkEntry.queriesScaleOverrides /
@@ -43,11 +21,12 @@ object Verify {
     val baseQueries =
       if (scaleOverrides) SparkEntry.queries ++ SparkEntry.queriesScaleOverrides
       else SparkEntry.queries
+    // optional extra args: only dump queries whose name starts with one
+    // of them (local iteration; a full dump passes exactly two)
     val selected =
-      (if (args.length <= 2) baseQueries
-       else baseQueries.filter { case (n, _) =>
-         args.drop(2).exists(n.startsWith) })
-        .filter { case (n, _) => !excluded.contains(n) }
+      if (args.length <= 2) baseQueries
+      else baseQueries.filter { case (n, _) =>
+        args.drop(2).exists(n.startsWith) }
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = graft.core.Sessions.builder(s"local[$cpus]", cpus.toInt)
       .getOrCreate()

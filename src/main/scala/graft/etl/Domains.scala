@@ -164,19 +164,12 @@ object Domains {
         col("visit_occurrence_id"),
         col("code").as("condition_source_value"))
 
-  /** omop.drug_exposure (:1230-1290): default 30-day end date (P7,
-    * enhanced_synthea_to_omop.py:1236-1238). */
-  def drugExposure(typedMedications: DataFrame, personMap: DataFrame,
-                   visitMap: DataFrame,
-                   personCount: Option[Long] = None): DataFrame =
-    drugExposureAndCost(typedMedications, personMap, visitMap,
-      personCount)._1
-
-  /** drug_exposure + its omop.cost Drug rows (transform_cost.sql:64-121)
-    * off one shared dense-id'd frame: the two projections are lazy
-    * slivers of the same lineage (each consumer's action re-derives it —
-    * cheap narrow scans now that the id assignment is pass-based rather
-    * than checkpoint-materialized).
+  /** omop.drug_exposure (:1230-1290; default 30-day end date, P7,
+    * enhanced_synthea_to_omop.py:1236-1238) + its omop.cost Drug rows
+    * (transform_cost.sql:64-121) off one shared dense-id'd frame: the two
+    * projections are lazy slivers of the same lineage (each consumer's action
+    * re-derives it — cheap narrow scans now that the id assignment is
+    * pass-based rather than checkpoint-materialized).
     *
     * The reference attaches costs by re-joining medications_raw to
     * drug_exposure on (person_id, visit_occurrence_id) only — a fan-out
@@ -226,12 +219,7 @@ object Domains {
     (exposure, drugCost)
   }
 
-  /** omop.procedure_occurrence (:1358-1400). */
-  def procedureOccurrence(typedProcedures: DataFrame, personMap: DataFrame,
-                          visitMap: DataFrame): DataFrame =
-    procedureOccurrenceAndCost(typedProcedures, personMap, visitMap)._1
-
-  /** procedure_occurrence + its omop.cost Procedure rows
+  /** omop.procedure_occurrence (:1358-1400) + its omop.cost Procedure rows
     * (transform_cost.sql:123-180: total_charge = total_cost = BASE_COST;
     * the paid-side columns are NULL by reference contract — Synthea
     * procedures carry no payer split). Same one-pass sharing as

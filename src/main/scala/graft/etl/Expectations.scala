@@ -76,23 +76,6 @@ object Expectations {
           .as("pass"))
   }
 
-  /** Per-row violation flags for STREAM routing: one boolean column per
-    * check plus an overall `quarantine` flag — every row-level check is
-    * a pure Column expression, so the same select runs unchanged on a
-    * micro-batch stream (the IngestEnrich posture): good rows flow to
-    * the sink, quarantined rows carry their reasons to a dead-letter
-    * path, and the split is bit-identical to batch at any micro-batch
-    * boundary (spec-pinned). `unique` and [[fkCovered]] need
-    * cross-row/cross-table state and stay batch-tier by design. */
-  def rowFlags(df: DataFrame, checks: Seq[Check]): DataFrame = {
-    require(checks.nonEmpty, "no expectations declared")
-    val flagged = checks.foldLeft(df)((d, c) =>
-      d.withColumn(s"viol_${c.name}_${c.column}", c.violation))
-    flagged.withColumn("quarantine",
-      checks.map(c => col(s"viol_${c.name}_${c.column}"))
-        .reduce(_ || _))
-  }
-
   /** Referential expectation: every non-null `childKey` must exist in
     * `parent.parentKey`. One anti-join against the parent's distinct
     * key sliver; same output schema as [[run]] so reports union. */

@@ -41,16 +41,6 @@ object Validation {
       .join(parent.select(col(key)), Seq(key), "left_anti")
       .select(col("check_name"), lit(1L).as("failed_count"))
 
-  /** Mapping-rate stats: unmapped (=0) concept counts + pct per table
-    * (A4; enhanced_synthea_to_omop.py:2418-2453). */
-  def mappingRate(df: DataFrame, conceptCol: String): DataFrame =
-    df.agg(
-      count(lit(1)).as("total"),
-      sum(when(col(conceptCol) === 0, 1).otherwise(0)).as("unmapped"))
-      .select(col("total"), col("unmapped"),
-        round(lit(100.0) * col("unmapped") /
-          nullif(col("total"), lit(0)), 2).as("unmapped_pct"))
-
   /** Full report over a built OMOP set — one lazy aggregate; the caller's
     * one action (collect or write) runs every check. Checks: orphaned
     * person/visit keys, end before start (etl_validation.py:313-330), the

@@ -209,12 +209,4 @@ object Vocab {
         (if (table.columns.contains(targetConceptCol)) Nil else Seq(target))
         : _*)
   }
-
-  /** Mapping-rate stats per the reference's post-mapping report
-    * (etl_concept_mapping.py:183-189). */
-  def mappingStats(table: DataFrame, targetConceptCol: String): DataFrame =
-    table.agg(
-      count(lit(1)).as("total"),
-      sum(when(col(targetConceptCol) > 0, 1).otherwise(0)).as("mapped"),
-      sum(when(col(targetConceptCol) === 0, 1).otherwise(0)).as("unmapped"))
 }

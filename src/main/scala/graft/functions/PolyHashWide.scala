@@ -33,12 +33,13 @@ object PolyHash2Fn {
   * The single 30-bit poly hash saturates as a dedup PREFILTER at corpus
   * scale: at ~10^13 windows over a 2^30 space every value repeats ~10^4
   * times and a `count > 1` repeated-gate passes essentially the whole
-  * corpus (ExciseBench measured millions of birthday collisions at just
-  * 180M windows). The wide key's space is (1e9+7)·998244353 ≈ 2^59.8 —
-  * expected colliding pairs drop from ~n²/2^31 to ~n²/2^60.8, a sliver
-  * even at 100 TB — while every intermediate still fits signed 64-bit
-  * arithmetic on BOTH engines (value < 2^61), so the DuckDB oracle
-  * replays it with plain BIGINT lambdas, no hugeint.
+  * corpus (millions of birthday collisions measured at just 180M
+  * windows; SCALE.md "Exact-substring excision"). The wide key's space
+  * is (1e9+7)·998244353 ≈ 2^59.8 — expected colliding pairs drop from
+  * ~n²/2^31 to ~n²/2^60.8, a sliver even at 100 TB — while every
+  * intermediate still fits signed 64-bit arithmetic on BOTH engines
+  * (value < 2^61), so the DuckDB oracle replays it with plain BIGINT
+  * lambdas, no hugeint.
   *
   * `wide >> 31` recovers the legacy 30-bit hash exactly (spec-pinned) —
   * the top plane IS [[PolyHashFn]], unchanged. */

@@ -75,36 +75,12 @@ object Multimodal {
       }
   }
 
-  /** Binary→binary partition-batched transform — the resize/transcode
-    * shape (image resize, audio resample). Same task structure as
-    * [[extractFeatures]]: codec context once per partition, payload rows
-    * streamed through; binary in, binary out, columnar at both ends.
-    * Stub semantics (deterministic, library-free): cyclic truncate/fill
-    * of the payload to exactly `targetBytes` (empty stays empty) —
-    * standing in for a real pixel-resample. */
-  def transcode(media: DataFrame, targetBytes: Int): Dataset[MediaRow] = {
-    require(targetBytes > 0, s"targetBytes must be positive: $targetBytes")
-    val spark = media.sparkSession
-    import spark.implicits._
-    media.select(col("media_id"), col("kind"), col("bytes")).as[MediaRow]
-      .mapPartitions { rows =>
-        // real codec: init resampler once per task here
-        rows.map { r =>
-          val out =
-            if (r.bytes.isEmpty) r.bytes
-            else Array.tabulate[Byte](targetBytes)(i =>
-              r.bytes(i % r.bytes.length))
-          MediaRow(r.media_id, r.kind, out)
-        }
-      }
-  }
-
   /** Frame sampling plan: one row per sampled frame, no decode needed —
     * pure row expansion from metadata (duration ∝ payload size), pushed
     * down so the binary column is NOT carried through the explode. */
   def sampleFrames(media: DataFrame, bytesPerFrame: Int): DataFrame = {
-    // mirrors transcode's guard: 0 would ANSI-overflow on the cast
-    // (Infinity → long), negative would silently clamp every item to 1
+    // 0 would ANSI-overflow on the cast (Infinity → long), negative
+    // would silently clamp every item to 1
     require(bytesPerFrame > 0, s"bytesPerFrame must be positive: $bytesPerFrame")
     media
       .select(col("media_id"), col("kind"),

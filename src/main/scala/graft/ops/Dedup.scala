@@ -71,50 +71,6 @@ object Dedup {
       .join(existingKeys, keys, "left_anti")
   }
 
-  /** Keyset pagination — the scale replacement for ORDER BY/LIMIT/OFFSET
-    * batching (W3; the reference pages with OFFSET,
-    * transfer_population_to_staging.sql:140-142, which re-scans every
-    * skipped row). `after` is the last key of the previous page (None for
-    * the first); the filter pushes to the scan, so each page costs
-    * O(page), not O(offset + page). */
-  def keysetPage(df: DataFrame, keyCol: String, pageSize: Int,
-                 after: Option[Any]): DataFrame = {
-    val filtered = after.fold(df)(k => df.filter(col(keyCol) > lit(k)))
-    filtered.orderBy(col(keyCol).asc).limit(pageSize)
-  }
-
-  /** Exact duplicate detection by content hash — groupBy-count on a stable
-    * digest of the chosen columns. Map-side partial aggregation makes this
-    * one shuffle of (hash, count) pairs regardless of row width. */
-  /** Field-framed content digest: each column serializes as
-    * `<length>:<value>` (-1 for NULL) before hashing. A bare separator
-    * concat is ambiguous when a value CONTAINS the separator, and
-    * concat_ws silently SKIPS nulls -- colliding ("a", NULL) with
-    * (NULL, "a") and NULL with "": exact "dedup" would then delete rows
-    * that are not duplicates. The length prefix makes field boundaries
-    * unambiguous regardless of content; the null sentinel keeps NULL
-    * distinct from the empty string. */
-  private def contentHash(cols: Seq[Column]): Column =
-    md5(concat_ws(" ",
-      cols.map { c =>
-        val s = c.cast("string")
-        concat(coalesce(length(s), lit(-1)).cast("string"), lit(":"),
-          coalesce(s, lit("")))
-      }: _*))
-
-  def exactDupGroups(df: DataFrame, cols: Seq[Column]): DataFrame =
-    df.groupBy(contentHash(cols).as("content_hash"))
-      .agg(count(lit(1)).as("dup_count"))
-      .filter(col("dup_count") > 1)
-
-  /** Exact dedup keeping one deterministic representative per content group. */
-  def exactDedup(df: DataFrame, hashCols: Seq[Column],
-                 tiebreak: Column): DataFrame =
-    firstRowPerGroup(
-      df.withColumn("__h", contentHash(hashCols)),
-      Seq(col("__h")), Seq(tiebreak)
-    ).drop("__h")
-
   /** PARAGRAPH-level exact dedup — the C4/CCNet/Dolma pipeline stage
     * that doc-level dedup cannot express: boilerplate paragraphs
     * (headers, license blocks, navigation text) repeat across millions
@@ -192,10 +148,10 @@ object Dedup {
     * probability ≈ P²/2¹²⁹ over P distinct paragraphs, ≈ 10⁻¹⁵ even at
     * P = 10¹² — in which case the later one is treated as a duplicate
     * of the earlier (dropped, never corrupted). Measured at sf10
-    * (ParDedupBench, 500k docs): 235 MB total shuffle write vs the
-    * exact path's 507 MB (54% less) at 2.0× the speed — and the exact
-    * path's shuffle grows with corpus TEXT bytes while this one grows
-    * with paragraph COUNT. */
+    * (500k docs; SCALE.md "Hash-keyed paragraph dedup"): 235 MB total
+    * shuffle write vs the exact path's 507 MB (54% less) at 2.0× the
+    * speed — and the exact path's shuffle grows with corpus TEXT bytes
+    * while this one grows with paragraph COUNT. */
   def paragraphDedupHashed(docs: DataFrame, idCol: String, textCol: String,
                            sepRegex: String = "\\n{2,}",
                            joiner: String = "\n\n"): DataFrame = {
@@ -244,11 +200,11 @@ object Dedup {
     * Group identity is the EXACT prefix string, not its hash: a dedup
     * decision on a 30-bit poly-hash alone falsely merges ~n²/2·10⁹
     * birthday-colliding prefixes (hundreds of wrongly-dropped docs per
-    * billion — the same defect class ExciseBench caught in the span
-    * exciser). The prefix is bounded at `prefixTokens` tokens, so the
-    * shuffle carries ~100 B/doc instead of 8 — the price of never
-    * deleting a non-duplicate; `prefix_hash` remains in the output as
-    * the group's compact display/bucketing key.
+    * billion — the same defect class the span exciser's scale run
+    * caught; SCALE.md "Exact-substring excision"). The prefix is bounded
+    * at `prefixTokens` tokens, so the shuffle carries ~100 B/doc instead
+    * of 8 — the price of never deleting a non-duplicate; `prefix_hash`
+    * remains in the output as the group's compact display/bucketing key.
     *
     * Output: one row per doc — (id, prefix_hash, group_n, rep, is_kept)
     * where rep = the group's smallest id and is_kept marks it. Docs

@@ -20,14 +20,8 @@ import org.apache.spark.sql.types.LongType
   */
 object DenseId {
 
-  /** Small/medium inputs: a single global window. Catalyst plans this as a
-    * single-partition sort — exact but not scalable past ~10^8 rows. */
-  def withDenseIdWindow(df: DataFrame, orderBy: Seq[Column],
-                        idCol: String, offset: Long = 0L): DataFrame =
-    df.withColumn(idCol,
-      row_number().over(Window.orderBy(orderBy: _*)) + lit(offset))
-
-  /** Scale path: identical output (global rank by key + offset), no
+  /** Global rank by key + offset as the id — identical output to
+    * `row_number()` over one global window (DenseIdSpec pins it), but no
     * global single-partition sort and — unlike the earlier formulations —
     * NO materialization of the input.
     *
@@ -42,7 +36,7 @@ object DenseId {
     * and carries it straight into the caller's sink. Global rank is
     * independent of where the bounds land (within-bucket rank +
     * earlier-bucket counts = global rank), so ids are byte-identical to
-    * the window path regardless of sampling.
+    * the global window regardless of sampling.
     *
     * History: a lazy shared-plan formulation relying on ReuseExchange
     * CORRUPTED ids when the rule didn't fire inside a larger query

@@ -75,57 +75,16 @@ object NearDup {
     shingled.unionByName(short)
   }
 
-  /** MinHash signatures, one row per (doc, hashIndex): min over the doc's
-    * shingles of affine rehash i, for i < numHashes.
-    *
-    * Computed as k parallel min-aggregates over the (doc, shingle-hash)
-    * rows — NOT by exploding k× first. The shuffle then carries one
-    * k-column row per (doc, map-partition) thanks to partial aggregation,
-    * instead of k× the shingle stream; the unpivot to (doc, i, mh) happens
-    * after aggregation where the data is already small. ~2× faster at
-    * sf0.1, and the gap widens with corpus size. */
-  def minhashRows(shingles: DataFrame, idCol: String,
-                  numHashes: Int): DataFrame = {
-    val aggs = (0 until numHashes).map(i =>
-      min(TextOps.affineHash(col("h"), lit(i))).as(s"mh$i"))
-    val wide = shingles.groupBy(col(idCol)).agg(aggs.head, aggs.tail: _*)
-    wide.select(col(idCol), explode(array((0 until numHashes).map(i =>
-        struct(lit(i).as("i"), col(s"mh$i").as("mh"))): _*)).as("x"))
-      .select(col(idCol), col("x.i").as("i"), col("x.mh").as("mh"))
-  }
-
-  /** LSH banding: group the k minhashes into bands of `rowsPerBand`, one
-    * signature string per (doc, band). Docs sharing any (band, sig) bucket
-    * are near-dup candidates.
-    *
-    * The signature is assembled with one max(when(slot=s)) aggregate per
-    * band slot — plain pivoting hash aggregation, fully codegen'd and
-    * map-side combinable. The collect_list→array_sort→transform form
-    * computes the same string but runs the array lambdas interpreted and
-    * buffers per-group lists through the shuffle. */
-  def lshBands(minhash: DataFrame, idCol: String,
-               rowsPerBand: Int): DataFrame = {
-    val slots = (0 until rowsPerBand).map(s =>
-      max(when(col("slot") === s, col("mh"))).as(s"m$s"))
-    minhash
-      .withColumn("band", (col("i") / rowsPerBand).cast("int"))
-      .withColumn("slot", pmod(col("i"), lit(rowsPerBand)))
-      .groupBy(col(idCol), col("band"))
-      .agg(slots.head, slots.tail: _*)
-      .select(col(idCol), col("band"),
-        concat_ws("-", (0 until rowsPerBand).map(s =>
-          col(s"m$s").cast("string")): _*).as("band_sig"))
-  }
-
   /** LSH band rows computed entirely IN-ROW from the per-doc signature
     * ([[signatureColumn]], spec-pinned bit-identical to the batch
     * minhash aggregation): the minhash is a min over the doc's OWN
     * shingles, so the shingle-stream explode → groupBy(doc) exchange —
     * the widest shuffle of the whole cascade — buys nothing the row
-    * cannot compute itself (guide §2.4). Output is row-identical to
-    * `lshBands(minhashRows(shingleRows(docs)))` (same band numbering,
-    * same "-"-joined signature strings; NearDupSpec pins it), including
-    * the absent-row behavior for null-text docs. */
+    * cannot compute itself (guide §2.4). Output is row-identical to the
+    * exploded form — [[shingleRows]], a min-aggregate per (doc, hash
+    * index), one pivot per band (same band numbering, same "-"-joined
+    * signature strings; NearDupSpec pins it against that reference),
+    * including the absent-row behavior for null-text docs. */
   def lshBandsFromDocs(docs: DataFrame, idCol: String, textCol: String,
                        n: Int, numHashes: Int,
                        rowsPerBand: Int): DataFrame = {
@@ -199,42 +158,6 @@ object NearDup {
       .agg(count(lit(1)).as("n_shared_bands"))
   }
 
-  /** Exact n-gram Jaccard for given (doc_a, doc_b) pairs, from the same
-    * (doc, shingle-hash) rows: |A∩B| via join, |A∪B| = |A|+|B|−|A∩B|.
-    *
-    * The shingle stream is first semi-join-restricted to docs that appear
-    * in a candidate pair: the verify tier then costs O(candidate docs),
-    * not O(corpus) — at 100 TB the LSH stage emits a sliver of the corpus
-    * and the expensive distinct + intersection joins must only ever see
-    * that sliver. (Pass `restrictToPairDocs = false` when the pair set
-    * already covers every doc, e.g. exhaustive windows — saves the
-    * restriction join.) */
-  def jaccard(pairs: DataFrame, shinglesRaw: DataFrame, idCol: String,
-              restrictToPairDocs: Boolean = true): DataFrame = {
-    val restricted =
-      if (!restrictToPairDocs) shinglesRaw
-      else {
-        val pairDocs = pairs.select(col("doc_a").as(idCol))
-          .unionByName(pairs.select(col("doc_b").as(idCol))).distinct()
-        shinglesRaw.join(pairDocs, Seq(idCol), "left_semi")
-      }
-    // set semantics for |A∩B|/|A∪B|; persisted because the plan below
-    // references it four times (sizes + both sides of the intersection
-    // join) and each reference would otherwise re-run the whole
-    // tokenize→window→distinct lineage. This is the pipeline's stage
-    // boundary — the same role the reference's staged temp tables play
-    // (OPTIMIZATION_SUMMARY.md:55-69); MEMORY_AND_DISK so a corpus-scale
-    // window tier degrades to spill, never OOM.
-    val shingles = restricted.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.OpCache.renew("NearDup.jaccard", shingles)
-    val sizes = shingles.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    simJoinCore(pairs, shingles, sizes, idCol)
-      .withColumn("jaccard",
-        col("inter").cast("double") /
-          (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
-  }
-
   /** Per-doc DISTINCT shingle-hash set as ONE array row (id, hs) — the
     * set-semantics twin of [[shingleRows]], computed entirely in-row:
     * `array_distinct` over the shingle kernel's output replaces the
@@ -259,13 +182,20 @@ object NearDup {
       .filter(col("hs").isNotNull)
   }
 
-  /** [[jaccard]] over per-doc distinct shingle SETS ([[shingleSets]])
-    * instead of a raw (doc, h) stream: identical output (the stream
-    * form's `distinct()` equals per-doc `array_distinct`; the grouped
-    * size count equals `size(hs)`), minus the corpus-wide distinct
+  /** Exact n-gram Jaccard |A∩B|/|A∪B| for given (doc_a, doc_b) pairs
+    * over per-doc distinct shingle SETS ([[shingleSets]]). Identical
+    * output to the raw (doc, h) stream form (its `distinct()` equals
+    * per-doc `array_distinct`, its grouped size count equals
+    * `size(hs)`; NearDupSpec pins it), minus the corpus-wide distinct
     * exchange and the sizes aggregation — both derived map-side from
-    * the compact array frame. */
-  /** @param dropZero when true, pairs with an EMPTY intersection are
+    * the compact array frame.
+    *
+    * The set frame is first semi-join-restricted to docs that appear in
+    * a candidate pair, so the verify tier costs O(candidate docs), not
+    * O(corpus). Pass `restrictToPairDocs = false` when the pair set
+    * already covers every doc, which saves the restriction join.
+    *
+    * @param dropZero when true, pairs with an EMPTY intersection are
     *        omitted from the output instead of carried with jaccard 0 —
     *        value-identical for every caller that filters
     *        `jaccard >= t` with `t > 0`, and it lets the sizes ride the
@@ -291,9 +221,13 @@ object NearDup {
         (col("sz_a") + col("sz_b") - col("inter")).cast("double"))
   }
 
-  /** [[containment]] over per-doc distinct shingle sets — same
-    * output-identical exchange removal as [[jaccardSets]] (and the same
-    * `dropZero` contract: empty-intersection pairs have cont 0). */
+  /** Containment similarity |A∩B|/|A| (and /|B|) for candidate pairs —
+    * the asymmetric complement of [[jaccardSets]]: a short document fully
+    * embedded in a long one ("quote-dups", boilerplate-wrapped copies)
+    * has high containment but LOW Jaccard (the union is dominated by the
+    * long side), so a Jaccard-thresholded dedup pass keeps both copies.
+    * Same per-doc shingle sets, candidate restriction and `dropZero`
+    * contract as [[jaccardSets]] (empty-intersection pairs have cont 0). */
   def containmentSets(pairs: DataFrame, sets: DataFrame, idCol: String,
                       restrictToPairDocs: Boolean = true,
                       dropZero: Boolean = false): DataFrame = {
@@ -357,7 +291,7 @@ object NearDup {
     * intersection computed IN the (doc, hash) join (second join keys on
     * BOTH columns, so the intermediate is |A∩B| per pair, never
     * |A|·|B|), then pairs left-join inter and pick up both sizes. */
-  private def simJoinCore(pairs: DataFrame, shingles: DataFrame,
+  private[graft] def simJoinCore(pairs: DataFrame, shingles: DataFrame,
                           sizes: DataFrame, idCol: String): DataFrame = {
     val inter = pairs
       .join(shingles.select(col(idCol).as("doc_a"), col("h")), "doc_a")
@@ -372,70 +306,15 @@ object NearDup {
       .join(sizes.select(col(idCol).as("doc_b"), col("sz").as("sz_b")), "doc_b")
   }
 
-  /** Containment similarity |A∩B|/|A| (and /|B|) for candidate pairs —
-    * the asymmetric complement of [[jaccard]]: a short document fully
-    * embedded in a long one ("quote-dups", boilerplate-wrapped copies)
-    * has high containment but LOW Jaccard (the union is dominated by the
-    * long side), so a Jaccard-thresholded dedup pass keeps both copies.
-    * Same candidate-restricted two-key-join plan as [[jaccard]] — the
-    * intersection is computed IN the (doc, hash) join, per-pair work is
-    * |A∩B|, and only candidate docs' shingle sets are re-derived. */
-  def containment(pairs: DataFrame, shinglesRaw: DataFrame, idCol: String,
-                  restrictToPairDocs: Boolean = true): DataFrame = {
-    val restricted =
-      if (!restrictToPairDocs) shinglesRaw
-      else {
-        val pairDocs = pairs.select(col("doc_a").as(idCol))
-          .unionByName(pairs.select(col("doc_b").as(idCol))).distinct()
-        shinglesRaw.join(pairDocs, Seq(idCol), "left_semi")
-      }
-    // persisted for the same four-reference reason as jaccard's
-    val shingles = restricted.distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.OpCache.renew("NearDup.containment", shingles)
-    val sizes = shingles.groupBy(col(idCol)).agg(count(lit(1)).as("sz"))
-    simJoinCore(pairs, shingles, sizes, idCol)
-      .withColumn("cont_a",
-        col("inter").cast("double") / col("sz_a").cast("double"))
-      .withColumn("cont_b",
-        col("inter").cast("double") / col("sz_b").cast("double"))
-  }
-
-  /** SimHash (here 16-bit for oracle compactness; width is a parameter):
-    * per token-hash bit j, sum ±1 over the doc's tokens; bit j of the
-    * signature is 1 iff the sum is positive. One groupBy over exploded
-    * tokens — map-side combinable. */
-  def simhash(docs: DataFrame, idCol: String, textCol: String,
-              bits: Int = 16): DataFrame = {
-    val tok = docs.select(col(idCol),
-      explode(TextOps.tokens(col(textCol))).as("t"))
-      .select(col(idCol), TextOps.polyHash(col("t")).as("h"))
-    val bitSums = (0 until bits).map { j =>
-      sum(when(shiftright(col("h"), j).bitwiseAND(1) === 1, 1)
-        .otherwise(-1)).as(s"b$j")
-    }
-    tok.groupBy(col(idCol)).agg(bitSums.head, bitSums.tail: _*)
-      .select(col(idCol),
-        (0 until bits).map(j =>
-          when(col(s"b$j") > 0, lit(1L << j)).otherwise(0L))
-          .reduce(_ + _).as("simhash"))
-  }
-
-  /** Per-ROW simhash signature — the streaming-tier complement of
-    * [[simhash]], exactly as [[signatureColumn]] complements
-    * [[minhashRows]]: the ±1 bit sums fold over the row's own token-hash
-    * array (one `aggregate` carrying a bits-wide counter array), so the
-    * signature needs ZERO shuffle and is computable on a stream row at
-    * ingest. Bit-identical to the batch aggregation (spec-pinned): same
-    * poly_hash per token, same ±1 vote per bit, same strict `> 0`
-    * threshold. Docs with no tokens sign as 0 (all votes empty — the
-    * batch tier has no row at all; callers on streams filter empties). */
-  def simhashColumn(textCol: Column, bits: Int = 16): Column =
-    simhashColumnFromTokens(TextOps.tokens(textCol), bits)
-
-  /** [[simhashColumn]] over an ALREADY-TOKENIZED array column — lets a
-    * caller that must also inspect the token array (e.g. to filter
-    * token-less docs for batch-tier row parity) tokenize once per row. */
+  /** Per-ROW SimHash signature over a token array column (here 16-bit
+    * for oracle compactness; width is a parameter): per token-hash bit
+    * j, a ±1 vote per token, and bit j of the signature is 1 iff the
+    * votes sum to more than 0. The votes fold over the row's own
+    * token-hash array (one `aggregate` carrying a bits-wide counter
+    * array), so the signature needs ZERO shuffle and is computable on a
+    * stream row at ingest. NearDupSpec pins it bit-identical to the
+    * exploded-token groupBy form it replaced. Docs with no tokens sign
+    * as 0 (callers filter empties, as [[simhashDocs]] does). */
   def simhashColumnFromTokens(tokensCol: Column, bits: Int = 16): Column = {
     val votes = aggregate(
       transform(tokensCol, t => TextOps.polyHash(t)),
@@ -450,8 +329,8 @@ object NearDup {
       lit(0L), (acc, x) => acc + x)
   }
 
-  /** Per-doc simhash frame computed IN-ROW ([[simhashColumn]]) — row-
-    * and value-identical to the batch [[simhash]] aggregation (the
+  /** Per-doc simhash frame computed IN-ROW ([[simhashColumnFromTokens]])
+    * — row- and value-identical to the batch token-explode aggregation (the
     * signature kernel is spec-pinned bit-identical; docs with no tokens
     * are filtered here exactly as the batch explode drops them, and a
     * null text tokenizes to null — also absent) with ZERO shuffle where
@@ -465,25 +344,11 @@ object NearDup {
       .select(col(idCol),
         simhashColumnFromTokens(col("__tk"), bits).as("simhash"))
 
-  /** Hamming-near pairs on simhash signatures ≤ maxDist apart — the exact
-    * all-pairs tier (O(n²): fine for re-ranking small candidate sets,
-    * never for a corpus; use [[simhashPairsBlocked]] there). */
-  def simhashPairs(sigs: DataFrame, idCol: String,
-                   maxDist: Int): DataFrame = {
-    val l = sigs.select(col(idCol).as("doc_a"), col("simhash").as("sig_a"))
-    val r = sigs.select(col(idCol).as("doc_b"), col("simhash").as("sig_b"))
-    l.crossJoin(r).filter(col("doc_a") < col("doc_b"))
-      .withColumn("hamming",
-        bit_count(col("sig_a").bitwiseXOR(col("sig_b"))))
-      .filter(col("hamming") <= maxDist)
-      .select(col("doc_a"), col("doc_b"), col("hamming"))
-  }
-
   /** Corpus-scale simhash pair search by pigeonhole blocking: split the
     * `bits`-wide signature into maxDist+1 equal blocks — two signatures
     * within Hamming distance maxDist must agree EXACTLY on at least one
     * block — and hash-join on (block index, block value). Identical output
-    * to [[simhashPairs]] (asserted in spec); shuffle cost tracks bucket
+    * to the all-pairs crossJoin (asserted in spec); shuffle cost tracks bucket
     * sizes like the MinHash-LSH candidate join, not corpus². */
   def simhashPairsBlocked(sigs: DataFrame, idCol: String, maxDist: Int,
                           bits: Int = 16): DataFrame = {
@@ -536,14 +401,15 @@ object NearDup {
   }
 
   /** Per-ROW minhash signature: array of `numHashes` mins over the row's
-    * shingle hashes — bit-identical to [[minhashRows]]' aggregated values
+    * shingle hashes — bit-identical to the per-(doc, hash index) min
+    * aggregate over the exploded shingle rows
     * (spec-pinned) but computed with zero shuffle, which is what a
     * streaming ingest tier needs (per-row state, no corpus aggregation).
     * `shingle_hashes`' whole-doc fallback guarantees ≥1 shingle, so
     * every position is non-null. */
   def signatureColumn(textCol: Column, n: Int, numHashes: Int): Column = {
     val sh = call_function("shingle_hashes", TextOps.tokens(textCol), lit(n))
-    // same TextOps.affineHash family as minhashRows — sharing the one
+    // same TextOps.affineHash family as the batch minhash — sharing the one
     // definition is what KEEPS the streaming signature bit-identical to
     // the batch tier if the family ever changes again (it already did
     // once: the correlated pre-affine family collapsed LSH recall).
@@ -642,18 +508,6 @@ object NearDup {
       .groupBy(col(idCol))
       .agg(count(lit(1)).as("n_shared_shingles"))
   }
-
-  /** The corpus with contaminated docs removed: drop every doc whose
-    * [[contaminationReport]] count reaches `minOverlap` (1 = any shared
-    * n-gram disqualifies, the standard eval-decontamination policy). */
-  def decontaminate(corpus: DataFrame, benchmark: DataFrame,
-                    idCol: String, textCol: String, n: Int = 8,
-                    minOverlap: Int = 1): DataFrame =
-    corpus.join(
-      contaminationReport(corpus, benchmark, idCol, textCol, n)
-        .filter(col("n_shared_shingles") >= minOverlap)
-        .select(col(idCol)),
-      Seq(idCol), "left_anti")
 
   /** Repeated token spans — EXACT-SUBSTRING dedup, the third dedup
     * granularity after whole-document (exact/minhash/simhash) and
@@ -754,7 +608,7 @@ object NearDup {
     * collision can never excise unique text — at 4M docs the 180M-window
     * stream made millions of birthday collisions over the old 1e9+7
     * space, and the unverified form measurably cut canonical passages
-    * (ExciseBench caught it). The prefilter key is now the WIDE
+    * (SCALE.md "Exact-substring excision"). The prefilter key is now the WIDE
     * two-plane hash ([[graft.functions.ShingleHashesWideFn]], ≈2^60
     * space): at 30 bits the `count > 1` gate itself saturates at corpus
     * scale and the "repeated sliver" the text-attach join must carry
@@ -857,7 +711,7 @@ object NearDup {
     * beside the position in 63 bits, and struct min is order-identical
     * on both engines (Spark array_min and DuckDB list_min both compare
     * structs field-lexicographically). */
-  private val WinnowP = 1L << 30
+  private[graft] val WinnowP = 1L << 30
 
   /** Winnowing fingerprints (Schleimer/Wilkerson/Aiken, SIGMOD'03 —
     * the MOSS algorithm): from the stride-1 k-gram hash stream of each
@@ -875,7 +729,7 @@ object NearDup {
     * array comes from the native `shingle_hashes_wide` expression
     * (≈2^60 key space — at 30 bits two DIFFERENT k-grams sharing a
     * fingerprint hash becomes routine at corpus scale and
-    * [[winnowOverlap]]'s shared-hash evidence goes noise) and the
+    * [[winnowOverlapSets]]' shared-hash evidence goes noise) and the
     * sliding-window min is a `transform`+`slice`+`array_min`
     * higher-order chain over that per-row array (O(m·w) work per doc,
     * the classic time/shuffle trade — at w=4 the constant is tiny and
@@ -884,14 +738,12 @@ object NearDup {
     * Docs with fewer than w windows (incl. the |tokens|<k whole-doc
     * fallback hash) contribute their single overall minimum.
     *
-    * Output: (idCol, pos, h) — one row per selected fingerprint,
-    * distinct per doc. */
-  /** The per-row winnow selection (array of (h, np) structs, distinct
+    * This is the per-row selection (array of (h, np) structs, distinct
     * per doc) over a pre-projected `__keys` column — the ONE definition
-    * [[winnowFingerprints]], [[winnowFingerprintSets]] and the in-row
-    * stats consumers (q123) share, so the selection rule can never
-    * drift between the stream, set and folded forms. */
-  private def winnowSelection(w: Int): Column = {
+    * [[winnowFingerprintSets]] and the in-row stats consumers (q123)
+    * share, so the selection rule can never drift between the set and
+    * folded forms. */
+  private[graft] def winnowSelection(w: Int): Column = {
     val m = size(col("__keys"))
     when(m >= w,
         array_distinct(transform(sequence(lit(1), m - lit(w) + lit(1)),
@@ -900,8 +752,9 @@ object NearDup {
   }
 
   /** (id, __keys) projection feeding [[winnowSelection]]. */
-  private def winnowKeyed(docs: DataFrame, idCol: String, textCol: String,
-                          k: Int, w: Int): DataFrame = {
+  private[graft] def winnowKeyed(docs: DataFrame, idCol: String,
+                                 textCol: String, k: Int,
+                                 w: Int): DataFrame = {
     require(k >= 1, s"fingerprint k-gram width must be >= 1, got $k")
     require(w >= 2, s"winnow window must be >= 2, got $w")
     val keys = transform(
@@ -911,17 +764,9 @@ object NearDup {
     docs.select(col(idCol), keys.as("__keys"))
   }
 
-  def winnowFingerprints(docs: DataFrame, idCol: String, textCol: String,
-                         k: Int, w: Int): DataFrame =
-    winnowKeyed(docs, idCol, textCol, k, w)
-      .select(col(idCol), explode(winnowSelection(w)).as("__key"))
-      .select(col(idCol),
-        (lit(WinnowP - 1) - col("__key.np")).cast("int").as("pos"),
-        col("__key.h").as("h"))
-
   /** Per-doc fingerprint summary folded IN-ROW (r15, guide §2.4): count,
     * min and hi/lo checksum halves of the selected hashes — exactly the
-    * aggregate q123 ran over the exploded [[winnowFingerprints]] stream
+    * aggregate q123 ran over the exploded (id, pos, h) fingerprint stream
     * (count ≡ size of the selection, min/sums over the same multiset:
     * the selection is distinct in (h, np), so the h multiset matches the
     * stream rows), with ZERO shuffle where the stream form paid the
@@ -942,13 +787,13 @@ object NearDup {
   }
 
   /** Per-doc DISTINCT winnowed fingerprint-hash set as one array row
-    * (id, hs) — [[winnowFingerprints]] without positions, for consumers
-    * that only need set membership ([[winnowOverlap]]): the same hash
-    * can be selected at several positions in one doc, and dropping the
-    * duplicates in-row (array_distinct over the selection's h field)
-    * replaces the corpus-wide distinct() exchange the overlap join used
-    * to pay (guide §2.4 — the [[shingleSets]] move applied to the
-    * winnow tier). */
+    * (id, hs) — the selected fingerprints without positions, for
+    * consumers that only need set membership ([[winnowOverlapSets]]): the
+    * same hash can be selected at several positions in one doc, and dropping
+    * the duplicates in-row (array_distinct over the selection's h field)
+    * replaces the corpus-wide distinct() exchange the overlap join used to
+    * pay (guide §2.4 — the [[shingleSets]] move applied to the winnow tier).
+    * */
   def winnowFingerprintSets(docs: DataFrame, idCol: String,
                             textCol: String, k: Int, w: Int): DataFrame =
     winnowKeyed(docs, idCol, textCol, k, w)
@@ -956,21 +801,9 @@ object NearDup {
         array_distinct(transform(winnowSelection(w),
           key => key.getField("h"))).as("hs"))
 
-  /** [[winnowOverlap]] over per-doc distinct fingerprint sets
-    * ([[winnowFingerprintSets]]) — identical output, minus the
-    * corpus-wide distinct exchange. */
-  def winnowOverlapSets(sets: DataFrame, idCol: String,
-                        maxDocFreq: Int, minShared: Int): DataFrame = {
-    val compact = sets
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    compact.count() // eager: both self-join sides must read, never compute
-    graft.core.OpCache.renew("NearDup.winnowOverlapSets", compact)
-    val fp = compact.select(col(idCol), explode(col("hs")).as("h"))
-    winnowOverlapCore(fp, idCol, maxDocFreq, minShared)
-  }
-
   /** Cross-doc overlap from winnowed fingerprints: doc pairs sharing
-    * ≥ `minShared` distinct fingerprint hashes. The MOSS-style
+    * ≥ `minShared` distinct fingerprint hashes, over per-doc distinct
+    * fingerprint sets ([[winnowFingerprintSets]]). The MOSS-style
     * plagiarism/overlap report, and the cheap standing alternative to
     * the full LSH cascade when the question is "which docs share ANY
     * sizable passage" rather than "which docs are mostly the same".
@@ -983,23 +816,19 @@ object NearDup {
     * pairs — the same frequency-cap skew defense as the LSH band join.
     * The doc-frequency aggregate and the bucket self-join are the only
     * shuffles, both keyed on the fingerprint hash. */
-  def winnowOverlap(fps: DataFrame, idCol: String,
-                    maxDocFreq: Int, minShared: Int): DataFrame = {
-    // persisted because the plan references it three times (the doc-
-    // frequency aggregate and both self-join sides) — without the stage
-    // boundary each reference re-runs the corpus scan + winnow compute.
-    // The frame is the ~2/(w+1)-density distinct fingerprint stream, far
-    // smaller than the corpus; MEMORY_AND_DISK so it spills, never OOMs.
-    val fp = fps.select(col(idCol), col("h")).distinct()
+  def winnowOverlapSets(sets: DataFrame, idCol: String,
+                        maxDocFreq: Int, minShared: Int): DataFrame = {
+    val compact = sets
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    fp.count() // eager: both self-join sides must read, never compute
-    graft.core.OpCache.renew("NearDup.winnowOverlap", fp)
+    compact.count() // eager: both self-join sides must read, never compute
+    graft.core.OpCache.renew("NearDup.winnowOverlapSets", compact)
+    val fp = compact.select(col(idCol), explode(col("hs")).as("h"))
     winnowOverlapCore(fp, idCol, maxDocFreq, minShared)
   }
 
   /** Shared overlap-join tail: doc-frequency cap then bucket self-join
     * on the distinct (id, h) fingerprint stream. */
-  private def winnowOverlapCore(fp: DataFrame, idCol: String,
+  private[graft] def winnowOverlapCore(fp: DataFrame, idCol: String,
                                 maxDocFreq: Int,
                                 minShared: Int): DataFrame = {
     val rare = fp.groupBy(col("h"))

@@ -3,44 +3,21 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
-/** K-anonymity suppression over quasi-identifier columns.
+/** Re-identification risk audits over quasi-identifier (QI) columns.
   *
   * A release of per-row data is k-anonymous when every combination of
-  * quasi-identifier (QI) values is shared by at least k rows — otherwise
-  * the rare combination re-identifies its subjects. This operator
-  * suppresses (nulls out) the QI columns of rows whose equivalence class
-  * is smaller than k, the standard cell-suppression baseline the privacy
-  * literature builds on (Sweeney, "k-anonymity: a model for protecting
-  * privacy", 2002). Analogue of the reference's PII-handling posture on
-  * the export path (it pseudonymizes patient identifiers before load);
-  * here generalized to arbitrary QI sets for training-data release.
+  * QI values is shared by at least k rows — otherwise the rare
+  * combination re-identifies its subjects (Sweeney, "k-anonymity: a
+  * model for protecting privacy", 2002). Analogue of the reference's
+  * PII-handling posture on the export path (it pseudonymizes patient
+  * identifiers before load); here generalized to arbitrary QI sets for
+  * training-data release.
   *
   * Scale shape: one groupBy over the QI columns produces the class-size
-  * frame (|distinct QI combos| rows, ≪ corpus), which joins back on the
-  * same keys. The join reuses the aggregation's hash partitioning, and
-  * under AQE the class frame broadcasts when small — the corpus is
-  * scanned once and shuffled at most once, no window/sort tier. This
-  * beats a count-window (which would sort every partition) at any scale.
+  * frame (|distinct QI combos| rows, ≪ corpus); every audit reads only
+  * that frame, so the corpus is scanned once and shuffled at most once.
   */
 object Privacy {
-
-  /** Per-row suppression: QI columns of rows in classes smaller than k
-    * are replaced with NULL; a `suppressed` flag marks them. Non-QI
-    * columns pass through untouched. */
-  def kAnonymize(df: DataFrame, qiCols: Seq[String], k: Int): DataFrame = {
-    require(k >= 2, s"k must be >= 2, got $k")
-    require(qiCols.nonEmpty, "need at least one quasi-identifier column")
-    val classes = df.groupBy(qiCols.map(col): _*)
-      .agg(count(lit(1)).as("__class_n"))
-    val joined = df.join(classes, qiCols)
-    val keep = col("__class_n") >= k
-    val others = df.columns.filterNot(qiCols.contains)
-    val projected =
-      others.map(col) ++
-        qiCols.map(c => when(keep, col(c)).as(c)) :+
-        (!keep).as("suppressed")
-    joined.select(projected: _*)
-  }
 
   /** Risk audit: distribution of equivalence-class sizes — how many
     * classes and rows sit below each anonymity threshold. `classSize`

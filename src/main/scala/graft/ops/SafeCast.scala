@@ -55,7 +55,6 @@ object SafeCast {
   def safeSignedNumeric(c: Column, dt: DataType = DoubleType): Column =
     safeCast(c, dt, SignedNumericPattern)
   def safeInt(c: Column): Column = safeCast(c, IntegerType, IntPattern)
-  def safeLong(c: Column): Column = safeCast(c, LongType, IntPattern)
 
   /** Timestamp guard: prefix-check then try-cast — NULL (not an ANSI
     * error) on garbage suffixes AND on guard-passing-but-invalid values

@@ -31,15 +31,11 @@ object Sampling {
     if (math.abs(t - r) < 1e-3) r.toLong else t.toLong
   }
 
-  /** Uniform deterministic sample: keep rows where
-    * polyHash(key # seed) mod 1e6 < fraction·1e6. */
-  def hashSample(df: DataFrame, keyCol: Column, fraction: Double,
-                 seed: Long): DataFrame =
-    df.filter(sampleHash(keyCol, seed) < keepThreshold(fraction))
-
-  /** Per-stratum fractions (e.g. language rebalancing: downsample the
-    * dominant language, keep the tail). Strata not in `fractions` use
-    * `defaultFraction`. */
+  /** Deterministic per-stratum sample: keep rows where
+    * polyHash(key # seed) mod 1e6 < fraction·1e6, with a fraction per
+    * stratum (e.g. language rebalancing: downsample the dominant
+    * language, keep the tail). Strata not in `fractions` use
+    * `defaultFraction`; an empty map is a uniform sample. */
   def stratifiedHashSample(df: DataFrame, keyCol: Column, strataCol: Column,
                            fractions: Map[String, Double],
                            defaultFraction: Double, seed: Long): DataFrame = {

@@ -5,31 +5,14 @@ import org.apache.spark.sql.expressions.Aggregator
 import org.apache.spark.sql.functions._
 
 /** Approximate sketches — the scale tier of the exact aggregates the
-  * engine already ships (q44 exact distinct counts, q12 exact
-  * percentiles). At 100 TB an exact COUNT(DISTINCT) shuffles every
-  * distinct value; an HLL sketch shuffles a fixed few-KB buffer per
-  * group×partition, and approx percentiles likewise. Both built-ins are
+  * engine already ships (q44 exact distinct counts). At 100 TB an exact
+  * COUNT(DISTINCT) shuffles every distinct value; an HLL sketch shuffles
+  * a fixed few-KB buffer per group×partition. Sketches here are
   * mergeable partial aggregates (map-side combine for free) — the exact
   * forms remain the oracle-checkable tier, these are the ones a 1000-
   * executor job actually runs first.
   */
 object Sketches {
-
-  /** HLL++ distinct counts per group; `rsd` = target relative standard
-    * deviation (Spark default 0.05). */
-  def distinctCounts(df: DataFrame, groupCols: Seq[Column],
-                     valueCol: Column, rsd: Double = 0.05): DataFrame =
-    df.groupBy(groupCols: _*)
-      .agg(approx_count_distinct(valueCol, rsd).as("approx_distinct"))
-
-  /** Approximate percentiles per group; `accuracy` trades memory for
-    * error (err ≤ 1/accuracy of rank). */
-  def quantiles(df: DataFrame, groupCols: Seq[Column], valueCol: Column,
-                percentiles: Seq[Double],
-                accuracy: Int = 10000): DataFrame =
-    df.groupBy(groupCols: _*)
-      .agg(percentile_approx(valueCol,
-        array(percentiles.map(lit): _*), lit(accuracy)).as("approx_pcts"))
 
   /** Explicit bloom-prune for a selective join: build a bloom filter over
     * the dim side's keys (driver-held, ~`fpp`-sized bits), then filter the
@@ -75,7 +58,7 @@ object Sketches {
     // might_contain is likewise not exposed through the public function
     // registry — there is no public codegen path to probe a driver-built
     // BloomFilter. Cost of the closure vs the saving it buys is measured
-    // in tools/BloomBench (SCALE.md "Bloom prune"): the probe removes
+    // in SCALE.md's "Bloom prune" record: the probe removes
     // ~80% of fact-side shuffle volume at the q59 shape but only wins
     // wall-clock once shuffle is network-bound, so keep the automatic
     // runtime bloom filter as the default and reach for this only on a
@@ -145,9 +128,8 @@ object Sketches {
       org.apache.spark.sql.catalyst.encoders.ExpressionEncoder()
   }
 
-  /** The bottom-k estimator, shared by the batch Aggregator and the
-    * streaming state fold ([[graft.streaming.SketchStream]]). */
-  def kmvEstimate(set: java.util.TreeSet[java.lang.Long],
+  /** The bottom-k estimator the [[Kmv]] Aggregator finishes with. */
+  private def kmvEstimate(set: java.util.TreeSet[java.lang.Long],
                   k: Int): KmvState =
     if (set.size < k) KmvState(None, set.size, set.size.toLong)
     else {

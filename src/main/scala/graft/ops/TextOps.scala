@@ -44,10 +44,6 @@ object TextOps {
         slice(t, lit(2), size(t) - 1),
         (a, b) => concat_ws(" ", a, b)))
 
-  /** Convenience form over raw text — only for single-row/spec use; query
-    * paths should project [[tokens]] once and use [[bigramsFromTokens]]. */
-  def bigramStrings(c: Column): Column = bigramsFromTokens(tokens(c))
-
   /** Corpus text normalization: accent-fold (native [[graft.functions
     * .AccentFold]] expression — NFD + strip combining marks), lowercase,
     * collapse runs of whitespace to single spaces, trim. The standard
@@ -72,7 +68,8 @@ object TextOps {
   /** Polynomial rolling hash of a string: fold h = (h*31 + codepoint) % M
     * over its characters. Dispatches to the native codegen'd
     * [[graft.functions.PolyHash]] expression — sessions must register
-    * [[graft.GraftExtensions]] (Sessions does). */
+    * [[graft.GraftExtensions]] (Sessions does). TextOpsSpec cross-checks
+    * it against the interpreted split/aggregate form of the same fold. */
   def polyHash(c: Column): Column = call_function("poly_hash", c)
 
   /** Wide two-plane string hash: polyHash(s)·2^31 + a second independent
@@ -83,14 +80,6 @@ object TextOps {
     * remains the 30-bit tier for arithmetic that needs small values
     * (minhash affine family, mod-bucket features). */
   def polyHashWide(c: Column): Column = call_function("poly_hash_wide", c)
-
-  /** Lambda reference form of the same fold — the spec cross-checks the
-    * native expression against it. */
-  def polyHashLambda(c: Column): Column =
-    aggregate(
-      filter(split(c, ""), ch => ch =!= ""),
-      lit(0L),
-      (h, ch) => (h * 31 + ascii(ch)) % HashMod)
 
   /** Affine rehash family for minhash: hash_i(h) = (a_i·h + b_i) % M with
     * per-i coefficients a_i = (K1·(i+1)) % M, b_i = (K2·(i+1)) % M mixed
@@ -109,12 +98,6 @@ object TextOps {
     val b = (lit(2246822519L) * (i + 1)) % HashMod
     (a * h + b) % HashMod
   }
-
-  /** BPE-ish subword count: words + count of intra-word case/digit
-    * transitions, a cheap stand-in for a tokenizer's subword splits. */
-  def subwordCount(c: Column): Column =
-    size(filter(split(c, "(?=[A-Z])|(?<=[a-z])(?=[0-9])|\\s+"),
-      t => t =!= ""))
 
   /** Punctuation character count. */
   def punctCount(c: Column): Column =
@@ -743,19 +726,6 @@ object TextOps {
         sum(col("tf")).as("term_freq"),
         sort_array(collect_list(when(col("rn") <= sampleK, col("doc_id"))))
           .as("sample_docs"))
-  }
-
-  /** Lambda reference form of [[langGuess]]'s scoring (interpreted HOFs)
-    * — retained as the spec cross-check for the native count_in path. */
-  def langGuessLambda(text: Column): Column = {
-    val tk = tokens(text)
-    val scored = LangMarkers.map { case (lang, markers) =>
-      struct(size(filter(tk, t => t.isin(markers.map(lit): _*))).as("score"),
-             lit(lang).as("lang"))
-    }
-    val best = scored.reduceLeft((a, b) =>
-      when(b.getField("score") > a.getField("score"), b).otherwise(a))
-    best.getField("lang")
   }
 
   /** Skip-gram co-occurrence counts — the (center, context) pair stream

@@ -17,19 +17,24 @@ import org.apache.spark.sql.types.DoubleType
 object VectorOps {
 
   /** Σ aᵢ·bᵢ in double, sequential fold (deterministic). Dispatches to the
-    * native codegen'd [[graft.functions.VecDot]]; the lambda form below is
-    * the reference implementation the spec cross-checks. */
+    * native codegen'd [[graft.functions.VecDot]]; VectorOpsSpec cross-checks
+    * it against the interpreted zip_with/aggregate form of the same fold. */
   def dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
-
-  /** Interpreted lambda form of the identical fold (spec cross-check). */
-  def dotLambda(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
-      lit(0.0), (acc, x) => acc + x)
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
+  /** Cosine similarity. A zero vector has no direction, so any cosine
+    * involving one is NaN, never an error: ANSI division would throw
+    * DIVIDE_BY_ZERO, while NaN is what the DuckDB oracle's IEEE 0/0
+    * yields and what the driver twins ([[mmrRerank]]'s) already assume.
+    * NaN sorts as the largest double in both engines' ORDER BY, so a
+    * zero vector ranks first in a descending top-k on either side. */
   def cosine(a: Column, b: Column): Column =
-    dot(a, b) / (norm(a) * norm(b))
+    cosineOf(dot(a, b), norm(a), norm(b))
+
+  private def cosineOf(dotAB: Column, normA: Column, normB: Column): Column =
+    when(normA === 0.0 || normB === 0.0, lit(Double.NaN))
+      .otherwise(dotAB / (normA * normB))
 
   /** Brute-force exact top-k cosine neighbors of each query vector.
     * `queries` is expected small (it is broadcast); the corpus side never
@@ -45,17 +50,6 @@ object VectorOps {
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("int").as("rank"),
         round(col("cos"), 6).as("cos_sim"))
-
-  /** Window-sort formulation of the same top-k (spec cross-check; the
-    * Aggregator path above is the scale choice). */
-  def bruteForceTopKWindow(queries: DataFrame, corpus: DataFrame, k: Int,
-                           idCol: String = "vec_id",
-                           vecCol: String = "embedding"): DataFrame =
-    Dedup.firstRowPerGroupN(bruteForceScores(queries, corpus, idCol, vecCol),
-        Seq(col("query_id")),
-        Seq(col("cos").desc, col("neighbor_id").asc), k)
-      .select(col("query_id"), col("neighbor_id"),
-        col("__rn").as("rank"), round(col("cos"), 6).as("cos_sim"))
 
   /** Maximum-inner-product search (MIPS): top-k by raw dot product, NOT
     * cosine — the retrieval objective when magnitudes carry signal
@@ -105,8 +99,8 @@ object VectorOps {
       .withColumn("__cn", norm(col("cv")))
     val scored = broadcast(q).join(c,
         col("query_label") =!= col("neg_label"))
-      .withColumn("cos",
-        dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")))
+      .withColumn("cos", cosineOf(dot(col("qv"), col("cv")), col("__qn"),
+        col("__cn")))
     val top = TopK.topKPerGroup(scored, "query_id", "neighbor_id", "cos", k)
     val qLabels = queries.select(col(idCol).as("query_id"),
       col(labelCol).as("query_label"))
@@ -119,7 +113,7 @@ object VectorOps {
         round(col("cos"), 6).as("cos_sim"))
   }
 
-  private def bruteForceScores(queries: DataFrame, corpus: DataFrame,
+  private[graft] def bruteForceScores(queries: DataFrame, corpus: DataFrame,
                                idCol: String, vecCol: String): DataFrame = {
     // norms precomputed ONCE PER SIDE: cosine(qv, cv) inline would fold
     // three vec_dots per (query, corpus) pair — each corpus self-dot
@@ -131,8 +125,8 @@ object VectorOps {
     val c = corpus.select(col(idCol).as("neighbor_id"), col(vecCol).as("cv"))
       .withColumn("__cn", norm(col("cv")))
     broadcast(q).join(c, col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")))
+      .withColumn("cos", cosineOf(dot(col("qv"), col("cv")), col("__qn"),
+        col("__cn")))
       .drop("__qn", "__cn")
   }
 
@@ -193,11 +187,11 @@ object VectorOps {
     srpSignature(col(vecCol), numPlanes,
       df.select(size(col(vecCol))).head().getInt(0))
 
-  /** MEAN-CENTERED SRP signature — what the production bucket operators
-    * ([[srpNearDupPairs]], [[mutualNeighbors]]) hash on: the sign
-    * projections of v − μ, with μ the exact-decimal per-dimension mean
-    * ([[dimensionMeans]], collected driver-side — d values, codebook-
-    * sized) baked into the expression as a literal array.
+  /** MEAN-CENTERING for the SRP bucket operators ([[srpNearDupPairs]],
+    * [[mutualNeighbors]]), which hash on the sign projections of v − μ
+    * ([[srpSignature]] of this column), with μ the exact-decimal
+    * per-dimension mean ([[dimensionMeans]], collected driver-side — d
+    * values, codebook- sized) baked into the expression as a literal array.
     *
     * WHY CENTERING IS THE SIZING RULE'S OTHER HALF: [[autoPlaneCount]]
     * assumes each plane splits a random pair with probability 1/2, so
@@ -215,20 +209,14 @@ object VectorOps {
     * x−μ ≈ y−μ, so the centered cosine stays ≈ 1 unless both vectors sit
     * within noise of μ itself. Cross-engine exactness: μ uses the proven
     * decimal-mean pattern (q34/q104 oracles), the subtraction and fold are
-    * the same IEEE double ops in the same order on both engines. */
-  def srpSignatureCentered(df: DataFrame, vecCol: String,
-                           numPlanes: Int): Column = {
-    val (centered, dim) = centeredColumn(df, vecCol)
-    srpSignature(centered, numPlanes, dim)
-  }
-
-  /** The centering expression (v − μ as array<double>) + the corpus
-    * dimensionality, shared by [[srpSignatureCentered]] and the bucket
-    * operators. NOTE for operators: materialize this ONCE per row in a
-    * child project (select it as a column, then compute signatures from
-    * the attribute) — zip_with is a non-codegen higher-order function,
-    * and inlining it into every plane projection re-evaluates it per
-    * dot (measured 2.4× on the banded operator at sf1).
+    * the same IEEE double ops in the same order on both engines.
+    *
+    * Returns the centering expression (v − μ as array<double>) + the
+    * corpus dimensionality. NOTE for operators: materialize this ONCE per row
+    * in a child project (select it as a column, then compute signatures from
+    * the attribute) — zip_with is a non-codegen higher-order function, and
+    * inlining it into every plane projection re-evaluates it per dot
+    * (measured 2.4× on the banded operator at sf1).
     *
     * FIXED-DIMENSION CONTRACT (ADVICE r9): every vector must have
     * μ.length elements — the corpus dimensionality is pinned by the
@@ -239,7 +227,7 @@ object VectorOps {
     * divergence. Ragged vectors are out of contract for the whole ANN
     * tier (srpSignatureAuto pins dim from the head row); callers with
     * untrusted input should length-filter before bucketing. */
-  private def centeredColumn(df: DataFrame, vecCol: String)
+  private[graft] def centeredColumn(df: DataFrame, vecCol: String)
       : (Column, Int) = {
     val mu = dimensionMeans(df, vecCol)
     require(mu.nonEmpty, "centered SRP: empty corpus")
@@ -353,48 +341,12 @@ object VectorOps {
       .withColumn("__qn", norm(col("qv")))
     val scored = queryProbes.join(corpusLists, "list_id")
       .filter(col("query_id") =!= col("neighbor_id"))
-      .withColumn("cos",
-        dot(col("qv"), col("cv")) / (col("__qn") * col("__cn")))
+      .withColumn("cos", cosineOf(dot(col("qv"), col("cv")), col("__qn"),
+        col("__cn")))
     TopK.topKPerGroup(scored, "query_id", "neighbor_id", "cos", k)
       .select(col("query_id"), col("neighbor_id"),
         col("rank").cast("int").as("rank"),
         round(col("cos"), 6).as("cos_sim"))
-  }
-
-  /** Incremental IVF index maintenance — the daily-drop shape for ANN
-    * (the vector twin of [[CorpusPipeline.append]]): assign ONLY the
-    * increment to the existing coarse codebook and append. The standing
-    * index (rows of (id, vec, list_id) as produced by
-    * [[assignToCentroids]]) is never rescanned or reassigned — at 100 TB
-    * of embeddings a drop costs O(|increment|) assignment work plus an
-    * id anti-join that shuffles ids, not vectors. Ids already present
-    * keep their existing row (first-writer-wins, idempotent re-runs).
-    *
-    * Because per-row assignment is deterministic, the appended index is
-    * row-identical to re-assigning the whole union from scratch
-    * (spec-asserted) — append never degrades search vs a full rebuild on
-    * the same codebook. What DOES drift is codebook fit: the returned
-    * report carries per-list increment counts so the caller can watch
-    * skew build and schedule a [[kmeansFit]] retrain. */
-  def ivfAppend(index: DataFrame, centroids: DataFrame,
-                incoming: DataFrame, idCol: String = "vec_id",
-                vecCol: String = "embedding")
-      : (DataFrame, DataFrame) = {
-    val fresh = incoming.join(index.select(col(idCol)), Seq(idCol),
-      "left_anti")
-    // eager localCheckpoint, not persist: the documented daily-drop flow
-    // consumes BOTH outputs (write the unioned index AND collect the skew
-    // report) — without materialization each action re-runs the anti-join
-    // plus the k-distance centroid scoring of every incoming vector, the
-    // dominant cost of the append. A persist would leave a session-
-    // lifetime CacheManager entry per daily append; checkpoint blocks are
-    // released by the ContextCleaner once the returned frames are
-    // unreferenced (same accumulation argument as DenseId).
-    val assigned = assignToCentroids(fresh, centroids, idCol, vecCol)
-      .localCheckpoint(true)
-    val report = assigned.groupBy(col("list_id"))
-      .agg(count(lit(1)).as("n_appended"))
-    (index.unionByName(assigned), report)
   }
 
   /** Lloyd's k-means for training the IVF coarse codebook — the piece
@@ -436,7 +388,7 @@ object VectorOps {
     // persisted for the iteration: seeds + every Lloyd round re-reads
     // this projection, and when `vecs` is a derived frame (filtered or
     // deduped embeddings) each action would otherwise re-run its whole
-    // upstream cascade — iters+1 times, ×m inside pqTrain
+    // upstream cascade — iters+1 times
     val base = vecs.select(col(idCol), col(vecCol))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val seeds = base
@@ -477,33 +429,6 @@ object VectorOps {
     }
     base.unpersist()
     toDf(centroids)
-  }
-
-  /** Product-quantization codebooks: split the `dim`-dimensional space
-    * into `m` contiguous subspaces (dim % m == 0) and train a k-code
-    * [[kmeansFit]] codebook per subspace. Returns one storable frame
-    * (subspace, centroid_id, centroid).
-    *
-    * PQ is the memory side of the canonical billion-scale ANN design
-    * (IVF for list pruning + PQ for in-list scoring): a dim-float vector
-    * compresses to m small codes, and approximate dot products need only
-    * the codes plus a per-query lookup table — the corpus embeddings
-    * themselves never stream through the search. */
-  def pqTrain(vecs: DataFrame, m: Int, k: Int, iters: Int,
-              idCol: String = "vec_id",
-              vecCol: String = "embedding",
-              seed: Long = 7L): DataFrame = {
-    val dim = vecs.select(size(col(vecCol))).head().getInt(0)
-    require(dim % m == 0, s"dim $dim not divisible by m $m")
-    val dsub = dim / m
-    (0 until m).map { i =>
-      val sub = vecs.select(col(idCol),
-        slice(col(vecCol), i * dsub + 1, dsub).as("__sub"))
-      kmeansFit(sub, k, iters, idCol, "__sub", seed = seed + i,
-          metric = "l2")
-        .withColumn("subspace", lit(i))
-    }.reduce(_ unionByName _)
-      .select(col("subspace"), col("centroid_id"), col("centroid"))
   }
 
   /** Encode each vector as m (subspace, code) rows: the L2-nearest
@@ -629,10 +554,9 @@ object VectorOps {
       minCos, idCol, vecCol)
 
   /** [[semDedup]] over a standing assigned index — rows of
-    * (id, vec, list_id) as produced by [[assignToCentroids]] /
-    * maintained by [[ivfAppend]]. At 100 TB the index already exists
-    * (it IS the ANN index); dedup then costs one cluster-keyed
-    * self-join, no reassignment.
+    * (id, vec, list_id) as produced by [[assignToCentroids]]. At 100 TB the
+    * index already exists (it IS the ANN index); dedup then costs one
+    * cluster-keyed self-join, no reassignment.
     *
     * The index feeds both sides of that self-join, so it is
     * materialized per the [[NearDup.candidatePairs]] policy: eager
@@ -658,8 +582,8 @@ object VectorOps {
       col(vecCol).as("__bv"), col("__n").as("__bn"))
     val anchors = l.join(r, "list_id")
       .filter(col("__a_id") < col("__b_id"))
-      .filter(dot(col("__av"), col("__bv")) /
-        (col("__an") * col("__bn")) >= minCos)
+      .filter(cosineOf(dot(col("__av"), col("__bv")), col("__an"),
+        col("__bn")) >= minCos)
       .groupBy(col("__b_id"))
       .agg(min(col("__a_id")).as("anchor_id"))
       .withColumnRenamed("__b_id", idCol)
@@ -669,7 +593,7 @@ object VectorOps {
   }
 
   /** Candidate near-dup pairs from shared MEAN-CENTERED SRP buckets
-    * ([[srpSignatureCentered]] — centering keeps candidate volume at the
+    * ([[centeredColumn]] — centering keeps candidate volume at the
     * sizing rule's n·targetBucket on one-orthant corpora), verified with
     * exact cosine ≥ minCos on the ORIGINAL vectors. */
   def srpNearDupPairs(vecs: DataFrame, numPlanes: Int, minCos: Double,
@@ -768,7 +692,7 @@ object VectorOps {
     * centered cosine ≥ `designCos` is emitted with probability ≥
     * `recallTarget` at ANY corpus size. Planes-per-band stays
     * [[autoPlaneCount]] (each band is a linear-volume bucket join);
-    * the band count grows with n via [[srpBandCount]] to pay for the
+    * the band count grows with n via [[srpBandCountForPlanes]] to pay for the
     * per-band recall that finer buckets give up — the classic LSH
     * n^(1+ρ) trade (Charikar STOC'02 / Indyk–Motwani), with ρ =
     * −log₂(1 − acos(designCos)/π) ≈ 0.20 at the 0.92 default.
@@ -814,22 +738,13 @@ object VectorOps {
 
   /** The banded tier's declared recall contract, default half 1: pairs
     * at CENTERED cosine ≥ this are the ones the near-dup stage must not
-    * lose. 0.92 sits at the top of the near-duplicate regime (the
-    * SrpRecall planted twins land ≈ 0.92 centered). */
+    * lose. 0.92 sits at the top of the near-duplicate regime (planted
+    * twins land ≈ 0.92 centered; SCALE.md, Round-10 recall record). */
   val DefaultDesignCos = 0.92
 
   /** Contract half 2: minimum probability that a ≥ designCos pair
     * survives bucketing, at any corpus size. */
   val DefaultRecallTarget = 0.90
-
-  /** Band count holding the recall contract at corpus size n (planes
-    * per band from [[autoPlaneCount]]). See [[srpBandCountForPlanes]]. */
-  def srpBandCount(n: Long, designCos: Double = DefaultDesignCos,
-                   recallTarget: Double = DefaultRecallTarget,
-                   targetBucket: Int = DefaultTargetBucket,
-                   minPlanes: Int = DefaultMinPlanes): Int =
-    srpBandCountForPlanes(autoPlaneCount(n, targetBucket, minPlanes),
-      designCos, recallTarget)
 
   /** Smallest band count b with 1 − (1 − q^p)^b ≥ recallTarget for
     * q = 1 − acos(designCos)/π (a plane splits a designCos pair with
@@ -955,54 +870,6 @@ object VectorOps {
         col("__cos")))
   }
 
-  /** Best cross-label partner for a RESTRICTED set of source ids —
-    * per-source identical to what [[mutualNeighbors]] computes, at
-    * |srcIds|·bands·bucket cost instead of the full n·bands·bucket
-    * candidate mass. The measurement surface for SAMPLED miner-recall
-    * (tools/MinerRecall past the box's temp-disk ceiling): the banded
-    * tier's recall contract is per-pair, so recall over a hash-sample
-    * of planted pairs estimates the full-run recall unbiasedly — and a
-    * pair (v, t) is mined iff best(v) = t AND best(t) = v, which needs
-    * only v's and t's OWN candidate slivers.
-    *
-    * Faithfulness: signatures are centered over the FULL corpus and a
-    * source's candidate set is every cross-label vector sharing any
-    * (band, sig) bucket with it — exactly the full tier's per-source
-    * candidates; the argmax uses the same rounded-cosine/id-tiebreak
-    * rank. Returns (src, best_dst, cos_sim). */
-  def bestCrossLabelPartners(vecs: DataFrame, srcIds: DataFrame,
-                             bands: Int, planesPerBand: Int,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding",
-                             labelCol: String = "label"): DataFrame = {
-    val sigs = bandedSigRows(vecs, bands, planesPerBand, idCol, vecCol,
-      labelCol)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    graft.core.OpCache.renew("VectorOps.bestCrossLabelPartners", sigs)
-    val srcSigs = sigs.join(srcIds.select(col(idCol)), Seq(idCol),
-      "left_semi")
-    val cand = srcSigs.select(col(idCol).as("__src"),
-        col(labelCol).as("__sl"), col("band"), col("sig"))
-      .join(sigs.select(col(idCol).as("__dst"), col(labelCol).as("__dl"),
-        col("band"), col("sig")), Seq("band", "sig"))
-      .filter(col("__sl") =!= col("__dl"))
-      .select(col("__src"), col("__dst")).distinct()
-    val scored = cand
-      .join(vecs.select(col(idCol).as("__src"), col(vecCol).as("__vs")),
-        "__src")
-      .join(vecs.select(col(idCol).as("__dst"), col(vecCol).as("__vd")),
-        "__dst")
-      .select(col("__src"), col("__dst"),
-        round(cosine(col("__vs"), col("__vd")), 6).as("__cos"))
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("__src"))
-      .orderBy(col("__cos").desc, col("__dst").asc)
-    scored.withColumn("__rn", row_number().over(w))
-      .filter(col("__rn") === 1)
-      .select(col("__src").as("src"), col("__dst").as("best_dst"),
-        col("__cos").as("cos_sim"))
-  }
-
   /** Mutual-nearest-neighbor pairs ACROSS groups — the bitext/alignment
     * miner: for each vector, its best cross-`labelCol` partner among
     * banded-SRP candidates ([[bandedCrossLabelCandidates]]); keep only
@@ -1012,16 +879,15 @@ object VectorOps {
     * every source with some target.
     *
     * Scale shape: candidates come from the banded bucket join (cost ∝
-    * b · Σ bucket², never corpus²; recall flat by the [[srpBandCount]]
-    * contract instead of decaying with n — r10 verdict #1), the
-    * per-vector argmax is a WindowGroupLimit-prunable rank-1 window
-    * over candidate slivers, and mutuality is ONE canonical-pair count
-    * aggregate over the vector-domain best-edge frame — (a,b) is mutual
-    * iff the unordered pair appears twice — so the candidate cascade
-    * runs exactly once (a best-vs-flipped self-join would replay it).
-    * Argmax ranks on cosine ROUNDED to 6 with an id tiebreak (the
-    * [[assignToCentroids]] discipline), so the pick is engine- and
-    * partitioning-invariant. */
+    * b · Σ bucket², never corpus²; recall flat by the
+    * [[srpBandCountForPlanes]] contract instead of decaying with n — r10
+    * verdict #1), the per-vector argmax is a WindowGroupLimit-prunable rank-1
+    * window over candidate slivers, and mutuality is ONE canonical-pair count
+    * aggregate over the vector-domain best-edge frame — (a,b) is mutual iff
+    * the unordered pair appears twice — so the candidate cascade runs exactly
+    * once (a best-vs-flipped self-join would replay it). Argmax ranks on
+    * cosine ROUNDED to 6 with an id tiebreak (the [[assignToCentroids]]
+    * discipline), so the pick is engine- and partitioning-invariant. */
   def mutualNeighbors(vecs: DataFrame, bands: Int, planesPerBand: Int,
                       idCol: String = "vec_id",
                       vecCol: String = "embedding",

@@ -104,7 +104,7 @@ object TextOracles {
 
   val ShingleCtes: String = shingleCtes(3)
 
-  /** + 16 minhashes per doc (mirrors NearDup.minhashRows). */
+  /** + 16 minhashes per doc (mirrors NearDup.signatureColumn). */
   val MinhashCtes: String =
     s"""$ShingleCtes,
        |mh AS (SELECT doc_id, i,
@@ -154,7 +154,7 @@ object TextOracles {
   }
 
   /** Winnowing CTE chain (q123/q124), DuckDB twin of
-    * [[graft.ops.NearDup.winnowFingerprints]]: stride-1 wide k-gram hash
+    * [[graft.ops.NearDup.winnowSelection]]: stride-1 wide k-gram hash
     * stream with 0-based window-start pos, keys as STRUCT(h, np) with
     * np = 2^30−1−pos so list_min per sliding window is "smallest hash,
     * rightmost position" (struct comparison is field-lexicographic on

@@ -208,10 +208,9 @@ object TextQueries {
   def qExciseSpans(s: SparkSession, dir: String): DataFrame =
     NearDup.exciseSpans(Tables.documents(s, dir), "doc_id", "text", SpanN)
 
-  /** Winnowing fingerprint sets ([[NearDup.winnowFingerprints]]), folded
-    * to one row per doc (count / min / split-sum of selected hashes) for
-    * a compact verifiable result; the raw (doc, pos, h) rows are the
-    * operator surface.
+  /** Winnowing fingerprint sets ([[NearDup.winnowFingerprintStats]]),
+    * folded to one row per doc (count / min / split-sum of selected
+    * hashes) for a compact verifiable result.
     *
     * The hash checksum is split into hi/lo halves so every projected
     * column stays int64-exact: the wide hashes are ≈2^61, so a plain
@@ -240,7 +239,7 @@ object TextQueries {
   /** MinHash signatures (relational form), folded to one row per doc for
     * a compact verifiable result: sum and min of the 16 minhashes. The
     * per-doc signature is row-local state ([[NearDup.signatureColumn]],
-    * spec-pinned bit-identical to the minhashRows aggregation), so the
+    * spec-pinned bit-identical to the batch minhash aggregation), so the
     * fold happens IN-ROW — zero shuffle (r14, guide §2.4). Null-text
     * docs have no signature (element test, like lshBandsFromDocs). */
   def qMinhashSig(s: SparkSession, dir: String): DataFrame =
@@ -569,7 +568,7 @@ object TextQueries {
   def qTfIdfTerms(s: SparkSession, dir: String): DataFrame =
     TextOps.tfidfTopTerms(Tables.documents(s, dir), "doc_id", "text", 3)
 
-  /** Incremental corpus append ([[graft.ops.CorpusPipeline.append]]),
+  /** Incremental corpus append ([[graft.ops.CorpusPipeline.appendDocs]]),
     * oracle-gated end to end: docs ≥ 100 stand in for the standing
     * corpus, < 100 for the daily drop — the increment stays bounded
     * while the corpus scales with sf, which is the shape the operator

@@ -56,7 +56,7 @@ object VectorOracles {
 
   /** CTE mapping the auto-sized plane count (`pl.planes` from
     * [[planesCte]]) to the recall-contract band count — the oracle twin
-    * of [[graft.ops.VectorOps.srpBandCount]]. The transcendental math
+    * of [[graft.ops.VectorOps.srpBandCountForPlanes]]. The transcendental math
     * (acos/pow/log) runs ONCE, in the engine's own
     * [[graft.ops.VectorOps.srpBandCountForPlanes]], and this CTE renders
     * its Int output per possible plane count as SQL CASE literals — the
@@ -88,8 +88,10 @@ object VectorOracles {
        |          unnest(range(1, len(embedding) + 1)) AS i FROM $table) z
        |  GROUP BY i) g)""".stripMargin
 
-  /** [[srpSigDyn]] over the MEAN-CENTERED vector — the oracle twin of
-    * [[graft.ops.VectorOps.srpSignatureCentered]]: each projection term
+  /** [[srpSig]] with the plane count as a COLUMN reference (`planes`,
+    * from [[planesCte]]) over the MEAN-CENTERED vector — the oracle twin
+    * of [[graft.ops.VectorOps.srpSignature]] over
+    * [[graft.ops.VectorOps.centeredColumn]]: each projection term
     * is (v[i] − μ[i])·sign, the identical IEEE double ops in the same
     * sequential fold as the engine's zip_with subtraction + vec_dot.
     * `mu` is the list column from [[muCte]] (cross-joined). */
@@ -123,22 +125,6 @@ object VectorOracles {
       s"+ 2246822519 * ($band * $planes + k + 1) % 1000000007) % 1000000007) % 2 = 0 " +
       s"THEN 1.0 ELSE -1.0 END))), (x, y) -> x + y) > 0 " +
       s"THEN (CAST(1 AS BIGINT) << k) ELSE CAST(0 AS BIGINT) END)), " +
-      s"(x, y) -> x + y)"
-
-  /** [[srpSig]] with the plane count as a COLUMN reference (`planes`,
-    * from [[planesCte]]): the bit terms build via a list comprehension
-    * over range(0, planes) instead of compile-time unrolling — same
-    * bit layout, same per-plane projection fold. */
-  def srpSigDyn(vec: String, planes: String = "planes"): String =
-    s"list_reduce(list_prepend(CAST(0 AS BIGINT), " +
-      s"list_transform(range(0, $planes), j -> " +
-      s"CASE WHEN list_reduce(list_prepend(CAST(0 AS DOUBLE), " +
-      s"list_transform(range(1, len($vec) + 1), " +
-      s"i -> CAST($vec[i] AS DOUBLE) * " +
-      s"(CASE WHEN (((2654435761 * (j + 1) % 1000000007) * i " +
-      s"+ 2246822519 * (j + 1) % 1000000007) % 1000000007) % 2 = 0 " +
-      s"THEN 1.0 ELSE -1.0 END))), (x, y) -> x + y) > 0 " +
-      s"THEN (CAST(1 AS BIGINT) << j) ELSE CAST(0 AS BIGINT) END)), " +
       s"(x, y) -> x + y)"
 
   /** Shared CTE chain for the PQ-ADC tier (q65/q102): label-mean

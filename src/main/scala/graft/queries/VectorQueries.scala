@@ -63,10 +63,10 @@ object VectorQueries {
 
   /** q263: BANDED SRP near-dup pairs ([[VectorOps.srpBandedNearDupPairsAuto]],
     * planes-per-band auto-sized, band count from the recall contract
-    * [[VectorOps.srpBandCount]]) — the high-recall multiple-hash-table
-    * form: a pair is a candidate when it collides in ANY band, so the
-    * result is a SUPERSET of q33's single-table pairs (band 0 IS q33's
-    * table). The oracle derives planes from COUNT(*) and bands from the
+    * [[VectorOps.srpBandCountForPlanes]]) — the high-recall
+    * multiple-hash-table form: a pair is a candidate when it collides in ANY
+    * band, so the result is a SUPERSET of q33's single-table pairs (band 0 IS
+    * q33's table). The oracle derives planes from COUNT(*) and bands from the
     * plane count via the same literal-rendered law. */
   def qBandedSrpNearDup(s: SparkSession, dir: String): DataFrame =
     VectorOps.srpBandedNearDupPairsAuto(Tables.embeddings(s, dir), 0.2)
@@ -120,8 +120,8 @@ object VectorQueries {
     * L2-encoded to (subspace, code) rows, and the top-5 per query ranks
     * by the summed lookup-table parts. m = 2 keeps the per-group double
     * sum commutative (two addends), so scores are bit-identical across
-    * engines; the trained-codebook path ([[VectorOps.pqTrain]]) is the
-    * same encode/search code, spec-gated. */
+    * engines; codebooks trained with [[VectorOps.kmeansFit]] go through
+    * the same encode/search code, spec-gated. */
   def qPqAdc(s: SparkSession, dir: String): DataFrame = {
     val emb = Tables.embeddings(s, dir)
     val m = 2

@@ -104,31 +104,6 @@ object EventStreams extends Serializable {
         count(lit(1)).as("n_events"))
   }
 
-  /** Stream-stream enrichment join: pair each left row with the right
-    * rows of the same key whose `rightTs` falls in
-    * [leftTs − horizon, leftTs] — "purchases joined to the signups that
-    * preceded them within an hour". Uses Spark's native stream-stream
-    * inner join with a time-range condition; BOTH sides carry watermarks,
-    * so the join state store retains only rows inside the horizon
-    * (O(horizon·rate), not O(stream)).
-    *
-    * The same function runs on batch DataFrames (withWatermark is a no-op
-    * there) — EventStreamsSpec asserts batch/stream parity through real
-    * micro-batches. Timestamp columns must be distinctly named. */
-  def joinWithinHorizon(left: DataFrame, right: DataFrame,
-                        key: String, leftTs: String, rightTs: String,
-                        horizon: String = "1 hour"): DataFrame = {
-    require(leftTs != rightTs, "rename one ts column — names must differ")
-    val l = left.withWatermark(leftTs, horizon)
-    val r = right.withWatermark(rightTs, horizon)
-      .withColumnRenamed(key, "__rkey")
-    l.join(r,
-      col(key) === col("__rkey") &&
-        col(rightTs) <= col(leftTs) &&
-        col(rightTs) >= col(leftTs) - expr(s"INTERVAL $horizon"))
-      .drop("__rkey")
-  }
-
   case class Event(ts: java.sql.Timestamp, user_id: Long)
   case class SessionState(start: Long, last: Long, n: Long)
 
@@ -205,47 +180,4 @@ object EventStreams extends Serializable {
       .flatMapGroupsWithState(OutputMode.Append,
         GroupStateTimeout.EventTimeTimeout)(update)
   }
-
-  case class Keyed(key: String, ts: java.sql.Timestamp, id: Long)
-  case class QuotaState(n: Long)
-
-  /** Streaming per-key quota: the first `cap` rows per key (event-time
-    * order within each micro-batch, (ts, id) tiebreak) pass; everything
-    * after is dropped forever. The continuous form of the q116 source-cap
-    * curation rule, for ingest-time enforcement — stop *storing* a
-    * dominating source rather than filtering it later.
-    *
-    * State is one counter per key (constant, never row data). Accepted
-    * counts saturate at `cap`, so replayed micro-batches can only re-emit
-    * rows that were already inside the quota — at-least-once delivery
-    * duplicates output rows but never widens the quota (same redelivery
-    * posture as the content-dedup stream). Cross-batch arrival order is
-    * processing order, as with any online quota; batch parity is exact
-    * when batches arrive in event-time order (spec-pinned). */
-  def quotaStream(rows: DataFrame, cap: Int): Dataset[Keyed] = {
-    require(cap >= 1, s"cap must be >= 1, got $cap")
-    val spark = rows.sparkSession
-    import spark.implicits._
-
-    def update(key: String, it: Iterator[Keyed],
-               state: GroupState[QuotaState]): Iterator[Keyed] = {
-      val sofar = state.getOption.map(_.n).getOrElse(0L)
-      val room = (cap - sofar).max(0L).toInt
-      val take = it.toSeq.sortBy(k => (toUs(k.ts), k.id)).take(room)
-      if (take.nonEmpty) state.update(QuotaState(sofar + take.size))
-      take.iterator
-    }
-
-    rows.select(col("key"), col("ts"), col("id")).as[Keyed]
-      .groupByKey(_.key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.NoTimeout)(update)
-  }
-
-  /** Batch twin of [[quotaStream]]: rank by (ts, id) per key, keep ≤ cap. */
-  def quotaBatch(rows: DataFrame, cap: Int): DataFrame =
-    graft.ops.Dedup.firstRowPerGroupN(rows.select(col("key"), col("ts"),
-        col("id")),
-      Seq(col("key")), Seq(col("ts").asc, col("id").asc), cap)
-      .drop("__rn")
 }

@@ -3,9 +3,9 @@ package org.apache.spark.graftspark
 import org.apache.spark.SparkContext
 
 /** Compile-checked accessor for the `private[spark]` listener bus.
-  * Benchmark harnesses that read SparkListener-accumulated metrics
-  * (e.g. [[graft.tools.ParDedupBench]]'s shuffle-bytes counters) must
-  * drain the asynchronous bus before reading, or a slow bus can deliver
+  * Harnesses and specs that read SparkListener-accumulated metrics
+  * (job counts, shuffle bytes) must drain the asynchronous bus before
+  * reading, or a slow bus can deliver
   * SparkListenerStageCompleted events after the read — a fixed
   * Thread.sleep is a race (ADVICE r10). This lives under
   * org.apache.spark.* solely to satisfy the `private[spark]` scope; it

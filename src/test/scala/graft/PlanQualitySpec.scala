@@ -106,14 +106,6 @@ class PlanQualitySpec extends SparkSpecBase {
     assert(!p.contains("CartesianProduct"), p)
   }
 
-  test("minhash aggregation is partial (map-side combine) before shuffle") {
-    val sh = graft.ops.NearDup.shingleRows(
-      graft.core.Tables.documents(spark, sf), "doc_id", "text", 3)
-    val p = plan(graft.ops.NearDup.minhashRows(sh, "doc_id", 16))
-    // partial_min markers appear in the pre-shuffle HashAggregate
-    assert(p.contains("partial_min") || p.contains("partial_"), p)
-  }
-
   test("interval merge plans one exchange; both windows share its sort") {
     val p = plan(graft.queries.Relational.q52IntervalMerge(spark, sf))
     assert("Exchange hashpartitioning".r.findAllIn(p).size == 1, p)
@@ -129,7 +121,8 @@ class PlanQualitySpec extends SparkSpecBase {
 
   test("hash sampling is a scan-level filter — no shuffle, no UDF") {
     val docs = graft.core.Tables.documents(spark, sf)
-    val p = plan(graft.ops.Sampling.hashSample(docs, col("doc_id"), 0.5, 1))
+    val p = plan(graft.ops.Sampling.stratifiedHashSample(docs, col("doc_id"),
+      col("lang"), Map("en" -> 0.25), 0.5, 1))
     assert(!p.contains("Exchange"), p)
     assert(!p.toLowerCase.contains("batchevalpython") &&
       !p.contains("ScalaUDF"), p)

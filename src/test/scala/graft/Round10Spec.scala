@@ -9,7 +9,8 @@ import graft.ops.VectorOps
   * autoPlaneCount) let recall decay with n (measured 0.924@4k →
   * 0.763@40k, extrapolating to ~0.06 at n = 10⁹); the new law holds
   * recall ≥ DefaultRecallTarget at centered cosine ≥ DefaultDesignCos at
-  * ANY n by growing the band count as n^ρ ([[VectorOps.srpBandCount]]).
+  * ANY n by growing the band count as n^ρ
+  * ([[VectorOps.srpBandCountForPlanes]]).
   */
 class Round10Spec extends SparkSpecBase {
 
@@ -35,7 +36,8 @@ class Round10Spec extends SparkSpecBase {
       20000L -> (12, 12), 400000L -> (16, 21), 1000000000L -> (27, 94))
     expected.foreach { case (n, (p, b)) =>
       assert(VectorOps.autoPlaneCount(n) == p, s"planes at n=$n")
-      assert(VectorOps.srpBandCount(n) == b, s"bands at n=$n")
+      assert(VectorOps.srpBandCountForPlanes(VectorOps.autoPlaneCount(n)) == b,
+        s"bands at n=$n")
     }
   }
 

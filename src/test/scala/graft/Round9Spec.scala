@@ -10,6 +10,14 @@ import graft.ops.{Sketches, VectorOps}
   * points. */
 class Round9Spec extends SparkSpecBase {
 
+  /** Sign signature of the mean-centered vectors, as the SRP bucket
+    * operators compute it from [[VectorOps.centeredColumn]]. */
+  private def srpSignatureCentered(df: org.apache.spark.sql.DataFrame,
+                                   vecCol: String, numPlanes: Int) = {
+    val (centered, dim) = VectorOps.centeredColumn(df, vecCol)
+    VectorOps.srpSignature(centered, numPlanes, dim)
+  }
+
   // ---- reserved "__all__" rollup label guard ----
 
   test("hllRelational: a data group named __all__ fails fast instead " +
@@ -121,7 +129,7 @@ class Round9Spec extends SparkSpecBase {
         zip_with(col("embedding"), array(mu.map(lit(_)): _*),
           (x, m) => x.cast(DoubleType) - m), 10, mu.length).as("sig"))
     val viaOp = vecs.select(col("vec_id"),
-      VectorOps.srpSignatureCentered(vecs, "embedding", 10).as("sig"))
+      srpSignatureCentered(vecs, "embedding", 10).as("sig"))
     assert(manual.except(viaOp).isEmpty && viaOp.except(manual).isEmpty)
   }
 
@@ -132,7 +140,7 @@ class Round9Spec extends SparkSpecBase {
     val shifted = vecs.withColumn("embedding",
       transform(col("embedding"), x => x.cast("double") + lit(5.0)))
     def sizes(df: org.apache.spark.sql.DataFrame) =
-      df.select(VectorOps.srpSignatureCentered(df, "embedding", 8).as("s"))
+      df.select(srpSignatureCentered(df, "embedding", 8).as("s"))
         .groupBy($"s").count().select($"count")
         .collect().map(_.getLong(0)).sorted.toSeq
     // translation cancels in v − μ exactly only when the shift is exactly

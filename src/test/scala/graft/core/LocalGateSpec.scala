@@ -4,6 +4,7 @@ import scala.util.{Failure, Success, Try}
 
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.functions._
+import org.apache.spark.graftspark.ListenerBusAccess
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.SparkSpecBase
@@ -28,11 +29,11 @@ class LocalGateSpec extends SparkSpecBase {
           Option(e.properties).map(_.getProperty("spark.job.description"))
             .orNull))
     }
-    org.apache.spark.ListenerBusDrain(sc)
+    ListenerBusAccess.waitUntilEmpty(sc, 10000L)
     sc.addSparkListener(listener)
     try {
       val out = body
-      org.apache.spark.ListenerBusDrain(sc)
+      ListenerBusAccess.waitUntilEmpty(sc, 10000L)
       import scala.jdk.CollectionConverters._
       (out, seen.asScala.toSeq)
     } finally sc.removeSparkListener(listener)
@@ -153,11 +154,13 @@ class LocalGateSpec extends SparkSpecBase {
       (Long.MinValue, v(1f, 0.1f)), (-1L, v(1f, 0.1f)), // tied rel
       (0L, v(-0.0f, 1f)), (1L, v(0.0f, 1f)),            // ±0.0
       (2L, v(Float.NaN, 1f)),                           // NaN cosine
+      (3L, v(0f, 0f)),                      // zero norm: NaN, not an error
       (Long.MaxValue, v(0.7f, 0.7f)))
       .toDF("vec_id", "embedding")
     val q = Seq((10L, v(1f, 0.8f)), (11L, v(-0.0f, 1f)))
       .toDF("vec_id", "embedding")
-    assert(mmr(q, corpus, 6, 4).nonEmpty)
+    val got = mmr(q, corpus, 7, 7)
+    assert(got.exists(r => r.getLong(1) == 3L && r.getDouble(2).isNaN), got)
   }
 
   test("components: twin = distributed on null, extreme and non-BMP ids, empty") {

@@ -219,11 +219,11 @@ class EtlRunnerSpec extends SparkSpecBase {
         seen.add(String.valueOf(Option(e.properties)
           .map(_.getProperty("spark.job.description")).orNull))
     }
-    org.apache.spark.ListenerBusDrain(sc)
+    ListenerBusAccess.waitUntilEmpty(sc, 10000L)
     sc.addSparkListener(listener)
     try {
       EtlRunner.run(spark, in, out, Some(vocab))
-      org.apache.spark.ListenerBusDrain(sc)
+      ListenerBusAccess.waitUntilEmpty(sc, 10000L)
     } finally sc.removeSparkListener(listener)
     val descriptions = seen.asScala.toSet
     assert(descriptions.forall(_.startsWith("etl step: ")), descriptions)

@@ -159,21 +159,6 @@ class VocabSpec extends SparkSpecBase {
     assert(!roll.contains(201826L))
   }
 
-  test("mappingStats reports the reference's mapped/unmapped rollup") {
-    val concept = Vocab.loadConcept(spark, s"$vocabDir/CONCEPT.csv")
-    val rel = Vocab.loadConceptRelationship(spark,
-      s"$vocabDir/CONCEPT_RELATIONSHIP.csv")
-    val table = Seq((1L, "44054006"), (2L, "99999"))
-      .toDF("id", "condition_source_value")
-      .withColumn("src", lit(0L)).withColumn("tgt", lit(0L))
-    val mapped = mapDomain(table, concept, rel,
-      "condition_source_value", "src", "tgt", "SNOMED", "Condition")
-    val stats = Vocab.mappingStats(mapped, "tgt").head()
-    assert(stats.getAs[Long]("total") == 2)
-    assert(stats.getAs[Long]("mapped") == 1)
-    assert(stats.getAs[Long]("unmapped") == 1)
-  }
-
   test("the code map equals the 3-stage reference on edge codes") {
     val none: Option[String] = None
     def c(id: Long, domain: String, vocabulary: String, std: String,

@@ -46,25 +46,6 @@ class MultimodalSpec extends SparkSpecBase {
       0L -> "image"), kinds)
   }
 
-  test("transcode emits exact-size binary payloads, empty stays empty") {
-    val media = Multimodal.mediaFromDocuments(
-        spark.read.parquet(s"$sf/documents.parquet"))
-      .unionByName(Seq((99999L, "image", Array.emptyByteArray,
-        (0L, "en"))).toDF("media_id", "kind", "bytes", "meta")
-        .select(col("media_id"), col("kind"), col("bytes"),
-          struct(col("meta._1").as("n_chars"), col("meta._2").as("lang"))
-            .as("meta")))
-    val out = Multimodal.transcode(media, targetBytes = 64)
-    val sizes = out.collect().map(r => r.media_id -> r.bytes.length).toMap
-    assert(sizes(99999L) == 0)
-    assert(sizes.filterKeys(_ != 99999L).values.forall(_ == 64))
-    // deterministic: same payload in → same payload out, any partitioning
-    val again = Multimodal.transcode(media.repartition(7), 64)
-      .filter($"media_id" === 0).head().bytes
-    assert(java.util.Arrays.equals(again,
-      out.filter($"media_id" === 0).head().bytes))
-  }
-
   test("frame sampling expands per media without carrying bytes") {
     val media = Multimodal.mediaFromDocuments(
       Seq((1L, "x" * 350, "en", "s", 350L))

@@ -9,69 +9,8 @@ class CorpusPipelineSpec extends SparkSpecBase {
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
 
-  test("stages prune monotonically and keep a non-empty corpus") {
-    val (result, stats) = CorpusPipeline.run(docs,
-      CorpusPipeline.Config(minTokens = 5, jaccardMin = 0.8,
-        sampleFractions = Map("en" -> 0.5)))
-    assert(stats.input >= stats.afterQuality)
-    assert(stats.afterQuality >= stats.afterExact)
-    assert(stats.afterExact >= stats.afterNearDup)
-    assert(stats.afterNearDup >= stats.output)
-    assert(stats.output > 0)
-    assert(result.count() == stats.output)
-    // schema passes through unchanged
-    assert(result.columns.toSet == docs.columns.toSet)
-  }
-
-  test("optional benchmark stage decontaminates before dedup") {
-    val base = docs.limit(20)
-    // benchmark = one corpus doc verbatim: that doc (and only it) shares
-    // shingles and must drop; the stat records exactly one removal
-    val bench = base.filter(col("doc_id") === base.select(min("doc_id"))
-      .head().getLong(0))
-    val (result, stats) = CorpusPipeline.run(base,
-      CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0),
-      benchmark = Some(bench))
-    assert(stats.decontaminated == 1, s"$stats")
-    val benchId = bench.select("doc_id").head().getLong(0)
-    assert(!result.select("doc_id").as[Long].collect().contains(benchId))
-    // without a benchmark the stat stays zero
-    val (_, s2) = CorpusPipeline.run(base,
-      CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0))
-    assert(s2.decontaminated == 0)
-  }
-
-  test("decontamination uses the long n-gram window, not the LSH shingle") {
-    // corpus doc shares the trigram "alpha bravo charlie" with the
-    // benchmark but no 8-gram: at decontaminationN = 8 (default) it must
-    // SURVIVE — coupling the stage to shingleN = 3 would gut any natural-
-    // language corpus, where common trigrams are unavoidable
-    val corpus = Seq(
-      (1L, "alpha bravo charlie delta echo foxtrot golf hotel india", "en",
-        "t", 50L),
-      (2L, "unrelated words entirely different content here now ok", "en",
-        "t", 50L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val bench = Seq(
-      (100L, "xray yankee zulu alpha bravo charlie quebec romeo sierra",
-        "en", "t", 50L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val (result, stats) = CorpusPipeline.run(corpus,
-      CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0),
-      benchmark = Some(bench))
-    assert(stats.decontaminated == 0, s"$stats")
-    assert(result.count() == 2)
-    // at decontaminationN = 3 the trigram overlap does disqualify doc 1
-    val (r3, s3) = CorpusPipeline.run(corpus,
-      CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0,
-        decontaminationN = 3),
-      benchmark = Some(bench))
-    assert(s3.decontaminated == 1, s"$s3")
-    assert(r3.select("doc_id").as[Long].collect().toSet == Set(2L))
-  }
-
   test("near-dup stage removes planted duplicates, keeps the smallest id") {
-    val base = docs.limit(50)
+    val base = docs.filter(col("doc_id") < 50)
     // plant: doc_id+100000 with identical text (exact dup), doc_id+200000
     // with one token appended (near dup)
     val exactDups = base.select((col("doc_id") + 100000).as("doc_id"),
@@ -80,14 +19,13 @@ class CorpusPipelineSpec extends SparkSpecBase {
       concat(col("text"), lit(" trailingtoken")).as("text"),
       col("lang"), col("source"), col("n_chars"))
     val corpus = base.unionByName(exactDups).unionByName(nearDups)
-    val (result, stats) = CorpusPipeline.run(corpus,
+    val result = CorpusPipeline.appendDocs(corpus.limit(0), corpus,
       CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0,
         jaccardMin = 0.5))
     val ids = result.select("doc_id").as[Long].collect().toSet
-    // all originals that passed quality survive; all planted ids are gone
+    // originals survive; all planted ids are gone
+    assert(ids.nonEmpty)
     assert(ids.forall(_ < 100000), s"planted dup survived: ${ids.filter(_ >= 100000)}")
-    assert(stats.afterExact == stats.afterQuality - 50) // exact dups dropped
-    assert(stats.afterNearDup < stats.afterExact)       // near dups dropped
   }
 
   test("append drops increment rows duplicating the corpus or the batch") {
@@ -114,12 +52,12 @@ class CorpusPipelineSpec extends SparkSpecBase {
     val incoming = exactOfExisting.unionByName(nearOfExisting)
       .unionByName(fresh).unionByName(batchDup).select(cols.map(col): _*)
 
-    val (result, stats) = CorpusPipeline.append(
+    val result = CorpusPipeline.appendDocs(
       existing.select(cols.map(col): _*), incoming,
       CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0,
         jaccardMin = 0.5))
     val ids = result.select("doc_id").as[Long].collect().toSet
-    assert(stats.input == 45)
+    assert(incoming.count() == 45)
     // all exact/near dups of the corpus are gone
     assert(!ids.exists(id => id >= 500000 && id < 700000),
       s"corpus dup survived: ${ids.filter(id => id >= 500000 && id < 700000)}")
@@ -130,31 +68,9 @@ class CorpusPipelineSpec extends SparkSpecBase {
 
   test("pipeline is deterministic across partitionings") {
     val cfg = CorpusPipeline.Config(sampleFractions = Map("en" -> 0.4))
-    val a = CorpusPipeline.run(docs, cfg)._1
-      .select("doc_id").as[Long].collect().toSet
-    val b = CorpusPipeline.run(docs.repartition(13), cfg)._1
-      .select("doc_id").as[Long].collect().toSet
-    assert(a == b)
-  }
-
-  test("transitive clustering resolves chains greedy dedup keeps") {
-    // doc 3 duplicates BOTH 1 and 2 (J = 3/4 each), but 1 vs 2 fall
-    // below the threshold (J = 1/2): verified pairs (1,3),(2,3) form a
-    // chain. Greedy drops only doc_b's → {1,2} survive; transitive
-    // components keep one doc per cluster → {1}.
-    val chain = Seq(
-      (1L, "alpha bravo charlie", "en", "t", 19L),
-      (2L, "bravo charlie delta", "en", "t", 19L),
-      (3L, "alpha bravo charlie delta", "en", "t", 25L))
-      .toDF("doc_id", "text", "lang", "source", "n_chars")
-    val cfg = CorpusPipeline.Config(minTokens = 0, maxPunctRatio = 1.0,
-      shingleN = 1, rowsPerBand = 1, jaccardMin = 0.7)
-    val greedy = CorpusPipeline.run(chain, cfg)._1
-      .select("doc_id").as[Long].collect().toSet
-    val transitive = CorpusPipeline.run(chain,
-        cfg.copy(transitiveClusters = true))._1
-      .select("doc_id").as[Long].collect().toSet
-    assert(greedy === Set(1L, 2L))
-    assert(transitive === Set(1L))
+    def survivors(in: org.apache.spark.sql.DataFrame) =
+      CorpusPipeline.appendDocs(in.limit(0), in, cfg)
+        .select("doc_id").as[Long].collect().toSet
+    assert(survivors(docs) == survivors(docs.repartition(13)))
   }
 }

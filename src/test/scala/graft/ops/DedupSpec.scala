@@ -58,60 +58,6 @@ class DedupSpec extends SparkSpecBase {
     assert(notIn == 0)
   }
 
-  test("keysetPage pages the full set exactly once, filter pushed down") {
-    val orders = spark.read.parquet(s"$sf/orders.parquet")
-    val total = orders.count()
-    var seen = Vector.empty[Long]
-    var after: Option[Any] = None
-    var page = Dedup.keysetPage(orders, "o_orderkey", 700, after)
-    while (page.count() > 0) {
-      val keys = page.select("o_orderkey").collect().map(_.getLong(0))
-      seen ++= keys
-      after = Some(keys.max)
-      page = Dedup.keysetPage(orders, "o_orderkey", 700, after)
-    }
-    assert(seen.length == total)
-    assert(seen == seen.sorted && seen.distinct.length == seen.length)
-    // the keyset predicate reaches the parquet scan
-    val plan = Dedup.keysetPage(orders, "o_orderkey", 700, Some(100L))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PushedFilters: [IsNotNull(o_orderkey), " +
-      "GreaterThan(o_orderkey,100)"), plan)
-  }
-
-  test("exactDedup keeps one deterministic representative per content") {
-    import spark.implicits._
-    val df = Seq((1L, "same"), (2L, "same"), (3L, "other")).toDF("id", "text")
-    val got = Dedup.exactDedup(df, Seq(col("text")), col("id").asc)
-      .orderBy("id").as[(Long, String)].collect()
-    assert(got.toSeq == Seq((1L, "same"), (3L, "other")))
-  }
-
-  test("content hash frames fields: no boundary or null collisions") {
-    import spark.implicits._
-    val none: Option[String] = None
-    // every row is DISTINCT content: shifted field boundaries, nulls in
-    // different positions, and null-vs-empty must all hash apart — an
-    // unframed concat would collide them and exactDedup would DELETE
-    // non-duplicate rows
-    val df = Seq(
-      (1L, Some("ab"), Some("c")),
-      (2L, Some("a"), Some("bc")),
-      (3L, Some("a"), none),
-      (4L, none, Some("a")),
-      (5L, Some("a"), Some("")),
-      (6L, none, none),
-      (7L, Some(""), Some("")))
-      .toDF("id", "x", "y")
-    val kept = Dedup.exactDedup(df, Seq(col("x"), col("y")), col("id").asc)
-    assert(kept.count() == 7, kept.orderBy("id").collect().mkString(","))
-    assert(Dedup.exactDupGroups(df, Seq(col("x"), col("y"))).count() == 0)
-    // and true duplicates still collapse
-    val dup = df.unionByName(df)
-    assert(Dedup.exactDedup(dup, Seq(col("x"), col("y")), col("id").asc)
-      .count() == 7)
-  }
-
   test("prefixDedup groups by token prefix, keeps the smallest id") {
     import spark.implicits._
     val docs = Seq(

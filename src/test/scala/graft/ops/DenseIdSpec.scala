@@ -9,8 +9,10 @@ class DenseIdSpec extends SparkSpecBase {
   test("scalable path produces identical ids to the global window") {
     val cust = spark.read.parquet(s"$sf/customer.parquet")
       .select(col("c_custkey"), col("c_name"))
-    val viaWindow = DenseId.withDenseIdWindow(
-      cust, Seq(col("c_custkey")), "id")
+    // a single global window: exact, but one single-partition sort
+    val viaWindow = cust
+      .withColumn("id", row_number().over(
+        org.apache.spark.sql.expressions.Window.orderBy(col("c_custkey"))))
       .select(col("c_custkey"), col("id").cast("long")).collect()
       .map(r => (r.getLong(0), r.getLong(1))).toMap
     val viaScalable = DenseId.withDenseIdScalable(

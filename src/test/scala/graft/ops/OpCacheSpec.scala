@@ -32,8 +32,8 @@ class OpCacheSpec extends SparkSpecBase {
     val docs = Tables.documents(spark, sf)
     def once(): Unit = {
       NearDup.setSimJoin(docs, "doc_id", "text", 5, 0.7).count()
-      NearDup.winnowOverlap(
-        NearDup.winnowFingerprints(docs, "doc_id", "text", 5, 4),
+      NearDup.winnowOverlapSets(
+        NearDup.winnowFingerprintSets(docs, "doc_id", "text", 5, 4),
         "doc_id", 20, 2).count()
     }
     once()
@@ -47,14 +47,14 @@ class OpCacheSpec extends SparkSpecBase {
     spark.catalog.clearCache()
     OpCache.releaseAll()
     val docs = Tables.documents(spark, sf)
-    NearDup.winnowOverlap(
-      NearDup.winnowFingerprints(docs, "doc_id", "text", 5, 4),
+    NearDup.winnowOverlapSets(
+      NearDup.winnowFingerprintSets(docs, "doc_id", "text", 5, 4),
       "doc_id", 20, 2).count()
     val before = persistedRdds
     // same input → same canonicalized plan → CacheManager dedups; renew
     // must NOT evict the entry the second invocation is riding
-    NearDup.winnowOverlap(
-      NearDup.winnowFingerprints(docs, "doc_id", "text", 5, 4),
+    NearDup.winnowOverlapSets(
+      NearDup.winnowFingerprintSets(docs, "doc_id", "text", 5, 4),
       "doc_id", 20, 2).count()
     assert(persistedRdds == before,
       s"shared entry evicted or duplicated: $before -> $persistedRdds")

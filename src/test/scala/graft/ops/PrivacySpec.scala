@@ -14,24 +14,6 @@ class PrivacySpec extends SparkSpecBase {
     (6L, "60601", 40)) // unique QI combo: re-identifying
     .toDF("id", "zip", "age")
 
-  test("kAnonymize suppresses only sub-k classes, keeps the rest") {
-    val out = Privacy.kAnonymize(rows, Seq("zip", "age"), k = 2)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (Option(r.getAs[String]("zip")), r.getAs[Boolean]("suppressed")))
-      .toMap
-    for (id <- 1L to 5L)
-      assert(out(id)._1.isDefined && !out(id)._2, s"id $id")
-    assert(out(6L) == ((None, true)))
-    // non-QI columns pass through untouched
-    assert(Privacy.kAnonymize(rows, Seq("zip", "age"), 2)
-      .select("id").as[Long].collect().sorted.toSeq == (1L to 6L))
-  }
-
-  test("kAnonymize at k=3 also suppresses the size-2 class") {
-    val out = Privacy.kAnonymize(rows, Seq("zip", "age"), k = 3)
-    assert(out.filter(col("suppressed")).count() == 3) // ids 4,5,6
-  }
-
   test("anonymityAudit histograms class sizes with cap") {
     val got = Privacy.anonymityAudit(rows, Seq("zip", "age"), cap = 2)
       .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getLong(2)))

@@ -79,9 +79,11 @@ class SafeCastSpec extends SparkSpecBase {
     assert(one(safeDate(col("v")), "2023-02-29") == null) // not a leap year
     assert(one(safeTimestamp(col("v")), "2024-01-02 99:00") == null)
     assert(one(safeInt(col("v")), "99999999999999999999") == null) // overflow
-    assert(one(safeLong(col("v")), "99999999999999999999") == null)
+    assert(one(safeCast(col("v"), LongType, IntPattern),
+      "99999999999999999999") == null)
     assert(one(safeInt(col("v")), "2147483648") == null) // Int.MaxValue + 1
-    assert(one(safeLong(col("v")), "2147483648") == 2147483648L)
+    assert(one(safeCast(col("v"), LongType, IntPattern), "2147483648") ==
+      2147483648L)
   }
 
   test("safeUuid validates the 36-char shape") {

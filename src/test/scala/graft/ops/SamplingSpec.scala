@@ -9,10 +9,16 @@ class SamplingSpec extends SparkSpecBase {
 
   private def docs = spark.read.parquet(s"$sf/documents.parquet")
 
+  /** Uniform sample: one stratum, so every row gets `fraction`. */
+  private def hashSample(df: org.apache.spark.sql.DataFrame,
+                         key: org.apache.spark.sql.Column, fraction: Double,
+                         seed: Long) =
+    Sampling.stratifiedHashSample(df, key, lit(""), Map.empty, fraction, seed)
+
   test("hashSample is deterministic across partitionings and reruns") {
-    val a = Sampling.hashSample(docs, col("doc_id"), 0.3, seed = 11)
+    val a = hashSample(docs, col("doc_id"), 0.3, seed = 11)
       .select("doc_id").as[Long].collect().toSet
-    val b = Sampling.hashSample(docs.repartition(7), col("doc_id"), 0.3,
+    val b = hashSample(docs.repartition(7), col("doc_id"), 0.3,
         seed = 11)
       .select("doc_id").as[Long].collect().toSet
     assert(a == b)
@@ -21,18 +27,18 @@ class SamplingSpec extends SparkSpecBase {
 
   test("hashSample fraction lands near the target; seeds decorrelate") {
     val n = docs.count().toDouble
-    val k = Sampling.hashSample(docs, col("doc_id"), 0.5, seed = 1).count()
+    val k = hashSample(docs, col("doc_id"), 0.5, seed = 1).count()
     assert(math.abs(k / n - 0.5) < 0.15, s"got ${k / n}")
-    val s1 = Sampling.hashSample(docs, col("doc_id"), 0.5, seed = 1)
+    val s1 = hashSample(docs, col("doc_id"), 0.5, seed = 1)
       .select("doc_id").as[Long].collect().toSet
-    val s2 = Sampling.hashSample(docs, col("doc_id"), 0.5, seed = 2)
+    val s2 = hashSample(docs, col("doc_id"), 0.5, seed = 2)
       .select("doc_id").as[Long].collect().toSet
     assert(s1 != s2)
   }
 
   test("fraction 0 keeps nothing; fraction 1 keeps everything") {
-    assert(Sampling.hashSample(docs, col("doc_id"), 0.0, 5).count() == 0)
-    assert(Sampling.hashSample(docs, col("doc_id"), 1.0, 5).count()
+    assert(hashSample(docs, col("doc_id"), 0.0, 5).count() == 0)
+    assert(hashSample(docs, col("doc_id"), 1.0, 5).count()
       == docs.count())
   }
 
@@ -130,7 +136,7 @@ class SamplingSpec extends SparkSpecBase {
     // one hash value fewer than specified. With the snap, exactly the
     // keys hashing to 0..299999 survive.
     val df = (1L to 4000L).toDF("id")
-    val kept = Sampling.hashSample(df, col("id"), 0.3, seed = 7)
+    val kept = hashSample(df, col("id"), 0.3, seed = 7)
       .count()
     val expected = (1L to 4000L).count { id =>
       // mirror sampleHash's arithmetic

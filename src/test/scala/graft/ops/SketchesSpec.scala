@@ -7,33 +7,6 @@ import graft.SparkSpecBase
 class SketchesSpec extends SparkSpecBase {
 
   private def orders = spark.read.parquet(s"$sf/orders.parquet")
-  private def lineitem = spark.read.parquet(s"$sf/lineitem.parquet")
-
-  test("HLL distinct counts land within rsd of exact") {
-    val approx = Sketches.distinctCounts(orders,
-        Seq(col("o_orderstatus")), col("o_custkey"), rsd = 0.02)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val exact = orders.groupBy("o_orderstatus")
-      .agg(countDistinct(col("o_custkey")).as("d"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    for ((k, e) <- exact) {
-      val a = approx(k).toDouble
-      assert(math.abs(a - e) / e < 0.10, s"$k: approx $a vs exact $e")
-    }
-  }
-
-  test("approx percentiles bracket the exact ones") {
-    val approx = Sketches.quantiles(lineitem, Seq(col("l_returnflag")),
-        col("l_extendedprice"), Seq(0.5), accuracy = 10000)
-      .select(col("l_returnflag"), col("approx_pcts")(0).as("p50"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    val exact = lineitem.groupBy("l_returnflag")
-      .agg(expr("percentile(l_extendedprice, 0.5)").as("p50"))
-      .collect().map(r => r.getString(0) -> r.getDouble(1)).toMap
-    for ((k, e) <- exact)
-      assert(math.abs(approx(k) - e) / e < 0.05,
-        s"$k: approx ${approx(k)} vs exact $e")
-  }
 
   test("bloomPrune works for string keys (no false negatives)") {
     import spark.implicits._

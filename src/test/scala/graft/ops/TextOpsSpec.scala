@@ -1,5 +1,6 @@
 package graft.ops
 
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
@@ -9,6 +10,26 @@ class TextOpsSpec extends SparkSpecBase {
 
   private def one(c: org.apache.spark.sql.Column, v: String): Any =
     Seq(Option(v)).toDF("text").select(c.as("r")).head().get(0)
+
+  /** Interpreted lambda form of [[TextOps.polyHash]]'s fold. */
+  private def polyHashLambda(c: Column): Column =
+    aggregate(
+      filter(split(c, ""), ch => ch =!= ""),
+      lit(0L),
+      (h, ch) => (h * 31 + ascii(ch)) % TextOps.HashMod)
+
+  /** [[TextOps.langGuess]]'s scoring with interpreted HOFs in place of
+    * the native count_in expression. */
+  private def langGuessLambda(text: Column): Column = {
+    val tk = TextOps.tokens(text)
+    val scored = TextOps.LangMarkers.map { case (lang, markers) =>
+      struct(size(filter(tk, t => t.isin(markers.map(lit): _*))).as("score"),
+             lit(lang).as("lang"))
+    }
+    val best = scored.reduceLeft((a, b) =>
+      when(b.getField("score") > a.getField("score"), b).otherwise(a))
+    best.getField("lang")
+  }
 
   test("tokens handles empty, blank, and multi-space text") {
     assert(one(TextOps.tokenCount(col("text")), "a  b\tc") == 3)
@@ -28,12 +49,12 @@ class TextOpsSpec extends SparkSpecBase {
     val docs = spark.read.parquet(s"$sf/documents.parquet")
     val mismatches = docs.select(
       TextOps.polyHash(col("text")).as("native"),
-      TextOps.polyHashLambda(col("text")).as("lambda"))
+      polyHashLambda(col("text")).as("lambda"))
       .filter(col("native") =!= col("lambda")).count()
     assert(mismatches == 0)
     // unicode: multi-byte codepoints fold identically
     assert(one(TextOps.polyHash(col("text")), "héllo 你好") ==
-      one(TextOps.polyHashLambda(col("text")), "héllo 你好"))
+      one(polyHashLambda(col("text")), "héllo 你好"))
   }
 
   test("poly_hash is callable from SQL and participates in codegen") {
@@ -41,7 +62,7 @@ class TextOpsSpec extends SparkSpecBase {
     val df = Seq("abc").toDF("text")
     df.createOrReplaceTempView("polyhash_spec")
     assert(spark.sql("SELECT poly_hash(text) AS h FROM polyhash_spec")
-      .head().getLong(0) == one(TextOps.polyHashLambda(col("text")), "abc"))
+      .head().getLong(0) == one(polyHashLambda(col("text")), "abc"))
     // a parquet-backed scan (not a constant-foldable local relation) must
     // evaluate poly_hash inside a WholeStageCodegen span
     // "*(n)" prefixes mark WholeStageCodegen stages in the plan string
@@ -69,7 +90,7 @@ class TextOpsSpec extends SparkSpecBase {
   test("native count_in langGuess == lambda fold == relational join form") {
     val lambda = spark.read.parquet(s"$sf/documents.parquet")
       .select(col("lang"),
-        TextOps.langGuessLambda(col("text")).as("lang_guess"))
+        langGuessLambda(col("text")).as("lang_guess"))
       .groupBy("lang", "lang_guess").count()
       .collect().map(r => (r.getString(0), r.getString(1)) -> r.getLong(2))
       .toMap
@@ -168,7 +189,8 @@ class TextOpsSpec extends SparkSpecBase {
   }
 
   test("bigramStrings preserves order; short docs → empty array") {
-    def b(s: String) = one(TextOps.bigramStrings(col("text")), s)
+    def b(s: String) =
+      one(TextOps.bigramsFromTokens(TextOps.tokens(col("text"))), s)
       .asInstanceOf[scala.collection.Seq[String]].toSeq
     assert(b("a b c d") == Seq("a b", "b c", "c d"))
     assert(b("solo") == Seq.empty)

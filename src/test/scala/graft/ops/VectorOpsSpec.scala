@@ -1,11 +1,45 @@
 package graft.ops
 
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.DoubleType
 
 import graft.SparkSpecBase
 
 class VectorOpsSpec extends SparkSpecBase {
   import spark.implicits._
+
+  /** Interpreted lambda form of [[VectorOps.dot]]'s sequential fold. */
+  private def dotLambda(a: Column, b: Column): Column =
+    aggregate(zip_with(a, b, (x, y) => x.cast(DoubleType) * y.cast(DoubleType)),
+      lit(0.0), (acc, x) => acc + x)
+
+  /** Window-sort formulation of [[VectorOps.bruteForceTopK]]. */
+  private def bruteForceTopKWindow(queries: DataFrame, corpus: DataFrame,
+                                   k: Int): DataFrame =
+    Dedup.firstRowPerGroupN(
+        VectorOps.bruteForceScores(queries, corpus, "vec_id", "embedding"),
+        Seq(col("query_id")),
+        Seq(col("cos").desc, col("neighbor_id").asc), k)
+      .select(col("query_id"), col("neighbor_id"),
+        col("__rn").as("rank"), round(col("cos"), 6).as("cos_sim"))
+
+  /** Product-quantization codebooks: a [[VectorOps.kmeansFit]] L2
+    * codebook per contiguous subspace, as (subspace, centroid_id,
+    * centroid) rows. */
+  private def pqTrain(vecs: DataFrame, m: Int, k: Int,
+                      iters: Int): DataFrame = {
+    val dim = vecs.select(size(col("embedding"))).head().getInt(0)
+    val dsub = dim / m
+    (0 until m).map { i =>
+      val sub = vecs.select(col("vec_id"),
+        slice(col("embedding"), i * dsub + 1, dsub).as("__sub"))
+      VectorOps.kmeansFit(sub, k, iters, "vec_id", "__sub", seed = 7L + i,
+          metric = "l2")
+        .withColumn("subspace", lit(i))
+    }.reduce(_ unionByName _)
+      .select(col("subspace"), col("centroid_id"), col("centroid"))
+  }
 
   private val vecs = Seq(
     (0L, Array(1.0f, 0.0f, 0.0f)),
@@ -20,7 +54,7 @@ class VectorOpsSpec extends SparkSpecBase {
       emb.select($"embedding".as("b")).limit(50))
     val mism = pairs.select(
       VectorOps.dot($"embedding", $"b").as("native"),
-      VectorOps.dotLambda($"embedding", $"b").as("lambda"))
+      dotLambda($"embedding", $"b").as("lambda"))
       .filter($"native" =!= $"lambda").count() // exact, not approx
     assert(mism == 0)
     // double arrays too (centroid path)
@@ -41,6 +75,12 @@ class VectorOpsSpec extends SparkSpecBase {
       .collect().map(r => ((r.getLong(0), r.getLong(1)), r.getDouble(2))).toMap
     assert(math.abs(pairs((0L, 2L))) < 1e-12)
     assert(math.abs(pairs((0L, 3L)) + 1.0) < 1e-12)
+    // a zero vector has no direction: NaN, never DIVIDE_BY_ZERO
+    val zero = Seq((Array(0.0f, 0.0f, 0.0f), Array(1.0f, 0.0f, 0.0f)))
+      .toDF("z", "v")
+    val zc = zero.select(VectorOps.cosine($"z", $"v"),
+      VectorOps.cosine($"z", $"z")).head()
+    assert(zc.getDouble(0).isNaN && zc.getDouble(1).isNaN)
   }
 
   test("bruteForceTopK ranks nearest first with deterministic tiebreak") {
@@ -56,7 +96,7 @@ class VectorOpsSpec extends SparkSpecBase {
     val q = emb.filter($"vec_id" < 10)
     val viaAgg = VectorOps.bruteForceTopK(q, emb, 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    val viaWindow = VectorOps.bruteForceTopKWindow(q, emb, 7)
+    val viaWindow = bruteForceTopKWindow(q, emb, 7)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
     assert(viaAgg == viaWindow)
     assert(viaAgg.size == 70)
@@ -130,28 +170,6 @@ class VectorOpsSpec extends SparkSpecBase {
     assert(a == b)
   }
 
-  test("ivfAppend equals full rebuild on the same codebook; ids idempotent") {
-    val code = VectorOps.kmeansFit(blobs, k = 3, iters = 3)
-    val standing = blobs.filter($"vec_id" < 6)
-    val drop = blobs.filter($"vec_id" >= 6)
-      // id 3 collides with the standing index and must NOT reassign
-      .unionByName(blobs.filter($"vec_id" === 3))
-    val index0 = VectorOps.assignToCentroids(standing, code)
-    val (index1, report) = VectorOps.ivfAppend(index0, code, drop)
-    val full = VectorOps.assignToCentroids(blobs, code)
-    assert(index1.count() == 9)
-    assert(index1.select($"vec_id", $"list_id")
-      .except(full.select($"vec_id", $"list_id")).count() == 0)
-    // drift report counts only the genuinely fresh rows (6,7,8)
-    assert(report.agg(sum($"n_appended")).head().getLong(0) == 3)
-    // search over the appended index equals search over the rebuild
-    val q = blobs.filter($"vec_id" === 0)
-    def hits(ix: org.apache.spark.sql.DataFrame) =
-      VectorOps.ivfSearch(q, ix.drop("list_id"), code, nprobe = 3, k = 2)
-        .select($"neighbor_id", $"rank").as[(Long, Int)].collect().toSet
-    assert(hits(index1) == hits(full))
-  }
-
   test("kmeansFit-trained IVF at full probe equals brute force") {
     val code = VectorOps.kmeansFit(blobs, k = 3, iters = 3)
     val queries = blobs.filter($"vec_id" < 3)
@@ -207,7 +225,7 @@ class VectorOpsSpec extends SparkSpecBase {
     val data = blobs.as[(Long, Array[Float])].collect()
       .map { case (id, a) => (id, pad(a)) }.toSeq
       .toDF("vec_id", "embedding")
-    val books = VectorOps.pqTrain(data, m = 2, k = 3, iters = 3)
+    val books = pqTrain(data, m = 2, k = 3, iters = 3)
     val codes = VectorOps.pqEncode(data, books, m = 2)
     val queries = data.filter($"vec_id" < 3)
     val top1 = VectorOps.pqTopK(queries, codes, books, m = 2, k = 8)
@@ -218,7 +236,7 @@ class VectorOpsSpec extends SparkSpecBase {
     val hits = top1.count { case (q, n) => q % 3 == n % 3 }
     assert(hits >= 2, s"recall@1 ${hits}/3: ${top1.toSeq}")
     // deterministic across partitionings
-    val books2 = VectorOps.pqTrain(data.repartition(5, $"vec_id"),
+    val books2 = pqTrain(data.repartition(5, $"vec_id"),
       m = 2, k = 3, iters = 3)
     val a = books.orderBy($"subspace", $"centroid_id")
       .as[(Int, Long, Seq[Double])].collect().toSeq
@@ -234,7 +252,7 @@ class VectorOpsSpec extends SparkSpecBase {
     val emb = spark.read.parquet(s"$sf/embeddings.parquet").limit(60)
       .persist()
     val m = 2
-    val books = VectorOps.pqTrain(emb, m = m, k = 4, iters = 2)
+    val books = pqTrain(emb, m = m, k = 4, iters = 2)
     val codes = VectorOps.pqEncode(emb, books, m)
     val queries = emb.filter($"vec_id" < 5)
     val n = emb.count().toInt

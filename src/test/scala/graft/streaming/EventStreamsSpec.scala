@@ -157,53 +157,6 @@ class EventStreamsSpec extends SparkSpecBase {
     } finally q.stop()
   }
 
-  test("stream-stream join within horizon: parity with batch, incremental emission") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val purchases = Seq(
-      (1L, 100L, ts("2024-01-01 11:00:00")),
-      (1L, 101L, ts("2024-01-01 13:00:00")), // no signup within 1h
-      (2L, 102L, ts("2024-01-01 10:30:00")))
-    val signups = Seq(
-      (1L, 900L, ts("2024-01-01 10:30:00")), // within 1h of 100
-      (1L, 901L, ts("2024-01-01 11:00:00")), // equal ts of 100 → matches
-      (2L, 902L, ts("2024-01-01 10:00:00")), // within 1h of 102
-      (9L, 999L, ts("2024-01-02 00:00:00"))) // watermark sentinel
-    def pairsOf(df: org.apache.spark.sql.DataFrame) =
-      df.select("p_id", "s_id").collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSet
-    val expected = Set((100L, 900L), (100L, 901L), (102L, 902L))
-
-    // batch form (withWatermark no-ops)
-    val batch = EventStreams.joinWithinHorizon(
-      purchases.toDF("user_id", "p_id", "p_ts"),
-      signups.toDF("user_id", "s_id", "s_ts"),
-      "user_id", "p_ts", "s_ts", "1 hour")
-    assert(pairsOf(batch) == expected)
-
-    // streaming: two MemoryStreams, data arriving across batches
-    val memP = MemoryStream[(Long, Long, Timestamp)]
-    val memS = MemoryStream[(Long, Long, Timestamp)]
-    val joined = EventStreams.joinWithinHorizon(
-      memP.toDF.toDF("user_id", "p_id", "p_ts"),
-      memS.toDF.toDF("user_id", "s_id", "s_ts"),
-      "user_id", "p_ts", "s_ts", "1 hour")
-    val q = joined.writeStream.format("memory").queryName("ss_join_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // all non-sentinel signups before the purchases advance the
-      // watermark past them (a signup sent after that is LATE by
-      // definition and correctly dropped — that is the state bound)
-      memS.addData(signups.take(3): _*)
-      q.processAllAvailable()
-      memP.addData(purchases: _*)
-      q.processAllAvailable()
-      memS.addData(signups.drop(3): _*)
-      q.processAllAvailable()
-      assert(pairsOf(spark.table("ss_join_sink")) == expected)
-    } finally q.stop()
-  }
-
   test("streaming dedup drops repeated keys under the watermark") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
@@ -408,64 +361,6 @@ class EventStreamsSpec extends SparkSpecBase {
       assert(streamed == batch, s"streamed=$streamed\nbatch=$batch")
       assert(batch.count(_.head == 1L) > 1) // doc 1 produced several chunks
       assert(!batch.exists(_.head == 3L))   // empty doc filtered by quality
-    } finally q.stop()
-  }
-
-  test("quotaStream: first-N per key across batches; parity with batch") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val all = Seq(
-      ("a", ts("2024-01-01 10:00:00"), 1L),
-      ("a", ts("2024-01-01 10:01:00"), 2L),
-      ("b", ts("2024-01-01 10:02:00"), 3L),
-      ("a", ts("2024-01-01 10:03:00"), 4L), // over quota for a
-      ("b", ts("2024-01-01 10:04:00"), 5L),
-      ("a", ts("2024-01-01 10:05:00"), 6L), // over quota for a
-      ("b", ts("2024-01-01 10:06:00"), 7L)) // over quota for b
-    val mem = MemoryStream[(String, Timestamp, Long)]
-    val sdf = mem.toDF.toDF("key", "ts", "id")
-    val q = EventStreams.quotaStream(sdf, cap = 2)
-      .writeStream.format("memory").queryName("quota_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      // two batches, arriving in event-time order
-      mem.addData(all.take(4): _*)
-      q.processAllAvailable()
-      mem.addData(all.drop(4): _*)
-      q.processAllAvailable()
-      val streamed = spark.table("quota_sink")
-        .orderBy("key", "id").collect().map(_.toSeq).toSeq
-      val batch = EventStreams.quotaBatch(
-        all.toDF("key", "ts", "id"), cap = 2)
-        .orderBy("key", "id").collect().map(_.toSeq).toSeq
-      assert(streamed == batch, s"streamed=$streamed\nbatch=$batch")
-      assert(streamed.map(_.head).count(_ == "a") == 2)
-      assert(streamed.map(_.head).count(_ == "b") == 2)
-    } finally q.stop()
-  }
-
-  test("quotaStream: replayed rows never widen the quota") {
-    import spark.implicits._
-    implicit val sqlCtx = spark.sqlContext
-    val mem = MemoryStream[(String, Timestamp, Long)]
-    val sdf = mem.toDF.toDF("key", "ts", "id")
-    val q = EventStreams.quotaStream(sdf, cap = 2)
-      .writeStream.format("memory").queryName("quota_replay_sink")
-      .outputMode(OutputMode.Append).start()
-    try {
-      mem.addData(("a", ts("2024-01-01 10:00:00"), 1L))
-      q.processAllAvailable()
-      // the same row redelivered plus fresh rows: quota has one slot left
-      mem.addData(
-        ("a", ts("2024-01-01 10:00:00"), 1L),
-        ("a", ts("2024-01-01 10:01:00"), 2L),
-        ("a", ts("2024-01-01 10:02:00"), 3L))
-      q.processAllAvailable()
-      val ids = spark.table("quota_replay_sink")
-        .select("id").collect().map(_.getLong(0)).sorted.toSeq
-      // duplicate of id=1 may re-emit (at-least-once), but total DISTINCT
-      // accepted stays ≤ cap and id=3 must never pass
-      assert(ids.distinct.size <= 2 && !ids.contains(3L), s"ids=$ids")
     } finally q.stop()
   }
 }

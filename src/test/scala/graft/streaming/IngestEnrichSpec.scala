@@ -26,7 +26,8 @@ class IngestEnrichSpec extends SparkSpecBase {
         TextOps.qualityFeatures(col("clean")).as("q"),
         NearDup.signatureColumn(col("clean"), n = 3, numHashes = 8)
           .as("minhash_sig"),
-        NearDup.simhashColumn(col("clean"), bits = 16).as("simhash"))
+        NearDup.simhashColumnFromTokens(TextOps.tokens(col("clean")), bits = 16)
+          .as("simhash"))
       .select(col("doc_id"), col("clean"),
         col("q.n_tokens").as("n_tokens"),
         col("q.punct_ratio").as("punct_ratio"),

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.OutputMode
 
 import graft.SparkSpecBase
-import graft.ops.NearDup
+import graft.ops.{NearDup, NearDupReference}
 
 class NearDupStreamSpec extends SparkSpecBase {
 
@@ -29,7 +29,7 @@ class NearDupStreamSpec extends SparkSpecBase {
       .select(col("doc_id"),
         posexplode(NearDup.signatureColumn(col("text"), 3, 16)))
       .select(col("doc_id"), col("pos").as("i"), col("col").as("mh"))
-    val batch = NearDup.minhashRows(
+    val batch = NearDupReference.minhashRows(
       NearDup.shingleRows(docs, "doc_id", "text", 3), "doc_id", 16)
     assert(perRow.except(batch).count() == 0)
     assert(batch.except(perRow).count() == 0)
