@@ -50,23 +50,19 @@ object Achilles {
       by.padTo(5, lit(null)).zip(strata).map { case (c, s) =>
         c.cast(StringType).as(s) }) ++ extra: _*)
 
-  /** Default-analyses run → one stacked results table. Domain inputs
-    * beyond the person/visit/condition core are optional so partial
-    * pipelines keep their analysis set. */
+  /** Default-analyses run over the full OMOP table set → one stacked
+    * results table. An empty table contributes no rows. */
   def run(person: DataFrame, visit: DataFrame, condition: DataFrame,
-          drugEra: Option[DataFrame] = None,
-          conditionEra: Option[DataFrame] = None,
-          procedure: Option[DataFrame] = None,
-          drugExposure: Option[DataFrame] = None,
-          observation: Option[DataFrame] = None,
-          measurement: Option[DataFrame] = None): DataFrame = {
+          drugEra: DataFrame, conditionEra: DataFrame, procedure: DataFrame,
+          drugExposure: DataFrame, observation: DataFrame,
+          measurement: DataFrame): DataFrame = {
     // (X00 id, table, concept column); X01 is X00 + 1
     val domains = Seq((200, visit, "visit_concept_id"),
-      (400, condition, "condition_concept_id")) ++
-      procedure.map((600, _, "procedure_concept_id")) ++
-      drugExposure.map((700, _, "drug_concept_id")) ++
-      observation.map((800, _, "observation_concept_id")) ++
-      measurement.map((1800, _, "measurement_concept_id"))
+      (400, condition, "condition_concept_id"),
+      (600, procedure, "procedure_concept_id"),
+      (700, drugExposure, "drug_concept_id"),
+      (800, observation, "observation_concept_id"),
+      (1800, measurement, "measurement_concept_id"))
     // X00: the person rides along, one row per distinct (analysis,
     // concept, person) survives
     val persons = domains
@@ -81,8 +77,8 @@ object Achilles {
       rows(3, person, Seq(col("year_of_birth"))),
       rows(4, person, Seq(col("race_concept_id")))) ++
       domains.map { case (id, df, c) => rows(id + 1, df, Seq(col(c))) } ++
-      drugEra.map(rows(900, _, Seq(col("drug_concept_id")))) ++
-      conditionEra.map(rows(1000, _, Seq(col("condition_concept_id"))))
+      Seq(rows(900, drugEra, Seq(col("drug_concept_id"))),
+        rows(1000, conditionEra, Seq(col("condition_concept_id"))))
     (persons +: records).reduce(_ unionByName _)
       .groupBy(("analysis_id" +: strata).map(col): _*)
       .agg(count(lit(1)).as("count_value"))
@@ -113,9 +109,9 @@ object Achilles {
           col("first.observation_period_start_date"))
           .cast(DoubleType).as("len"))
 
-  /** Distribution analyses → the separate achilles_results_dist table.
-    * With person + observation_period inputs the run also covers the
-    * observation-period defaults of the R Achilles set (103–107).
+  /** Distribution analyses → the separate achilles_results_dist table,
+    * the observation-period defaults of the R Achilles set (103–107)
+    * included.
     *
     * Every analysis contributes (analysis_id, stratum_1, len, w) rows of
     * weight 1. An unstratified analysis reports one row even over empty
@@ -123,32 +119,26 @@ object Achilles {
     * gets one seed row with a NULL `len` and weight 0, and `count_value`
     * sums the weights. Exact `percentile` for oracle parity — swap
     * percentile_approx at scale (SURVEY §8). */
-  def runDist(visit: DataFrame,
-              drugEra: Option[DataFrame] = None,
-              person: Option[DataFrame] = None,
-              observationPeriod: Option[DataFrame] = None): DataFrame = {
+  def runDist(visit: DataFrame, drugEra: DataFrame, person: DataFrame,
+              observationPeriod: DataFrame): DataFrame = {
     def days(end: String, start: String) =
       datediff(col(end), col(start)).cast(DoubleType).as("len")
+    val age = ageAtFirstObs(person, observationPeriod)
+    val first = firstPeriodLength(observationPeriod)
     // (analysis_id, rows with a `len`, stratum_1 if stratified)
-    val withPerson = for (p <- person; op <- observationPeriod) yield {
-      val age = ageAtFirstObs(p, op)
-      val first = firstPeriodLength(op)
-      Seq((103, age, None),
-        (104, age, Some(col("gender_concept_id"))),
-        (106, first.join(
-          p.select(col("person_id"), col("gender_concept_id")), "person_id"),
-          Some(col("gender_concept_id"))),
-        (107, first.join(
-          p.select(col("person_id"), col("year_of_birth")), "person_id"),
-          Some(floor((year(col("first_start")) - col("year_of_birth")) / 10))))
-    }
-    val analyses: Seq[(Int, DataFrame, Option[Column])] =
-      Seq((211, visit.select(days("visit_end_date", "visit_start_date")),
-        None)) ++
-      drugEra.map(e => (906,
-        e.select(days("drug_era_end_date", "drug_era_start_date")), None)) ++
-      withPerson.toSeq.flatten ++
-      observationPeriod.map(op => (105, firstPeriodLength(op), None))
+    val analyses: Seq[(Int, DataFrame, Option[Column])] = Seq(
+      (211, visit.select(days("visit_end_date", "visit_start_date")), None),
+      (906, drugEra.select(days("drug_era_end_date", "drug_era_start_date")),
+        None),
+      (103, age, None),
+      (104, age, Some(col("gender_concept_id"))),
+      (106, first.join(person.select(col("person_id"),
+        col("gender_concept_id")), "person_id"),
+        Some(col("gender_concept_id"))),
+      (107, first.join(person.select(col("person_id"),
+        col("year_of_birth")), "person_id"),
+        Some(floor((year(col("first_start")) - col("year_of_birth")) / 10))),
+      (105, first, None))
     val values = analyses.map { case (id, df, stratum) =>
       df.select(lit(id).as("analysis_id"),
         stratum.getOrElse(lit(null)).cast(StringType).as("stratum_1"),

@@ -1,26 +1,37 @@
 package graft.etl
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 import graft.ops.{Dedup, DenseId, SafeCast, Sweep}
 
 /** Silver→gold OMOP domain transforms (SURVEY.md §2.3–§2.7), re-expressed
-  * as pure DataFrame functions. Each takes typed inputs + the id maps and
-  * returns the OMOP table; idempotent re-runs use antiAppend against the
-  * existing table (the reference's NOT IN guards). The id maps are the
+  * as pure DataFrame functions. Each takes typed inputs + the run's
+  * [[IdMaps]] and returns the OMOP table. A rerun overwrites every table
+  * with the same rows: ids are dense ranks under a fixed order and every
+  * within-batch dedup keeps a tiebreak-first survivor, which is what the
+  * reference's NOT IN / NOT EXISTS guards protect. The id maps are the
   * only global coordination — everything else is broadcast-join + project.
   */
 object Domains {
 
-  /** person_map / visit_map: UUID → dense int (SURVEY §1.4, W2/M1;
+  /** The run's id maps — `person` (source_patient_id → person_id) and
+    * `visit` (source_visit_id → visit_occurrence_id), both
+    * [[buildIdMap]]'s dense 1..n output — and their sizes, which the
+    * closed-form dense-id buckets read. */
+  final case class IdMaps(person: DataFrame, visit: DataFrame,
+                          persons: Long, visits: Long)
+
+  /** person_map / visit_map: UUID → dense int numbered 1..n over the
+    * distinct non-null source ids in id order (SURVEY §1.4, W2/M1;
     * enhanced_synthea_to_omop.py:770-777,935-944). */
-  def buildIdMap(existing: Option[DataFrame], source: DataFrame,
-                 srcCol: String, idCol: String): DataFrame =
-    DenseId.extendIdMap(existing,
-      source.select(col(srcCol)).filter(col(srcCol).isNotNull),
-      srcCol, idCol)
+  def buildIdMap(source: DataFrame, srcCol: String,
+                 idCol: String): DataFrame =
+    DenseId.withDenseIdScalable(
+      source.select(col(srcCol)).filter(col(srcCol).isNotNull).distinct(),
+      Seq(col(srcCol)), idCol)
+      .select(col(srcCol), col(idCol).cast(LongType))
 
   /** Closed-form dense-id bucket for the ETL's person-leading orderings:
     * person_id is [[buildIdMap]]'s dense 1..n output, so
@@ -28,66 +39,55 @@ object Domains {
     * ordering and balanced across persons — [[DenseId]] then skips its
     * bounds-sampling pass entirely (one narrow counts pass + the single
     * full-width pass). */
-  private def personBucket(personCount: Option[Long],
-                           in: DataFrame): Option[Column] =
-    personCount.map(n =>
-      DenseId.denseLeadingIdBucket(col("person_id"), n, bucketParts(in)))
+  private def personBucket(persons: Long, in: DataFrame): Column =
+    DenseId.denseLeadingIdBucket(col("person_id"), persons, bucketParts(in))
+
+  /** Dense `idCol` under a person-leading `orderBy`, bucketed by
+    * [[personBucket]]. */
+  private def personOrderedIds(df: DataFrame, orderBy: Seq[Column],
+                               idCol: String, persons: Long): DataFrame =
+    DenseId.withDenseIdScalable(df, orderBy, idCol,
+      bucketBy = Some(personBucket(persons, df)))
 
   /** Buckets of a closed-form dense-id bucket: DenseId's own cap. */
   private def bucketParts(in: DataFrame): Int =
     math.min(1024, in.sparkSession.sessionState.conf.numShufflePartitions)
 
-  /** omop.person (enhanced_synthea_to_omop.py:786-859): demographic
-    * lookups joined case-insensitively (broadcast), unmapped → 0, dense
-    * person_id via map, idempotent. */
-  def person(spark: SparkSession, typedPatients: DataFrame,
-             personMap: DataFrame,
-             existing: Option[DataFrame] = None): DataFrame = {
-    val g = broadcast(Lookups.gender(spark)
-      .withColumn("k", lower(col("source_gender")))
-      .select(col("k"), col("gender_concept_id"))
-      .dropDuplicates("k"))
-    val r = broadcast(Lookups.race(spark)
-      .withColumn("k", lower(col("source_race")))
-      .select(col("k"), col("race_concept_id"))
-      .dropDuplicates("k"))
-    val e = broadcast(Lookups.ethnicity(spark)
-      .withColumn("k", lower(col("source_ethnicity")))
-      .select(col("k"), col("ethnicity_concept_id"))
-      .dropDuplicates("k"))
+  /** The concept of a demographic source value: [[Lookups]] keyed by the
+    * lower-cased value, unmapped or NULL → 0. */
+  private def lookup(m: Map[String, Long], src: String): Column =
+    coalesce(element_at(typedLit(m), lower(col(src))), lit(0L))
+
+  /** omop.person (enhanced_synthea_to_omop.py:786-859): demographics
+    * looked up case-insensitively in literal maps, unmapped → 0, dense
+    * person_id via the broadcast person map. */
+  def person(typedPatients: DataFrame, ids: IdMaps): DataFrame = {
     val out = typedPatients
-      .join(broadcast(personMap), col("id") === col("source_patient_id"))
-      .join(g, lower(col("gender_source")) === g("k"), "left")
-      .join(r, lower(col("race_source")) === r("k"), "left")
-      .join(e, lower(col("ethnicity_source")) === e("k"), "left")
+      .join(broadcast(ids.person), col("id") === col("source_patient_id"))
       .select(
         col("person_id"),
-        coalesce(col("gender_concept_id"), lit(0L)).as("gender_concept_id"),
+        lookup(Lookups.gender, "gender_source").as("gender_concept_id"),
         year(col("birthdate")).as("year_of_birth"),
         month(col("birthdate")).as("month_of_birth"),
         dayofmonth(col("birthdate")).as("day_of_birth"),
         col("birthdate").cast("timestamp").as("birth_datetime"),
-        coalesce(col("race_concept_id"), lit(0L)).as("race_concept_id"),
-        coalesce(col("ethnicity_concept_id"), lit(0L))
+        lookup(Lookups.race, "race_source").as("race_concept_id"),
+        lookup(Lookups.ethnicity, "ethnicity_source")
           .as("ethnicity_concept_id"),
         col("id").as("person_source_value"),
         col("gender_source").as("gender_source_value"),
         col("race_source").as("race_source_value"),
         col("ethnicity_source").as("ethnicity_source_value"))
-    // deterministic survivor for duplicated source patient rows —
-    // ALWAYS, not only on the incremental path: buildIdMap assigns one
-    // person_id per distinct source id, so two identical source rows
-    // would otherwise both emit person rows sharing that person_id on a
-    // first run (existing = None, as EtlRunner calls it), tripping the
-    // pipeline's own duplicate_person_ids validation. Rerun output is
-    // byte-stable regardless of partitioning.
-    val tiebreak = Seq(col("birth_datetime").asc_nulls_last,
-      col("gender_source_value").asc_nulls_last,
-      col("race_source_value").asc_nulls_last,
-      col("ethnicity_source_value").asc_nulls_last)
-    val deduped = Dedup.firstRowPerGroup(out, Seq(col("person_id")), tiebreak)
-    existing.fold(deduped)(ex =>
-      Dedup.antiAppendDeterministic(deduped, ex, Seq("person_id"), tiebreak))
+    // deterministic survivor for duplicated source patient rows:
+    // buildIdMap assigns one person_id per distinct source id, so two
+    // identical source rows would otherwise both emit person rows sharing
+    // that person_id, tripping the pipeline's own duplicate_person_ids
+    // validation. Rerun output is byte-stable regardless of partitioning.
+    Dedup.firstRowPerGroup(out, Seq(col("person_id")),
+      Seq(col("birth_datetime").asc_nulls_last,
+        col("gender_source_value").asc_nulls_last,
+        col("race_source_value").asc_nulls_last,
+        col("ethnicity_source_value").asc_nulls_last))
   }
 
   /** ENCOUNTERCLASS → visit concept (transform_visit_occurrence_v2.sql:
@@ -104,11 +104,10 @@ object Domains {
   }
 
   /** omop.visit_occurrence (enhanced_synthea_to_omop.py:968-1016). */
-  def visitOccurrence(typedEncounters: DataFrame, personMap: DataFrame,
-                      visitMap: DataFrame): DataFrame =
+  def visitOccurrence(typedEncounters: DataFrame, ids: IdMaps): DataFrame =
     typedEncounters
-      .join(broadcast(visitMap), col("id") === col("source_visit_id"))
-      .join(broadcast(personMap), col("patient") === col("source_patient_id"))
+      .join(broadcast(ids.visit), col("id") === col("source_visit_id"))
+      .join(broadcast(ids.person), col("patient") === col("source_patient_id"))
       .select(
         col("visit_occurrence_id"),
         col("person_id"),
@@ -120,39 +119,38 @@ object Domains {
         lit(32817L).as("visit_type_concept_id"), // EHR
         col("id").as("visit_source_value"))
 
-  /** Shared event-domain shape: person/visit resolution + within-batch
-    * dedup on the reference's NOT EXISTS key (J1/J4;
+  /** Shared event-domain shape: person (inner) / visit (left) resolution +
+    * within-batch dedup on the reference's NOT EXISTS key (J1/J4;
     * enhanced_synthea_to_omop.py:1102-1127 for conditions).
     *
     * `tiebreak` makes the SURVIVOR deterministic: rows agreeing on the
     * dedup key can still differ in non-key columns (a re-recorded
-    * diagnosis with a different stop date), and a plain dropDuplicates
-    * would leave those columns to partition order — reruns would not be
-    * byte-stable, against the pipeline's determinism contract (the same
-    * fix deviceExposure applies explicitly). */
-  private def eventDomain(typed: DataFrame, personMap: DataFrame,
-                          visitMap: DataFrame, dedupKeys: Seq[String],
+    * diagnosis with a different stop date, a device or vaccination
+    * re-recorded across same-instant encounters), and a plain
+    * dropDuplicates would leave those columns to partition order —
+    * reruns would not be byte-stable, against the pipeline's determinism
+    * contract. */
+  private def eventDomain(typed: DataFrame, ids: IdMaps,
+                          dedupKeys: Seq[String],
                           tiebreak: Seq[Column]): DataFrame =
     Dedup.firstRowPerGroup(
       typed
-        .join(broadcast(personMap),
+        .join(broadcast(ids.person),
           col("patient") === col("source_patient_id"))
-        .join(broadcast(visitMap),
+        .join(broadcast(ids.visit),
           col("encounter") === col("source_visit_id"), "left"),
       dedupKeys.map(col), tiebreak)
 
   /** omop.condition_occurrence (:1102-1150). */
-  def conditionOccurrence(typedConditions: DataFrame, personMap: DataFrame,
-                          visitMap: DataFrame,
-                          personCount: Option[Long] = None): DataFrame =
-    DenseId.withDenseIdScalable(
-      eventDomain(typedConditions, personMap, visitMap,
+  def conditionOccurrence(typedConditions: DataFrame,
+                          ids: IdMaps): DataFrame =
+    personOrderedIds(
+      eventDomain(typedConditions, ids,
         Seq("person_id", "encounter", "code"),
         Seq(col("start_date").asc_nulls_last,
           col("stop_date").asc_nulls_last)),
       Seq(col("person_id"), col("encounter"), col("code")),
-      "condition_occurrence_id",
-      bucketBy = personBucket(personCount, typedConditions))
+      "condition_occurrence_id", ids.persons)
       .select(
         col("condition_occurrence_id"),
         col("person_id"),
@@ -179,17 +177,14 @@ object Domains {
     * carry no cost_id here — [[cost]] assigns one dense sequence across
     * all three domains, mirroring the reference's shared staging.cost_seq
     * — and keep `person_id` for its closed-form bucket. */
-  def drugExposureAndCost(typedMedications: DataFrame, personMap: DataFrame,
-                          visitMap: DataFrame,
-                          personCount: Option[Long] = None)
+  def drugExposureAndCost(typedMedications: DataFrame, ids: IdMaps)
       : (DataFrame, DataFrame) = {
-    val based = DenseId.withDenseIdScalable(
-      eventDomain(typedMedications, personMap, visitMap,
+    val based = personOrderedIds(
+      eventDomain(typedMedications, ids,
         Seq("person_id", "encounter", "code", "start_ts"),
         Seq(col("stop_ts").asc_nulls_last)),
       Seq(col("person_id"), col("encounter"), col("code"), col("start_ts")),
-      "drug_exposure_id",
-      bucketBy = personBucket(personCount, typedMedications))
+      "drug_exposure_id", ids.persons)
     val exposure = based
       .select(
         col("drug_exposure_id"),
@@ -224,17 +219,14 @@ object Domains {
     * the paid-side columns are NULL by reference contract — Synthea
     * procedures carry no payer split). Same one-pass sharing as
     * [[drugExposureAndCost]]. */
-  def procedureOccurrenceAndCost(typedProcedures: DataFrame,
-                                 personMap: DataFrame, visitMap: DataFrame,
-                                 personCount: Option[Long] = None)
+  def procedureOccurrenceAndCost(typedProcedures: DataFrame, ids: IdMaps)
       : (DataFrame, DataFrame) = {
-    val based = DenseId.withDenseIdScalable(
-      eventDomain(typedProcedures, personMap, visitMap,
+    val based = personOrderedIds(
+      eventDomain(typedProcedures, ids,
         Seq("person_id", "encounter", "code", "start_ts"),
         Seq(col("stop_ts").asc_nulls_last)),
       Seq(col("person_id"), col("encounter"), col("code"), col("start_ts")),
-      "procedure_occurrence_id",
-      bucketBy = personBucket(personCount, typedProcedures))
+      "procedure_occurrence_id", ids.persons)
     val occurrence = based
       .select(
         col("procedure_occurrence_id"),
@@ -260,33 +252,20 @@ object Domains {
     (occurrence, procCost)
   }
 
-  /** omop.device_exposure (synthea-omop-ETL.sql:242-296): typed devices →
-    * person (inner) / visit (left) map joins, UDI carried as
+  /** omop.device_exposure (synthea-omop-ETL.sql:242-296): UDI carried as
     * unique_device_id, start/stop timestamps projected to date+datetime,
     * type 44818707 ("Device Recorded from EHR"), concept mapped by the
     * reference's case-insensitive code prefix rule (ILIKE 'DEVICE123%' →
     * 4263759, else 0 until staged vocabulary mapping fills it). Dedup
     * mirrors the NOT EXISTS key (person, start datetime, code). */
-  def deviceExposure(typedDevices: DataFrame, personMap: DataFrame,
-                     visitMap: DataFrame,
-                     personCount: Option[Long] = None): DataFrame =
-    DenseId.withDenseIdScalable(
-      // deterministic survivor on the reference's NOT EXISTS key: rows
-      // agreeing on (person, start, code) but differing in encounter or
-      // stop (re-recorded device across same-instant encounters) must
-      // not leave visit/end columns to partition order
-      Dedup.firstRowPerGroup(
-        typedDevices
-          .join(broadcast(personMap),
-            col("patient") === col("source_patient_id"))
-          .join(broadcast(visitMap),
-            col("encounter") === col("source_visit_id"), "left"),
-        Seq(col("person_id"), col("start_time"), col("code")),
+  def deviceExposure(typedDevices: DataFrame, ids: IdMaps): DataFrame =
+    personOrderedIds(
+      eventDomain(typedDevices, ids,
+        Seq("person_id", "start_time", "code"),
         Seq(col("encounter").asc_nulls_last,
           col("stop_time").asc_nulls_last)),
       Seq(col("person_id"), col("start_time"), col("code")),
-      "device_exposure_id",
-      bucketBy = personBucket(personCount, typedDevices))
+      "device_exposure_id", ids.persons)
       .select(
         col("device_exposure_id"),
         col("person_id"),
@@ -306,19 +285,16 @@ object Domains {
     * value_as_number; otherwise → observation with value_as_string. Two
     * filtered projections off one parent — no mutation, no second scan
     * after cache. */
-  def measurementObservationSplit(typedObservations: DataFrame,
-                                  personMap: DataFrame, visitMap: DataFrame,
-                                  personCount: Option[Long] = None)
+  def measurementObservationSplit(typedObservations: DataFrame, ids: IdMaps)
       : (DataFrame, DataFrame) = {
-    val base = eventDomain(typedObservations, personMap, visitMap,
+    val base = eventDomain(typedObservations, ids,
       Seq("person_id", "encounter", "code", "obs_ts", "value"),
       Seq(col("units").asc_nulls_last))
-    val pb = personBucket(personCount, typedObservations)
     val isNum = SafeCast.isNumericString(col("value"))
-    val meas = DenseId.withDenseIdScalable(
+    val meas = personOrderedIds(
       base.filter(col("value").isNotNull && isNum),
       Seq(col("person_id"), col("encounter"), col("code"), col("obs_ts")),
-      "measurement_id", bucketBy = pb)
+      "measurement_id", ids.persons)
       .select(
         col("measurement_id"),
         col("person_id"),
@@ -331,10 +307,10 @@ object Domains {
         col("visit_occurrence_id"),
         col("code").as("measurement_source_value"),
         substring(col("value"), 1, 50).as("value_source_value"))
-    val obs = DenseId.withDenseIdScalable(
+    val obs = personOrderedIds(
       base.filter(col("value").isNull || !isNum),
       Seq(col("person_id"), col("encounter"), col("code"), col("obs_ts")),
-      "observation_id", bucketBy = pb)
+      "observation_id", ids.persons)
       .select(
         col("observation_id"),
         col("person_id"),
@@ -354,12 +330,11 @@ object Domains {
     * DDL but never populates it; the OHDSI-standard derivation is
     * gaps-and-islands, here [[graft.ops.Intervals]] — one shuffle on the
     * (person, concept) key, both windows and the covered-day sub-islands
-    * reuse its partitioning.
+    * reuse its partitioning. `persons` is the person map's size.
     *
     * gap_days = datediff(era span) − Σ datediff of the maximal
     * continuously-covered sub-islands (un-exposed days inside the era). */
-  def drugEra(drugExposure: DataFrame,
-              personCount: Option[Long] = None): DataFrame = {
+  def drugEra(drugExposure: DataFrame, persons: Long): DataFrame = {
     val keys = Seq(col("person_id"), col("drug_concept_id"))
     val persist30 = expr("INTERVAL 30 DAYS")
     val tagged = graft.ops.Intervals.assignIslands(
@@ -384,10 +359,9 @@ object Domains {
         (datediff(col("drug_era_end_date"), col("drug_era_start_date"))
           - col("covered_days")).cast("int")) // DDL: integer (:353-354)
       .drop("__era", "covered_days")
-    DenseId.withDenseIdScalable(eras,
+    personOrderedIds(eras,
       Seq(col("person_id"), col("drug_concept_id"),
-        col("drug_era_start_date")), "drug_era_id",
-      bucketBy = personBucket(personCount, drugExposure))
+        col("drug_era_start_date")), "drug_era_id", persons)
       .select(col("drug_era_id"), col("person_id"),
         col("drug_concept_id"), col("drug_era_start_date"),
         col("drug_era_end_date"), col("drug_exposure_count"),
@@ -397,7 +371,7 @@ object Domains {
   /** omop.condition_era (OMOPCDM_postgresql_5.4_ddl.sql:365-371): same
     * 30-day persistence merge keyed on (person, condition concept). */
   def conditionEra(conditionOccurrence: DataFrame,
-                   personCount: Option[Long] = None): DataFrame = {
+                   persons: Long): DataFrame = {
     val eras = graft.ops.Intervals.mergeIntervals(
       conditionOccurrence.select(col("person_id"),
         col("condition_concept_id"),
@@ -409,28 +383,39 @@ object Domains {
         col("era_start").as("condition_era_start_date"),
         col("era_end").as("condition_era_end_date"),
         col("n_merged").cast("int").as("condition_occurrence_count"))
-    DenseId.withDenseIdScalable(eras,
+    personOrderedIds(eras,
       Seq(col("person_id"), col("condition_concept_id"),
-        col("condition_era_start_date")), "condition_era_id",
-      bucketBy = personBucket(personCount, conditionOccurrence))
+        col("condition_era_start_date")), "condition_era_id", persons)
       .select(col("condition_era_id"), col("person_id"),
         col("condition_concept_id"), col("condition_era_start_date"),
         col("condition_era_end_date"), col("condition_occurrence_count"))
   }
 
+  /** Allergy spans for the observation-period sweep
+    * (etl_pipeline/etl_observation_periods.py:81-145 includes allergies):
+    * (person_id, start_date, end_date), an open allergy ending where it
+    * starts. */
+  def allergySpans(typedAllergies: DataFrame, ids: IdMaps): DataFrame =
+    typedAllergies
+      .join(broadcast(ids.person), col("patient") === col("source_patient_id"))
+      .select(col("person_id"),
+        col("start_time").cast("date").as("start_date"),
+        coalesce(col("stop_time"), col("start_time")).cast("date")
+          .as("end_date"))
+
   /** omop.observation_period (U1+A2; create_observation_period_v2.sql:
-    * 10-55): min/max event date per person over the unioned domains. */
+    * 10-55): min/max event date per person over the unioned domains'
+    * (person_id, start_date, end_date) spans. */
   def observationPeriod(sweepInputs: Seq[DataFrame],
-                        personCount: Option[Long] = None): DataFrame = {
+                        persons: Long): DataFrame = {
     val spans = sweepInputs.map(_.select(
       col("person_id"),
       col("start_date").cast("date").as("start_date"),
       col("end_date").cast("date").as("end_date")))
-    DenseId.withDenseIdScalable(
+    personOrderedIds(
       Sweep.spanPerKey(Sweep.unionSweep(spans), "person_id",
         "start_date", "end_date"),
-      Seq(col("person_id")), "observation_period_id",
-      bucketBy = personBucket(personCount, sweepInputs.head))
+      Seq(col("person_id")), "observation_period_id", persons)
       .select(
         col("observation_period_id"),
         col("person_id"),
@@ -440,21 +425,16 @@ object Domains {
   }
 
   /** Immunizations → omop.drug_exposure (synthea-omop-ETL.sql:460-501):
-    * same-day exposure, type 38000177, dedup on (person, datetime, code). */
+    * same-day exposure, type 38000177, dedup on (person, datetime, code),
+    * the lowest encounter surviving. */
   def immunizationDrugExposure(typedImmunizations: DataFrame,
-                               personMap: DataFrame,
-                               visitMap: DataFrame,
-                               personCount: Option[Long] = None): DataFrame =
-    DenseId.withDenseIdScalable(
-      typedImmunizations
-        .join(broadcast(personMap),
-          col("patient") === col("source_patient_id"))
-        .join(broadcast(visitMap),
-          col("encounter") === col("source_visit_id"), "left")
-        .dropDuplicates("person_id", "date_time", "code"),
+                               ids: IdMaps): DataFrame =
+    personOrderedIds(
+      eventDomain(typedImmunizations, ids,
+        Seq("person_id", "date_time", "code"),
+        Seq(col("encounter").asc_nulls_last)),
       Seq(col("person_id"), col("date_time"), col("code")),
-      "drug_exposure_id",
-      bucketBy = personBucket(personCount, typedImmunizations))
+      "drug_exposure_id", ids.persons)
       .select(
         col("drug_exposure_id"),
         col("person_id"),
@@ -471,12 +451,12 @@ object Domains {
     * paid_by_patient = total_claim − payer_coverage computed in
     * DecimalType, so no float drift (SURVEY §7.4 risk 4). Id-less rows;
     * [[cost]] assigns the shared dense sequence. */
-  def visitCost(typedEncounters: DataFrame, visitMap: DataFrame): DataFrame =
+  def visitCost(typedEncounters: DataFrame, ids: IdMaps): DataFrame =
     typedEncounters
       .filter(col("base_encounter_cost").isNotNull ||
         col("total_claim_cost").isNotNull ||
         col("payer_coverage").isNotNull)
-      .join(broadcast(visitMap), col("id") === col("source_visit_id"))
+      .join(broadcast(ids.visit), col("id") === col("source_visit_id"))
       .select(
         col("visit_occurrence_id").as("cost_event_id"),
         lit("Visit").as("cost_domain_id"),
@@ -496,32 +476,30 @@ object Domains {
     * explicit decimal widening: the subtraction branches carry
     * DecimalType(11,2) while Procedure's NULLs are (10,2).
     *
-    * With the person and visit counts, the id pass takes a closed-form
-    * bucket that is monotone along (domain, event id), so [[DenseId]]
-    * skips its bounds-sampling pass: Drug rows (first by name) take
-    * [[personBucket]] — drug ids are assigned in person-leading order —
-    * Procedure rows P + the same, and Visit rows 2P + the dense visit id's
-    * bucket (visit ids are 1..nVisits). The drug and procedure rows must
-    * then carry `person_id`, which is not written. */
+    * The id pass takes a closed-form bucket that is monotone along
+    * (domain, event id), so [[DenseId]] skips its bounds-sampling pass:
+    * Drug rows (first by name) take [[personBucket]] — drug ids are
+    * assigned in person-leading order — Procedure rows P + the same, and
+    * Visit rows 2P + the dense visit id's bucket (visit ids are
+    * 1..visits). The drug and procedure rows must then carry
+    * `person_id`, which is not written. */
   def cost(visitRows: DataFrame, drugRows: DataFrame,
-           procedureRows: DataFrame, personCount: Option[Long] = None,
-           visitCount: Option[Long] = None): DataFrame = {
+           procedureRows: DataFrame, ids: IdMaps): DataFrame = {
     val widened = Seq(visitRows, drugRows, procedureRows).map { df =>
       df.withColumn("paid_by_patient",
         col("paid_by_patient").cast(DecimalType(11, 2)))
     }
-    val bucket = for (np <- personCount; nv <- visitCount) yield {
-      val parts = bucketParts(visitRows)
-      val person = DenseId.denseLeadingIdBucket(col("person_id"), np, parts)
+    val parts = bucketParts(visitRows)
+    val person = personBucket(ids.persons, visitRows)
+    val bucket =
       when(col("cost_domain_id") === "Drug", person)
         .when(col("cost_domain_id") === "Procedure", person + parts)
-        .otherwise(DenseId.denseLeadingIdBucket(col("cost_event_id"), nv,
-          parts) + 2 * parts)
-    }
+        .otherwise(DenseId.denseLeadingIdBucket(col("cost_event_id"),
+          ids.visits, parts) + 2 * parts)
     DenseId.withDenseIdScalable(
       widened.reduce(_.unionByName(_, allowMissingColumns = true)),
       Seq(col("cost_domain_id"), col("cost_event_id")), "cost_id",
-      bucketBy = bucket)
+      bucketBy = Some(bucket))
       .select(
         col("cost_id"),
         col("cost_event_id"),
@@ -535,14 +513,25 @@ object Domains {
         col("paid_by_patient"))
   }
 
-  /** omop.payer_plan_period (synthea-omop-ETL.sql:540-560): one row per
-    * person-year, end = start + 1 year − 1 day (P7). */
-  def payerPlanPeriod(personYears: DataFrame,
-                      personCount: Option[Long] = None): DataFrame =
-    DenseId.withDenseIdScalable(
-      personYears,
+  /** omop.payer_plan_period (synthea-omop-ETL.sql:530-565): one row per
+    * person-year of coverage, end = start + 1 year − 1 day (P7). The
+    * reference's NOT EXISTS key is (person, period start); the payer
+    * tiebreak makes the survivor deterministic when one person-year
+    * carries two payers (mid-year switch). */
+  def payerPlanPeriod(typedExpenses: DataFrame, ids: IdMaps): DataFrame = {
+    val personYears = Dedup.firstRowPerGroup(
+      typedExpenses
+        .join(broadcast(ids.person),
+          col("patient_id") === col("source_patient_id"))
+        .select(col("person_id"),
+          make_date(col("year"), lit(1), lit(1)).as("year_date"),
+          col("payer_id"))
+        .filter(col("year_date").isNotNull),
+      Seq(col("person_id"), col("year_date")),
+      Seq(col("payer_id").asc_nulls_last))
+    personOrderedIds(personYears,
       Seq(col("person_id"), col("year_date")), "payer_plan_period_id",
-      bucketBy = personBucket(personCount, personYears))
+      ids.persons)
       .select(
         col("payer_plan_period_id"),
         col("person_id"),
@@ -552,12 +541,13 @@ object Domains {
         lit(0L).as("payer_concept_id"),
         col("payer_id").as("payer_source_value"),
         lit(0L).as("plan_concept_id"))
+  }
 
   /** omop.death (transform_death.sql:27): patients with DEATHDATE. */
-  def death(typedPatients: DataFrame, personMap: DataFrame): DataFrame =
+  def death(typedPatients: DataFrame, ids: IdMaps): DataFrame =
     typedPatients
       .filter(col("deathdate").isNotNull)
-      .join(broadcast(personMap), col("id") === col("source_patient_id"))
+      .join(broadcast(ids.person), col("id") === col("source_patient_id"))
       .select(
         col("person_id"),
         col("deathdate").as("death_date"),

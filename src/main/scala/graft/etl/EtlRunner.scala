@@ -145,28 +145,27 @@ object EtlRunner {
         Typing.observations(Ingest.readRepaired(spark, in("observations"))))
 
       // id maps (the only global coordination)
-      val personMap = save("person_map", tPat)(p => Domains.buildIdMap(None,
-        p.filter(col("id").isNotNull), "id", "person_id")
-        .withColumnRenamed("id", "source_patient_id"))
-      val visitMap = save("visit_map", tEnc)(e => Domains.buildIdMap(None,
-        e, "id", "visit_occurrence_id")
-        .withColumnRenamed("id", "source_visit_id"))
-      // nPersons feeds the closed-form person-leading dense-id bucket
-      // (Domains.personBucket): person ids are dense 1..n, so every
-      // person-ordered id assignment skips DenseId's bounds-sampling pass —
-      // the count on the freshly written map parquet is a sub-second
-      // metadata-shaped job, paid once for the whole run.
-      val nPersons = step("person_count", personMap)(p => Some(p.count()))
-      val ids = for (p <- personMap; v <- visitMap; n <- nPersons)
-        yield IdMaps(p, v, n)
-      // visit ids are dense 1..n as well: cost's closed-form bucket
-      val nVisits = step("visit_count", visitMap)(v => Some(v.count()))
+      val personMap = save("person_map", tPat)(p =>
+        Domains.buildIdMap(p, "id", "person_id")
+          .withColumnRenamed("id", "source_patient_id"))
+      val visitMap = save("visit_map", tEnc)(e =>
+        Domains.buildIdMap(e, "id", "visit_occurrence_id")
+          .withColumnRenamed("id", "source_visit_id"))
+      // the counts feed the closed-form dense-id buckets (Domains.
+      // personBucket, cost's visit bucket): person and visit ids are dense
+      // 1..n, so every person-ordered id assignment skips DenseId's
+      // bounds-sampling pass — each count on the freshly written map
+      // parquet is a sub-second metadata-shaped job, paid once per run.
+      val nPersons = step("person_count", personMap)(_.count())
+      val nVisits = step("visit_count", visitMap)(_.count())
+      val ids = for (p <- personMap; v <- visitMap; np <- nPersons;
+                     nv <- nVisits) yield Domains.IdMaps(p, v, np, nv)
 
       // gold domains
       val person = save("person", tPat.zip(ids)) { case (p, m) =>
-        Domains.person(spark, p, m.person) }
+        Domains.person(p, m) }
       val visit = save("visit_occurrence", tEnc.zip(ids)) { case (e, m) =>
-        Domains.visitOccurrence(e, m.person, m.visit) }
+        Domains.visitOccurrence(e, m) }
 
       // vocabulary concept mapping when a vocab dir is given: the 3-stage
       // chain resolved once for all five domains into one code map,
@@ -202,22 +201,20 @@ object EtlRunner {
       // merged drug_era and stratifying Achilles under concept 0
       val cond = save("condition_occurrence", tCon.zip(ids).zip(vocab)) {
         case ((c, m), v) => mapConcepts(v,
-          Domains.conditionOccurrence(c, m.person, m.visit, m.nPersons),
+          Domains.conditionOccurrence(c, m),
           "condition_source_value", "condition_source_concept_id",
           "condition_concept_id", "Condition")
       }
       // the id passes shared by each domain and its cost rows
       val drugIds = step("drug_exposure ids", tMed.zip(ids)) { case (t, m) =>
-        Domains.drugExposureAndCost(t, m.person, m.visit, m.nPersons) }
+        Domains.drugExposureAndCost(t, m) }
       val drug = save("drug_exposure", drugIds.zip(vocab)) {
         case ((d, _), v) => mapConcepts(v, d,
           "drug_source_value", "drug_source_concept_id",
           "drug_concept_id", "Drug")
       }
       val procIds = step("procedure_occurrence ids", tPro.zip(ids)) {
-        case (t, m) =>
-          Domains.procedureOccurrenceAndCost(t, m.person, m.visit, m.nPersons)
-      }
+        case (t, m) => Domains.procedureOccurrenceAndCost(t, m) }
       val proc = save("procedure_occurrence", procIds.zip(vocab)) {
         case ((p, _), v) => mapConcepts(v, p,
           "procedure_source_value", "procedure_source_concept_id",
@@ -230,9 +227,7 @@ object EtlRunner {
       val condEra = save("condition_era", cond.zip(nPersons)) {
         case (c, n) => Domains.conditionEra(c, n) }
       val measObsIds = step("measurement/observation ids", tObs.zip(ids)) {
-        case (t, m) => Domains.measurementObservationSplit(t, m.person,
-          m.visit, m.nPersons)
-      }
+        case (t, m) => Domains.measurementObservationSplit(t, m) }
       val measT = save("measurement", measObsIds.zip(vocab)) {
         case ((meas, _), v) => mapConcepts(v, meas,
           "measurement_source_value", "measurement_source_concept_id",
@@ -244,76 +239,37 @@ object EtlRunner {
           "observation_concept_id", "Observation")
       }
       save("death", tPat.zip(ids)) { case (p, m) =>
-        Domains.death(p, m.person) }
+        Domains.death(p, m) }
       // cost: all three reference strata (Visit/Drug/Procedure,
       // transform_cost.sql's three INSERT blocks) under one dense cost_id
-      save("cost", tEnc.zip(ids).zip(nVisits).zip(drugIds).zip(procIds)) {
-        case ((((e, m), nv), (_, drugCost)), (_, procCost)) =>
-          Domains.cost(Domains.visitCost(e, m.visit), drugCost, procCost,
-            m.nPersons, nv)
+      save("cost", tEnc.zip(ids).zip(drugIds).zip(procIds)) {
+        case (((e, m), (_, drugCost)), (_, procCost)) =>
+          Domains.cost(Domains.visitCost(e, m), drugCost, procCost, m)
       }
-      // optional source: immunizations → drug_exposure rows
-      val immDrug =
-        if (pathExists(spark, in("immunizations")))
-          Some(save("drug_exposure_immunizations", ids) { m =>
-            val tImm = TypedTables.typedTable(
-              Ingest.readRepaired(spark, in("immunizations")), "immunizations")
-            Domains.immunizationDrugExposure(tImm, m.person, m.visit,
-              m.nPersons)
-          })
+      // an optional source's typed table, read inside the step using it
+      def optional(n: String): Option[() => DataFrame] =
+        if (pathExists(spark, in(n))) Some(() =>
+          TypedTables.typedTable(Ingest.readRepaired(spark, in(n)), n))
         else None
-      // optional source: patient_expenses → payer_plan_period
-      // (synthea-omop-ETL.sql:530-565: one row per person-year of coverage)
-      if (pathExists(spark, in("patient_expenses")))
-        save("payer_plan_period", ids) { m =>
-          val tExp = TypedTables.typedTable(
-            Ingest.readRepaired(spark, in("patient_expenses")),
-            "patient_expenses")
-          val personYears = graft.ops.Dedup.firstRowPerGroup(
-            tExp
-              .join(broadcast(m.person),
-                col("patient_id") === col("source_patient_id"))
-              .select(col("person_id"),
-                make_date(col("year"), lit(1), lit(1)).as("year_date"),
-                col("payer_id"))
-              .filter(col("year_date").isNotNull),
-            // the reference's NOT EXISTS key (person, period start); payer
-            // tiebreak makes the survivor deterministic when one
-            // person-year carries two payers (mid-year switch) — reruns
-            // stay byte-stable
-            Seq(col("person_id"), col("year_date")),
-            Seq(col("payer_id").asc_nulls_last))
-          Domains.payerPlanPeriod(personYears, m.nPersons)
-        }
-      // optional source: devices → device_exposure (synthea-omop-ETL.sql:242)
-      if (pathExists(spark, in("devices")))
-        save("device_exposure", ids) { m =>
-          val tDev = TypedTables.typedTable(
-            Ingest.readRepaired(spark, in("devices")), "devices")
-          Domains.deviceExposure(tDev, m.person, m.visit, m.nPersons)
-        }
-      // optional source: allergies feed the observation-period sweep
+      // immunizations → drug_exposure rows (synthea-omop-ETL.sql:460-501)
+      val immDrug = optional("immunizations").map(t =>
+        save("drug_exposure_immunizations", ids)(m =>
+          Domains.immunizationDrugExposure(t(), m)))
+      // patient_expenses → payer_plan_period (synthea-omop-ETL.sql:530-565)
+      optional("patient_expenses").foreach(t =>
+        save("payer_plan_period", ids)(m => Domains.payerPlanPeriod(t(), m)))
+      // devices → device_exposure (synthea-omop-ETL.sql:242)
+      optional("devices").foreach(t =>
+        save("device_exposure", ids)(m => Domains.deviceExposure(t(), m)))
+      // allergies feed the observation-period sweep
       // (etl_pipeline/etl_observation_periods.py:81-145 includes both)
-      val allergySpans =
-        if (pathExists(spark, in("allergies")))
-          Some(step("allergies", ids) { m =>
-            TypedTables.typedTable(
-              Ingest.readRepaired(spark, in("allergies")), "allergies")
-              .join(broadcast(m.person),
-                col("patient") === col("source_patient_id"))
-              .select(col("person_id"),
-                col("start_time").cast("date").as("start_date"),
-                coalesce(col("stop_time"), col("start_time")).cast("date")
-                  .as("end_date"))
-          })
-        else None
+      val allergySpans = optional("allergies").map(t =>
+        step("allergies", ids)(m => Domains.allergySpans(t(), m)))
 
       save("achilles_results", Future.sequence(Seq(person, visit, cond,
         drugEra, condEra, proc, drug, obsT, measT))) {
         case Seq(p, v, c, de, ce, pr, d, o, m) =>
-          graft.analyze.Achilles.run(p, v, c, Some(de), Some(ce),
-            procedure = Some(pr), drugExposure = Some(d), observation = Some(o),
-            measurement = Some(m))
+          graft.analyze.Achilles.run(p, v, c, de, ce, pr, d, o, m)
       }
       // (table, start column, end column) of each observation-period input
       val sweep = Seq(
@@ -327,23 +283,22 @@ object EtlRunner {
         allergySpans.map((_, "start_date", "end_date"))
       val obsPeriod = save("observation_period",
         Future.sequence(sweep.map(_._1)).zip(nPersons)) { case (dfs, n) =>
-        Domains.observationPeriod(personCount = n, sweepInputs =
+        Domains.observationPeriod(
           dfs.zip(sweep).map { case (df, (_, start, end)) =>
             df.select(col("person_id"), col(start).as("start_date"),
               col(end).as("end_date"))
-          })
+          }, n)
       }
       // the dist analyses scan the written period parquet rather than
       // recomputing the multi-domain span sweep (the widest union in the run)
       save("achilles_results_dist",
         Future.sequence(Seq(visit, drugEra, person, obsPeriod))) {
-        case Seq(v, de, p, op) => graft.analyze.Achilles.runDist(v, Some(de),
-          person = Some(p), observationPeriod = Some(op))
+        case Seq(v, de, p, op) => graft.analyze.Achilles.runDist(v, de, p, op)
       }
 
       step("validation", Future.sequence(Seq(person, visit, cond, measT, obsT,
         drugEra, condEra))) { case Seq(p, v, c, m, o, de, ce) =>
-        Validation.report(spark, p, v, c, m, o, Some(de), Some(ce))
+        Validation.report(spark, p, v, c, m, o, de, ce)
           .coalesce(1).write.mode("overwrite").json(s"$outDir/validation")
       }
       steps.join()
@@ -355,9 +310,6 @@ object EtlRunner {
     spark.read.schema("check_name STRING, failed_count LONG")
       .json(s"$outDir/validation")
   }
-
-  private final case class IdMaps(person: DataFrame, visit: DataFrame,
-                                  nPersons: Option[Long])
 
   /** The vocabulary each vocabulary-mapped domain's source codes are in. */
   private val VocabularyOf = Map("Condition" -> "SNOMED", "Drug" -> "RxNorm",

@@ -36,11 +36,14 @@ object Ingest {
 
   /** S3: malformed-row repair, the reference's only true row-level
     * function. Rows whose field count ≠ ncols are fixed per-partition:
-    * too few fields → pad with empty strings; too many → the overflow is
-    * merged into the LAST base field (the reference sniffs UUID prefixes
-    * to decide the merge point, preprocess_synthea_csv.py:155-230; the
+    * too few fields → pad with NULLs; too many → the overflow is merged
+    * into the LAST base field (the reference sniffs UUID prefixes to
+    * decide the merge point, preprocess_synthea_csv.py:155-230; the
     * trailing-merge covers its dominant case of unquoted commas in
-    * free-text description columns). Quoted fields are honored. */
+    * free-text description columns). Quoted fields are honored. An
+    * unquoted empty field is NULL, as [[readAllString]] and the
+    * reference's COPY read it; a quoted `""` is the empty string, as COPY
+    * reads it (Spark's CSV reader reads NULL there too). */
   def readRepaired(spark: SparkSession, path: String): DataFrame = {
     val header = headerLine(spark, path)
     val schema = headerSchema(header)
@@ -54,9 +57,11 @@ object Ingest {
           val fixed =
             if (fields.length == n) fields
             else if (fields.length < n)
-              fields ++ Array.fill(n - fields.length)("")
+              fields ++ Array.fill[String](n - fields.length)(null)
             else
-              fields.take(n - 1) :+ fields.drop(n - 1).mkString(",")
+              fields.take(n - 1) :+
+                fields.drop(n - 1).map(f => if (f == null) "" else f)
+                  .mkString(",")
           fixed
         }
       }
@@ -65,24 +70,29 @@ object Ingest {
       StructType(schema.fields.map(_.copy(nullable = true))))
   }
 
-  /** Minimal RFC-4180-ish splitter honoring double quotes. */
+  /** Minimal RFC-4180-ish splitter honoring double quotes. An unquoted
+    * empty field is NULL; a quoted one is the empty string. */
   private[etl] def splitCsv(line: String): Array[String] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[String]
     val cur = new StringBuilder
     var inQ = false
+    var quoted = false
+    def endField(): Unit = {
+      out += (if (cur.isEmpty && !quoted) null else cur.result())
+      cur.clear(); quoted = false
+    }
     var i = 0
     while (i < line.length) {
       val c = line.charAt(i)
       if (c == '"') {
         if (inQ && i + 1 < line.length && line.charAt(i + 1) == '"') {
           cur.append('"'); i += 1
-        } else inQ = !inQ
-      } else if (c == ',' && !inQ) {
-        out += cur.result(); cur.clear()
-      } else cur.append(c)
+        } else { inQ = !inQ; quoted = true }
+      } else if (c == ',' && !inQ) endField()
+      else cur.append(c)
       i += 1
     }
-    out += cur.result()
+    endField()
     out.toArray
   }
 

@@ -1,35 +1,20 @@
 package graft.etl
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
-
-/** Literal demographic lookup tables (SURVEY.md §2.1 S9), values verbatim
-  * from the reference (python/enhanced_synthea_to_omop.py:585-625;
-  * sql/staging/synthea-omop-staging.sql:55-79). Broadcast at join sites. */
+/** Demographic concept lookups (SURVEY.md §2.1 S9), values verbatim from
+  * the reference (python/enhanced_synthea_to_omop.py:585-625;
+  * sql/staging/synthea-omop-staging.sql:55-79), keyed by the lower-case
+  * source value. The reference's tables list each key in upper and lower
+  * case with one concept; [[Domains.person]] looks up the lower-cased
+  * source value as a map literal. */
 object Lookups {
 
-  def gender(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("M", 8507L), ("F", 8532L), ("MALE", 8507L), ("FEMALE", 8532L),
-      ("male", 8507L), ("female", 8532L), ("m", 8507L), ("f", 8532L)
-    ).toDF("source_gender", "gender_concept_id")
-  }
+  val gender: Map[String, Long] = Map(
+    "m" -> 8507L, "f" -> 8532L, "male" -> 8507L, "female" -> 8532L)
 
-  def race(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("white", 8527L), ("black", 8516L), ("asian", 8515L),
-      ("native", 8657L), ("other", 8522L),
-      ("WHITE", 8527L), ("BLACK", 8516L), ("ASIAN", 8515L),
-      ("NATIVE", 8657L), ("OTHER", 8522L)
-    ).toDF("source_race", "race_concept_id")
-  }
+  val race: Map[String, Long] = Map(
+    "white" -> 8527L, "black" -> 8516L, "asian" -> 8515L,
+    "native" -> 8657L, "other" -> 8522L)
 
-  def ethnicity(spark: SparkSession): DataFrame = {
-    import spark.implicits._
-    Seq(
-      ("hispanic", 38003563L), ("nonhispanic", 38003564L),
-      ("HISPANIC", 38003563L), ("NONHISPANIC", 38003564L)
-    ).toDF("source_ethnicity", "ethnicity_concept_id")
-  }
+  val ethnicity: Map[String, Long] = Map(
+    "hispanic" -> 38003563L, "nonhispanic" -> 38003564L)
 }

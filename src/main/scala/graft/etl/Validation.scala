@@ -49,14 +49,13 @@ object Validation {
     * least one contributing row. */
   def report(spark: SparkSession, person: DataFrame, visit: DataFrame,
              condition: DataFrame, measurement: DataFrame,
-             observation: DataFrame,
-             drugEra: Option[DataFrame] = None,
-             conditionEra: Option[DataFrame] = None): DataFrame = {
+             observation: DataFrame, drugEra: DataFrame,
+             conditionEra: DataFrame): DataFrame = {
     // (prefix, era, start, end, count column) of each era table
-    val eras =
-      drugEra.map(("drug_era", _, "drug_era_start_date",
-        "drug_era_end_date", "drug_exposure_count")).toSeq ++
-      conditionEra.map(("condition_era", _, "condition_era_start_date",
+    val eras = Seq(
+      ("drug_era", drugEra, "drug_era_start_date", "drug_era_end_date",
+        "drug_exposure_count"),
+      ("condition_era", conditionEra, "condition_era_start_date",
         "condition_era_end_date", "condition_occurrence_count"))
     val personChildren =
       eras.map { case (p, e, _, _, _) => (s"${p}_orphan_person", e,

@@ -46,8 +46,7 @@ object CorpusPipeline {
     * (much smaller) increment — at 100 TB corpus + 100 GB drop, all
     * per-doc work is O(|increment|) except the two id/band joins, and
     * those shuffle hashes, not text. Returns only the new survivors as one
-    * lazy plan (the caller unions/appends them to storage — same contract
-    * as [[Dedup.antiAppend]]).
+    * lazy plan; the caller unions or appends them to storage.
     *
     * Near-dup vs existing keeps the EXISTING doc (first-writer-wins, like
     * the reference's idempotent re-runs); within the increment the

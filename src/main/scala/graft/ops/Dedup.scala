@@ -4,15 +4,16 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
-/** Dedup / idempotence operators (SURVEY.md §2.3 J3/J4/J6, §2.7 M1).
+/** Dedup operators (SURVEY.md §2.3 J4/J6).
   *
-  * The reference achieves idempotent re-runs with `NOT IN (subquery)` /
-  * `NOT EXISTS` anti-patterns (enhanced_synthea_to_omop.py:775,1122-1127)
-  * and first-row-per-group with Postgres `DISTINCT ON`
-  * (enhanced_synthea_to_omop.py:786-811). Spark-first re-expression:
-  * left_anti joins and row_number windows. All of these shuffle on their
-  * key — at 100 TB the key choice IS the partitioning, so callers pass
-  * explicit keys and nothing ever collects to the driver.
+  * The reference keeps first-row-per-group with Postgres `DISTINCT ON`
+  * (enhanced_synthea_to_omop.py:786-811) and guards re-runs with
+  * `NOT IN (subquery)` / `NOT EXISTS` (:775,1122-1127). Spark-first
+  * re-expression: row_number windows under a deterministic order, and a
+  * rerun that overwrites its output with the same rows instead of an
+  * anti-joined append. All of these shuffle on their key — at 100 TB the
+  * key choice IS the partitioning, so callers pass explicit keys and
+  * nothing ever collects to the driver.
   */
 object Dedup {
 
@@ -36,39 +37,6 @@ object Dedup {
     val w = Window.partitionBy(partitionBy: _*).orderBy(orderBy: _*)
     df.withColumn("__rn", row_number().over(w))
       .filter(col("__rn") <= n)
-  }
-
-  /** J3/J4/M1: idempotent append — rows of `incoming` whose `keys` don't
-    * already exist in `existing`, with within-batch duplicates dropped
-    * (set-based anti join can't see them the way Postgres row-at-a-time
-    * inserts do — SURVEY.md §7.4 risk 8). `left_anti` matches the
-    * reference's `NOT IN` exactly because the keys are non-null there
-    * (risk 3; asserted in DedupSpec).
-    *
-    * NOTE: for intra-batch duplicates the surviving row's NON-KEY columns
-    * are unspecified (`dropDuplicates` keeps an arbitrary row). When the
-    * payload must be reproducible across reruns, use
-    * [[antiAppendDeterministic]] with an explicit tiebreak. */
-  def antiAppend(incoming: DataFrame, existing: DataFrame,
-                 keys: Seq[String]): DataFrame = {
-    val existingKeys = existing.select(keys.map(col): _*)
-    incoming
-      .dropDuplicates(keys)
-      .join(existingKeys, keys, "left_anti")
-  }
-
-  /** [[antiAppend]] with a deterministic within-batch survivor: when
-    * `incoming` has several rows per key, the first under `tiebreak` wins
-    * (mirrors the reference's row-at-a-time first-writer-wins insert,
-    * which plain `dropDuplicates` only matches up to arbitrary choice of
-    * non-key columns). Same shuffle count — the window reuses the key
-    * partitioning the anti join needs anyway. */
-  def antiAppendDeterministic(incoming: DataFrame, existing: DataFrame,
-                              keys: Seq[String],
-                              tiebreak: Seq[Column]): DataFrame = {
-    val existingKeys = existing.select(keys.map(col): _*)
-    firstRowPerGroup(incoming, keys.map(col), tiebreak)
-      .join(existingKeys, keys, "left_anti")
   }
 
   /** PARAGRAPH-level exact dedup — the C4/CCNet/Dolma pipeline stage

@@ -12,7 +12,7 @@ import org.apache.spark.sql.types.LongType
   * source ids (enhanced_synthea_to_omop.py:770-777,935-944). The observable
   * contract is: dense, unique, stable-given-input-order integers. We
   * strengthen it to *deterministic*: id = row_number under ORDER BY the
-  * source key (+ offset) — reproducible across reruns and engines, which is
+  * source key — reproducible across reruns and engines, which is
   * what the DuckDB oracle check requires (SURVEY.md §7.4 risk 1).
   *
   * NOT `monotonically_increasing_id()`: that is partition-layout-dependent
@@ -20,7 +20,7 @@ import org.apache.spark.sql.types.LongType
   */
 object DenseId {
 
-  /** Global rank by key + offset as the id — identical output to
+  /** Global rank by key as the id — identical output to
     * `row_number()` over one global window (DenseIdSpec pins it), but no
     * global single-partition sort and — unlike the earlier formulations —
     * NO materialization of the input.
@@ -61,12 +61,11 @@ object DenseId {
     * be non-null over the whole input (checked with a clear failure in
     * the counts pass). */
   def withDenseIdScalable(df: DataFrame, orderBy: Seq[Column],
-                          idCol: String, offset: Long = 0L,
-                          numPartitions: Int = 0,
+                          idCol: String, numPartitions: Int = 0,
                           sampleMod: Long = 4096L,
                           bucketBy: Option[Column] = None): DataFrame = {
-    val bk = bucketedWithStarts(df, orderBy, offset, numPartitions,
-      sampleMod, bucketBy)
+    val bk = bucketedWithStarts(df, orderBy, numPartitions, sampleMod,
+      bucketBy)
     withDenseIdFromBucketed(bk, orderBy, idCol)
   }
 
@@ -79,7 +78,6 @@ object DenseId {
                                          startsMap: Column, total: Long)
 
   private[ops] def bucketedWithStarts(df: DataFrame, orderBy: Seq[Column],
-                                      offset: Long = 0L,
                                       numPartitions: Int = 0,
                                       sampleMod: Long = 4096L,
                                       bucketBy: Option[Column] = None)
@@ -144,14 +142,14 @@ object DenseId {
             "from a caller not using the ETL's inner-joined maps)")
         (r.getInt(0), r.getLong(1))
       }.sortBy(_._1)
-    val starts = counts.foldLeft((offset, List.empty[(Int, Long)])) {
+    val starts = counts.foldLeft((0L, List.empty[(Int, Long)])) {
       case ((acc, out), (b, c)) => (acc + c, (b, acc) :: out)
     }._2
     val startsMap =
-      if (starts.isEmpty) map(lit(0), lit(offset))
+      if (starts.isEmpty) map(lit(0), lit(0L))
       else map(starts.flatMap { case (b, st) =>
         Seq(lit(b), lit(st)) }: _*)
-    Bucketed(withBucket, startsMap, offset + counts.map(_._2).sum)
+    Bucketed(withBucket, startsMap, counts.map(_._2).sum)
   }
 
   /** Full-width pass of [[withDenseIdScalable]] (the only one): within-
@@ -179,29 +177,4 @@ object DenseId {
                            parts: Int): Column =
     floor(((idCol - 1L).cast("double") * parts) / math.max(1L, n))
       .cast("int")
-
-  /** M1 composite: extend an existing (sourceKey → id) map with ids for the
-    * not-yet-mapped keys of `incoming`, first-writer-wins, appended after
-    * the current max id. Mirrors the reference's
-    * `INSERT ... SELECT nextval(seq) ... WHERE NOT IN (SELECT source_id)`
-    * (enhanced_synthea_to_omop.py:770-777). A first load (`existing` =
-    * None) numbers from 1 with no max-id job and no anti join.
-    *
-    * New-key ids go through the scalable deterministic-bounds path — a
-    * bulk first load maps EVERY source id here, so the single-partition
-    * global window would be the whole pipeline's bottleneck at scale. */
-  def extendIdMap(existing: Option[DataFrame], incoming: DataFrame,
-                  sourceKeyCol: String, idCol: String): DataFrame = {
-    val keys = incoming.select(col(sourceKeyCol)).distinct()
-    val (maxId, fresh) = existing.fold((0L, keys)) { ex =>
-      (ex.agg(coalesce(max(col(idCol)), lit(0L))).head().getLong(0),
-        Dedup.antiAppend(keys, ex, Seq(sourceKeyCol)))
-    }
-    val newRows = withDenseIdScalable(
-      fresh, Seq(col(sourceKeyCol)), idCol, maxId)
-      .select(col(sourceKeyCol), col(idCol).cast(LongType))
-    existing.fold(newRows)(
-      _.select(col(sourceKeyCol), col(idCol).cast(LongType))
-        .unionByName(newRows))
-  }
 }

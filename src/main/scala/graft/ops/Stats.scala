@@ -190,7 +190,7 @@ object Stats {
     require(k >= 1, s"k must be >= 1, got $k")
     val ordered = (valueCol +: tieCols).map(col(_).asc)
     // the total row count rides DenseId's own per-bucket counts pass
-    // (offset 0 ⇒ total = n) — the old leading df.count() was a third
+    // (its total is n) — the old leading df.count() was a third
     // sequential full-input job for a number that pass already summed
     // (r15, guide §1.2)
     val bk = DenseId.bucketedWithStarts(

@@ -144,15 +144,8 @@ object VectorOps {
     * mean 0.06, and bucket mass lands on the uniform prediction at both
     * sf0.1 and sf1. Shared with the oracle SQL — no RNG state; all
     * products bounded by m·dim < 2^63 (overflow-free in Spark longs and
-    * DuckDB BIGINT alike). */
-  def planeSign(j: Column, i: Column): Column =
-    when(((lit(2654435761L) * (j + 1) % TextOps.HashMod) * (i + 1)
-        + lit(2246822519L) * (j + 1) % TextOps.HashMod)
-        % TextOps.HashMod % 2 === 0,
-      lit(1.0)).otherwise(lit(-1.0))
-
-  /** The ±1 plane component as a plain Scala value (same formula as
-    * [[planeSign]]) for pre-materialized plane vectors. */
+    * DuckDB BIGINT alike). A plain Scala value, for pre-materialized
+    * plane vectors. */
   def planeSignValue(j: Int, i: Int): Double = {
     val a = 2654435761L * (j + 1) % TextOps.HashMod
     val b = 2246822519L * (j + 1) % TextOps.HashMod

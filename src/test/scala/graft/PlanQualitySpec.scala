@@ -56,7 +56,7 @@ class PlanQualitySpec extends SparkSpecBase {
     assert(!plan(df).contains("Exchange SinglePartition"), plan(df))
   }
 
-  test("ID-map and lookup joins in the ETL person transform broadcast") {
+  test("ETL person: the person-map join broadcasts, no lookup join remains") {
     // (conditionOccurrence's plan is split by the dense-id RDD boundary;
     // person keeps one lineage end-to-end, so its plan shows the joins)
     import spark.implicits._
@@ -64,8 +64,12 @@ class PlanQualitySpec extends SparkSpecBase {
       .toDF("id", "gender_source", "race_source", "ethnicity_source")
       .withColumn("birthdate", lit("1980-01-01").cast("date"))
     val pm = Seq(("u1", 1L)).toDF("source_patient_id", "person_id")
-    val p = plan(graft.etl.Domains.person(spark, typed, pm))
-    assert("BroadcastHashJoin".r.findAllIn(p).size >= 4, p)
+    val p = plan(graft.etl.Domains.person(typed,
+      graft.etl.Domains.IdMaps(pm, pm, 1, 0)))
+    // the one join is the broadcast person map; the demographic lookups
+    // are map literals, so the only local scans are the two inputs
+    assert("BroadcastHashJoin".r.findAllIn(p).size == 1, p)
+    assert("LocalTableScan".r.findAllIn(p).size == 2, p)
   }
 
   test("semDedup pair join keys on the cluster id, never all-pairs") {

@@ -226,46 +226,36 @@ object AchillesReference {
 
   /** Distribution analyses → the separate achilles_results_dist table the
     * reference reads (query_achilles_results.sh:228-230 reads 211 from
-    * `achilles_results_dist`, not `achilles_results`). With person +
-    * observation_period inputs the run also covers the observation-period
-    * defaults of the R Achilles set (103/104/105, run_achilles.R). */
-  def runDist(visit: DataFrame,
-              drugEra: Option[DataFrame] = None,
-              person: Option[DataFrame] = None,
-              observationPeriod: Option[DataFrame] = None): DataFrame =
-    (Seq(a211VisitLength(visit))
-      ++ drugEra.map(a906DrugEraLength)
-      ++ (for (p <- person; op <- observationPeriod) yield Seq(
-           a103AgeAtFirstObsDist(p, op), a104AgeAtFirstObsByGender(p, op),
-           a106ObsPeriodLengthByGender(p, op),
-           a107ObsPeriodLengthByAgeDecile(p, op))).toSeq.flatten
-      ++ observationPeriod.map(a105ObsPeriodLength))
+    * `achilles_results_dist`, not `achilles_results`), the
+    * observation-period defaults of the R Achilles set (103–107,
+    * run_achilles.R) included. */
+  def runDist(visit: DataFrame, drugEra: DataFrame, person: DataFrame,
+              observationPeriod: DataFrame): DataFrame =
+    Seq(a211VisitLength(visit), a906DrugEraLength(drugEra),
+      a103AgeAtFirstObsDist(person, observationPeriod),
+      a104AgeAtFirstObsByGender(person, observationPeriod),
+      a106ObsPeriodLengthByGender(person, observationPeriod),
+      a107ObsPeriodLengthByAgeDecile(person, observationPeriod),
+      a105ObsPeriodLength(observationPeriod))
       .reduce(_ unionByName _)
 
-  /** Full default-analyses run → one stacked results table. Domain inputs
-    * beyond the person/visit/condition core are optional so partial
-    * pipelines keep their analysis set. */
+  /** Full default-analyses run → one stacked results table. */
   def run(person: DataFrame, visit: DataFrame, condition: DataFrame,
-          drugEra: Option[DataFrame] = None,
-          conditionEra: Option[DataFrame] = None,
-          procedure: Option[DataFrame] = None,
-          drugExposure: Option[DataFrame] = None,
-          observation: Option[DataFrame] = None,
-          measurement: Option[DataFrame] = None): DataFrame =
-    (Seq(
+          drugEra: DataFrame, conditionEra: DataFrame, procedure: DataFrame,
+          drugExposure: DataFrame, observation: DataFrame,
+          measurement: DataFrame): DataFrame =
+    Seq(
       a1NumPersons(person), a2ByGender(person), a3ByYearOfBirth(person),
       a4ByRace(person),
       a200ByVisitConcept(visit), a201VisitRecords(visit),
-      a400ByConditionConcept(condition), a401ConditionRecords(condition)
-    ) ++ procedure.toSeq.flatMap(p =>
-        Seq(a600ByProcedureConcept(p), a601ProcedureRecords(p)))
-      ++ drugExposure.toSeq.flatMap(d =>
-        Seq(a700ByDrugConcept(d), a701DrugRecords(d)))
-      ++ observation.toSeq.flatMap(o =>
-        Seq(a800ByObservationConcept(o), a801ObservationRecords(o)))
-      ++ measurement.toSeq.flatMap(m =>
-        Seq(a1800ByMeasurementConcept(m), a1801MeasurementRecords(m)))
-      ++ drugEra.map(a900ByDrugEraConcept)
-      ++ conditionEra.map(a1000ByConditionEraConcept)
+      a400ByConditionConcept(condition), a401ConditionRecords(condition),
+      a600ByProcedureConcept(procedure), a601ProcedureRecords(procedure),
+      a700ByDrugConcept(drugExposure), a701DrugRecords(drugExposure),
+      a800ByObservationConcept(observation),
+      a801ObservationRecords(observation),
+      a1800ByMeasurementConcept(measurement),
+      a1801MeasurementRecords(measurement),
+      a900ByDrugEraConcept(drugEra),
+      a1000ByConditionEraConcept(conditionEra)
     ).reduce(_ unionByName _)
 }

@@ -1,5 +1,6 @@
 package graft.analyze
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.SparkSpecBase
@@ -20,8 +21,30 @@ class AchillesSpec extends SparkSpecBase {
     .select(col("*"), col("s").cast("date").as("visit_start_date"),
       col("e").cast("date").as("visit_end_date"))
 
+  // the tables a test leaves out, empty with their schema
+  private val none = lit(false)
+  private lazy val noDrugEra = edgeDrugEra.filter(none)
+  private lazy val noConditionEra = Seq.empty[(Long, Long, Long)]
+    .toDF("condition_era_id", "person_id", "condition_concept_id")
+  private lazy val noObsPeriod = edgeObsPeriod.filter(none)
+  /** Empty procedure, drug exposure, observation and measurement tables. */
+  private lazy val noDomains = Seq(
+    edgeDomain("procedure_occurrence_id", "procedure_concept_id"),
+    edgeDomain("drug_exposure_id", "drug_concept_id"),
+    edgeDomain("observation_id", "observation_concept_id"),
+    edgeDomain("measurement_id", "measurement_concept_id")).map(_.filter(none))
+
+  /** [[Achilles.run]] over the person/visit/condition core and the given
+    * eras, every other domain empty. */
+  private def runCore(person: DataFrame, visit: DataFrame,
+                      condition: DataFrame, drugEra: DataFrame = noDrugEra,
+                      conditionEra: DataFrame = noConditionEra) = {
+    val Seq(pr, d, o, m) = noDomains
+    Achilles.run(person, visit, condition, drugEra, conditionEra, pr, d, o, m)
+  }
+
   test("stratified counts produce the standard results shape") {
-    val res = Achilles.run(person, visit,
+    val res = runCore(person, visit,
       Seq((1L, 1L, 0L)).toDF("condition_occurrence_id", "person_id",
         "condition_concept_id"))
     assert(res.columns.toSeq == Seq("analysis_id", "stratum_1", "stratum_2",
@@ -40,12 +63,11 @@ class AchillesSpec extends SparkSpecBase {
       (1L, 1L, 10L), (2L, 1L, 10L), (3L, 2L, 10L), (4L, 2L, 20L)
     ).toDF(idCol, "person_id", conceptCol)
     val res = Achilles.run(person, visit,
-      dom("condition_occurrence_id", "condition_concept_id"),
-      procedure = Some(dom("procedure_occurrence_id",
-        "procedure_concept_id")),
-      drugExposure = Some(dom("drug_exposure_id", "drug_concept_id")),
-      observation = Some(dom("observation_id", "observation_concept_id")),
-      measurement = Some(dom("measurement_id", "measurement_concept_id")))
+      dom("condition_occurrence_id", "condition_concept_id"), noDrugEra,
+      noConditionEra, dom("procedure_occurrence_id", "procedure_concept_id"),
+      dom("drug_exposure_id", "drug_concept_id"),
+      dom("observation_id", "observation_concept_id"),
+      dom("measurement_id", "measurement_concept_id"))
     val byA = res.collect().groupBy(_.getInt(0))
       .view.mapValues(_.map(r => r.getString(1) -> r.getLong(6)).toMap)
     for (persons <- Seq(400, 600, 700, 800, 1800))
@@ -69,15 +91,14 @@ class AchillesSpec extends SparkSpecBase {
         col("e").cast("date").as("drug_era_end_date"))
     val condEra = Seq((1L, 1L, 100L))
       .toDF("condition_era_id", "person_id", "condition_concept_id")
-    val res = Achilles.run(person, visit,
+    val res = runCore(person, visit,
       Seq((1L, 1L, 0L)).toDF("condition_occurrence_id", "person_id",
-        "condition_concept_id"),
-      Some(drugEra), Some(condEra))
+        "condition_concept_id"), drugEra, condEra)
     val byAnalysis = res.collect().groupBy(_.getInt(0))
     assert(byAnalysis(900).map(r => r.getString(1) -> r.getLong(6)).toMap
       == Map("10" -> 2, "20" -> 1))
     assert(byAnalysis(1000).head.getLong(6) == 1)
-    val dist = Achilles.runDist(visit, Some(drugEra))
+    val dist = Achilles.runDist(visit, drugEra, person, noObsPeriod)
       .filter(col("analysis_id") === 906).head()
     assert(dist.getAs[Long]("count_value") == 3)
     assert(dist.getAs[Double]("max_value") == 19.0)
@@ -88,9 +109,10 @@ class AchillesSpec extends SparkSpecBase {
       .toDF("drug_era_id", "person_id", "drug_concept_id", "s", "e")
       .select(col("*"), col("s").cast("date").as("drug_era_start_date"),
         col("e").cast("date").as("drug_era_end_date"))
-    val dist = Achilles.runDist(visit, Some(drugEra))
+    val dist = Achilles.runDist(visit, drugEra, person, noObsPeriod)
+    // with no observation period, 103 and 105 keep their count-0 row
     assert(dist.select("analysis_id").collect().map(_.getInt(0)).sorted
-      === Array(211, 906))
+      === Array(103, 105, 211, 906))
     assert(dist.columns.contains("median_value"))
   }
 
@@ -106,10 +128,9 @@ class AchillesSpec extends SparkSpecBase {
       col("e").cast("date").as("observation_period_end_date"))
 
   test("obs-period distribution analyses 103..107 (R default set)") {
-    val dist = Achilles.runDist(visit, drugEra = None,
-      person = Some(person), observationPeriod = Some(obsPeriods))
+    val dist = Achilles.runDist(visit, noDrugEra, person, obsPeriods)
     val byA = dist.collect().groupBy(_.getInt(0))
-    assert(byA.keySet == Set(211, 103, 104, 105, 106, 107))
+    assert(byA.keySet == Set(211, 906, 103, 104, 105, 106, 107))
     // 103: ages at first obs — p1 40 (2020−1980), p2 40, p3 31 (2021−1990)
     val a103 = byA(103).head
     assert(a103.getAs[String]("stratum_1") == null)
@@ -149,8 +170,8 @@ class AchillesSpec extends SparkSpecBase {
       .select(col("*"),
         col("s").cast("date").as("observation_period_start_date"),
         col("s").cast("date").as("observation_period_end_date"))
-    val byA = Achilles.runDist(visit, person = Some(person),
-      observationPeriod = Some(op)).collect().groupBy(_.getInt(0))
+    val byA = Achilles.runDist(visit, noDrugEra, person, op).collect()
+      .groupBy(_.getInt(0))
     // both obs-persons born 1980, first obs 2020: age 40, one per gender
     val a103 = byA(103).head
     assert((a103.getAs[Long]("count_value"), a103.getAs[Double]("min_value"),
@@ -161,7 +182,8 @@ class AchillesSpec extends SparkSpecBase {
   }
 
   test("visit-length distribution computes exact percentiles") {
-    val d = Achilles.runDist(visit).head()
+    val d = Achilles.runDist(visit, noDrugEra, person, noObsPeriod)
+      .filter(col("analysis_id") === 211).head()
     assert(d.getAs[Long]("count_value") == 2)
     assert(d.getAs[Double]("min_value") == 0.0)
     assert(d.getAs[Double]("max_value") == 4.0)
@@ -170,7 +192,7 @@ class AchillesSpec extends SparkSpecBase {
 
   // ---- the single aggregates equal the per-analysis reference ----
 
-  private def dates(df: org.apache.spark.sql.DataFrame,
+  private def dates(df: DataFrame,
                     cols: (String, String)*) =
     cols.foldLeft(df) { case (d, (from, to)) =>
       d.withColumn(to, col(from).cast("date")).drop(from) }
@@ -235,43 +257,35 @@ class AchillesSpec extends SparkSpecBase {
     val condEra = Seq[(Long, Option[Long], Option[Long])](
       (1L, Some(1L), Some(100L)), (2L, None, None), (3L, Some(2L), None))
       .toDF("condition_era_id", "person_id", "condition_concept_id")
-    assertSameRows(Achilles.run(edgePerson, edgeVisit, cond),
-      AchillesReference.run(edgePerson, edgeVisit, cond))
-    val Seq(pr, d, o, m) = domains
-    assertSameRows(
-      Achilles.run(edgePerson, edgeVisit, cond, Some(edgeDrugEra),
-        Some(condEra), Some(pr), Some(d), Some(o), Some(m)),
-      AchillesReference.run(edgePerson, edgeVisit, cond, Some(edgeDrugEra),
-        Some(condEra), Some(pr), Some(d), Some(o), Some(m)))
+    def both(person: DataFrame, visit: DataFrame,
+             tables: Seq[DataFrame]): Unit = {
+      val Seq(c, de, ce, pr, d, o, m) = tables
+      assertSameRows(Achilles.run(person, visit, c, de, ce, pr, d, o, m),
+        AchillesReference.run(person, visit, c, de, ce, pr, d, o, m))
+    }
+    both(edgePerson, edgeVisit,
+      Seq(cond, noDrugEra, noConditionEra) ++ noDomains)
+    both(edgePerson, edgeVisit, Seq(cond, edgeDrugEra, condEra) ++ domains)
     // empty inputs: no rows, as the per-analysis groupBys give
-    val none = lit(false)
-    assertSameRows(
-      Achilles.run(edgePerson.filter(none), edgeVisit.filter(none),
-        cond.filter(none), Some(edgeDrugEra.filter(none))),
-      AchillesReference.run(edgePerson.filter(none), edgeVisit.filter(none),
-        cond.filter(none), Some(edgeDrugEra.filter(none))))
+    both(edgePerson.filter(none), edgeVisit.filter(none),
+      Seq(cond.filter(none), noDrugEra, noConditionEra) ++ noDomains)
   }
 
   test("runDist equals the per-analysis reference, empty inputs included") {
-    def both(visit: org.apache.spark.sql.DataFrame,
-             drugEra: Option[org.apache.spark.sql.DataFrame],
-             person: Option[org.apache.spark.sql.DataFrame],
-             op: Option[org.apache.spark.sql.DataFrame]): Unit =
+    def both(visit: DataFrame, drugEra: DataFrame, person: DataFrame,
+             op: DataFrame): Unit =
       assertSameRows(Achilles.runDist(visit, drugEra, person, op),
         AchillesReference.runDist(visit, drugEra, person, op))
-    both(edgeVisit, None, None, None)
-    both(edgeVisit, Some(edgeDrugEra), Some(edgePerson), Some(edgeObsPeriod))
-    both(edgeVisit, Some(edgeDrugEra), None, Some(edgeObsPeriod))
+    val noPerson = edgePerson.filter(none)
+    both(edgeVisit, edgeDrugEra, edgePerson, edgeObsPeriod)
+    both(edgeVisit, edgeDrugEra, noPerson, edgeObsPeriod)
     // an empty drug era and observation period still give their
     // unstratified rows (count 0, NULL statistics)
-    val none = lit(false)
-    both(edgeVisit, Some(edgeDrugEra.filter(none)), Some(edgePerson),
-      Some(edgeObsPeriod.filter(none)))
-    both(edgeVisit.filter(none), Some(edgeDrugEra.filter(none)),
-      Some(edgePerson.filter(none)), Some(edgeObsPeriod.filter(none)))
-    val empty = Achilles.runDist(edgeVisit.filter(none),
-      Some(edgeDrugEra.filter(none)), Some(edgePerson),
-      Some(edgeObsPeriod.filter(none))).collect()
+    both(edgeVisit, noDrugEra, noPerson, noObsPeriod)
+    both(edgeVisit, noDrugEra, edgePerson, noObsPeriod)
+    both(edgeVisit.filter(none), noDrugEra, noPerson, noObsPeriod)
+    val empty = Achilles.runDist(edgeVisit.filter(none), noDrugEra,
+      edgePerson, noObsPeriod).collect()
     assert(empty.map(_.getInt(0)).sorted.toSeq == Seq(103, 105, 211, 906))
     assert(empty.forall(r => r.getLong(2) == 0L && r.isNullAt(3)))
   }

@@ -26,7 +26,7 @@ class EraSpec extends SparkSpecBase {
     ).toDF("person_id", "drug_concept_id",
       "drug_exposure_start_date", "drug_exposure_end_date")
 
-    val eras = Domains.drugEra(exposures).collect()
+    val eras = Domains.drugEra(exposures, persons = 2).collect()
       .map(r => ((r.getAs[Long]("person_id"),
         r.getAs[Long]("drug_concept_id"),
         r.getAs[Date]("drug_era_start_date").toString),
@@ -49,7 +49,7 @@ class EraSpec extends SparkSpecBase {
       (1L, 10L, d("2020-01-12"), d("2020-01-15"))  // touches
     ).toDF("person_id", "drug_concept_id",
       "drug_exposure_start_date", "drug_exposure_end_date")
-    val era = Domains.drugEra(exposures).head()
+    val era = Domains.drugEra(exposures, persons = 1).head()
     assert(era.getAs[Date]("drug_era_start_date") == d("2020-01-01"))
     assert(era.getAs[Date]("drug_era_end_date") == d("2020-01-15"))
     assert(era.getAs[Int]("drug_exposure_count") == 3)
@@ -62,10 +62,10 @@ class EraSpec extends SparkSpecBase {
         d(f"2020-${i % 12 + 1}%02d-01"), d(f"2020-${i % 12 + 1}%02d-15"))
     }.toDF("person_id", "drug_concept_id",
       "drug_exposure_start_date", "drug_exposure_end_date")
-    val a = Domains.drugEra(exposures)
+    val a = Domains.drugEra(exposures, persons = 10)
     val ids = a.select("drug_era_id").as[Long].collect().sorted
     assert(ids.toSeq == (1L to ids.length).toSeq) // dense from 1
-    val b = Domains.drugEra(exposures.repartition(11))
+    val b = Domains.drugEra(exposures.repartition(11), persons = 10)
       .select("drug_era_id", "person_id", "drug_concept_id",
         "drug_era_start_date")
       .collect().map(_.toSeq).toSet
@@ -80,7 +80,7 @@ class EraSpec extends SparkSpecBase {
       (1L, 100L, d("2020-05-01"), d("2020-05-02"))  // far: new era
     ).toDF("person_id", "condition_concept_id",
       "condition_start_date", "condition_end_date")
-    val eras = Domains.conditionEra(conds)
+    val eras = Domains.conditionEra(conds, persons = 1)
       .orderBy("condition_era_start_date").collect()
     assert(eras.length == 2)
     assert(eras(0).getAs[Int]("condition_occurrence_count") == 2)

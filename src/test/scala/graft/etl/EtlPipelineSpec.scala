@@ -60,19 +60,51 @@ class EtlPipelineSpec extends SparkSpecBase {
     Typing.patients(Ingest.readAllString(spark, s"$dir/patients.csv"))
   private lazy val typedEncounters =
     Typing.encounters(Ingest.readAllString(spark, s"$dir/encounters.csv"))
-  private lazy val personMap = Domains.buildIdMap(None,
-    typedPatients.filter(col("id").isNotNull), "id", "person_id")
-    .withColumnRenamed("id", "source_patient_id")
-  private lazy val visitMap = Domains.buildIdMap(None,
-    typedEncounters, "id", "visit_occurrence_id")
-    .withColumnRenamed("id", "source_visit_id")
+  private lazy val personMap = Domains.buildIdMap(typedPatients, "id",
+    "person_id").withColumnRenamed("id", "source_patient_id")
+  private lazy val visitMap = Domains.buildIdMap(typedEncounters, "id",
+    "visit_occurrence_id").withColumnRenamed("id", "source_visit_id")
+  private lazy val ids = Domains.IdMaps(personMap, visitMap,
+    personMap.count(), visitMap.count())
 
   test("splitCsv honors quotes, escaped quotes, and empty fields") {
     assert(Ingest.splitCsv("a,\"b,c\",d").toSeq == Seq("a", "b,c", "d"))
     assert(Ingest.splitCsv("a,\"say \"\"hi\"\"\",c").toSeq
       == Seq("a", "say \"hi\"", "c"))
-    assert(Ingest.splitCsv("a,,c,").toSeq == Seq("a", "", "c", ""))
-    assert(Ingest.splitCsv("").toSeq == Seq(""))
+    // an unquoted empty field is NULL, a quoted one the empty string
+    assert(Ingest.splitCsv("a,,c,").toSeq == Seq("a", null, "c", null))
+    assert(Ingest.splitCsv("a,\"\",\"\"").toSeq == Seq("a", "", ""))
+    assert(Ingest.splitCsv("").toSeq == Seq(null))
+  }
+
+  test("readRepaired reads unquoted empty fields as NULL, as readAllString") {
+    val d = Files.createTempDirectory("csv-empty")
+    def csv(name: String, body: String): String = {
+      Files.writeString(d.resolve(name), "A,B,C\n" + body)
+      d.resolve(name).toString
+    }
+    // empty first, middle and last fields
+    val unquoted = csv("unquoted.csv", "x,,z\n,y,\n,\"a,b\",\n")
+    assertSameRows(Ingest.readRepaired(spark, unquoted),
+      Ingest.readAllString(spark, unquoted))
+    // a quoted "" is the empty string, as the reference's COPY reads it
+    // (Spark's reader reads it as NULL)
+    val quoted = Ingest.readRepaired(spark, csv("quoted.csv", "x,\"\",\n"))
+      .head()
+    assert(quoted.getString(1) == "" && quoted.isNullAt(2))
+  }
+
+  test("readRepaired: an empty UNITS field gives a NULL unit_source_value") {
+    val typed = Typing.observations(
+      Ingest.readRepaired(spark, s"$dir/observations.csv"))
+    val tobacco = col("code") === "72166-2"
+    assert(typed.filter(tobacco).select("units").head().isNullAt(0))
+    // the same row with a numeric value lands in measurement
+    val (meas, _) = Domains.measurementObservationSplit(
+      typed.withColumn("value", when(tobacco, lit("1")).otherwise(col("value"))),
+      ids)
+    assert(meas.filter(col("measurement_source_value") === "72166-2")
+      .select("unit_source_value").head().isNullAt(0))
   }
 
   test("S3 repair: unquoted comma row is merged into the last field") {
@@ -104,7 +136,7 @@ class EtlPipelineSpec extends SparkSpecBase {
   }
 
   test("person: demographics map to OMOP concepts, unmapped → 0") {
-    val person = Domains.person(spark, typedPatients, personMap)
+    val person = Domains.person(typedPatients, ids)
     assert(person.count() == 3)
     val byId = person.collect()
       .map(r => r.getAs[String]("person_source_value") -> r).toMap
@@ -122,24 +154,55 @@ class EtlPipelineSpec extends SparkSpecBase {
     import spark.implicits._
     // buildIdMap assigns one person_id per distinct source id, so a
     // twice-ingested patient row must not emit two person rows sharing
-    // that person_id — previously only the incremental path deduped,
-    // and a first run (existing = None, as EtlRunner calls it) shipped
-    // the duplicate straight into duplicate_person_ids validation
+    // that person_id, which duplicate_person_ids validation would flag
     val doubled = typedPatients.unionByName(typedPatients)
-    val person = Domains.person(spark, doubled, personMap)
+    val person = Domains.person(doubled, ids)
     assert(person.count() == 3)
     assert(person.select("person_id").distinct().count() == 3)
   }
 
-  test("person is idempotent: re-run appends nothing") {
-    val person = Domains.person(spark, typedPatients, personMap)
-    val rerun = Domains.person(spark, typedPatients, personMap,
-      existing = Some(person))
-    assert(rerun.count() == 0)
+  test("person: literal lookups give the old lookup-table joins' concepts") {
+    import spark.implicits._
+    // the reference's lookup tables, each key in both cases, as person
+    // once joined them (broadcast, on the lower-cased key, unmapped → 0)
+    val tables = Seq(
+      ("gender_source", "gender_concept_id", Seq(("M", 8507L), ("F", 8532L),
+        ("MALE", 8507L), ("FEMALE", 8532L), ("male", 8507L),
+        ("female", 8532L), ("m", 8507L), ("f", 8532L))),
+      ("race_source", "race_concept_id", Seq(("white", 8527L),
+        ("black", 8516L), ("asian", 8515L), ("native", 8657L),
+        ("other", 8522L), ("WHITE", 8527L), ("BLACK", 8516L),
+        ("ASIAN", 8515L), ("NATIVE", 8657L), ("OTHER", 8522L))),
+      ("ethnicity_source", "ethnicity_concept_id", Seq(
+        ("hispanic", 38003563L), ("nonhispanic", 38003564L),
+        ("HISPANIC", 38003563L), ("NONHISPANIC", 38003564L))))
+    // every key in both cases, an unknown value and NULL, fed to all
+    // three attributes
+    val values = tables.flatMap(_._3.map(_._1))
+      .flatMap(k => Seq(k.toUpperCase, k.toLowerCase)).distinct.map(Option(_)) ++
+      Seq(Some("martian"), Some("Male "), None)
+    val typed = values.zipWithIndex.map { case (v, i) => (s"p$i", v, v, v) }
+      .toDF("id", "gender_source", "race_source", "ethnicity_source")
+      .withColumn("birthdate", lit("1980-01-01").cast("date"))
+    val pm = Domains.buildIdMap(typed, "id", "person_id")
+      .withColumnRenamed("id", "source_patient_id")
+    val oldJoin = tables.foldLeft(typed) { case (df, (src, out, rows)) =>
+      val t = broadcast(rows.toDF("k", out)
+        .select(lower(col("k")).as("k"), col(out)).dropDuplicates("k"))
+      df.join(t, lower(col(src)) === t("k"), "left")
+        .withColumn(out, coalesce(col(out), lit(0L))).drop("k")
+    }
+    val concepts = Seq("gender_concept_id", "race_concept_id",
+      "ethnicity_concept_id")
+    assertSameRows(
+      Domains.person(typed, Domains.IdMaps(pm, visitMap, values.size, 0))
+        .select((col("person_source_value") +: concepts.map(col)): _*),
+      oldJoin.select((col("id").as("person_source_value") +:
+        concepts.map(col)): _*))
   }
 
   test("visit_occurrence: class→concept CASE mapping and EHR type") {
-    val visit = Domains.visitOccurrence(typedEncounters, personMap, visitMap)
+    val visit = Domains.visitOccurrence(typedEncounters, ids)
     val byClass = visit.collect()
       .map(r => r.getAs[String]("visit_source_value") ->
         r.getAs[Long]("visit_concept_id")).toMap
@@ -150,15 +213,29 @@ class EtlPipelineSpec extends SparkSpecBase {
   test("condition: within-batch dedup collapses the duplicate row") {
     val cond = Domains.conditionOccurrence(
       Typing.conditions(Ingest.readRepaired(spark, s"$dir/conditions.csv")),
-      personMap, visitMap)
+      ids)
     assert(cond.count() == 3) // 4 rows - 1 dup
     assert(cond.select("condition_occurrence_id").distinct().count() == 3)
+  }
+
+  test("immunization: same person, time and code keep the lowest encounter") {
+    import spark.implicits._
+    val u = (i: Int) => f"00000000-0000-0000-0000-${i}%012d"
+    val t = java.sql.Timestamp.valueOf("2016-06-05 09:00:00")
+    // the higher encounter comes first in the only partition
+    val typed = Seq((t, u(1), u(102), "140"), (t, u(1), u(101), "140"))
+      .toDF("date_time", "patient", "encounter", "code").coalesce(1)
+    val imm = Domains.immunizationDrugExposure(typed, ids).collect()
+    assert(imm.length == 1)
+    val lowest = visitMap.filter(col("source_visit_id") === u(101))
+      .head().getAs[Long]("visit_occurrence_id")
+    assert(imm.head.getAs[Long]("visit_occurrence_id") == lowest)
   }
 
   test("measurement/observation split routes by numeric detector") {
     val (meas, obs) = Domains.measurementObservationSplit(
       Typing.observations(Ingest.readAllString(spark, s"$dir/observations.csv")),
-      personMap, visitMap)
+      ids)
     assert(meas.count() == 2)
     assert(obs.count() == 1)
     assert(meas.filter(col("value_as_number").isNull).count() == 0)
@@ -168,15 +245,15 @@ class EtlPipelineSpec extends SparkSpecBase {
   test("observation_period spans min/max across unioned domains") {
     val cond = Domains.conditionOccurrence(
       Typing.conditions(Ingest.readRepaired(spark, s"$dir/conditions.csv")),
-      personMap, visitMap)
-    val visit = Domains.visitOccurrence(typedEncounters, personMap, visitMap)
+      ids)
+    val visit = Domains.visitOccurrence(typedEncounters, ids)
     val op = Domains.observationPeriod(Seq(
       visit.select(col("person_id"),
         col("visit_start_date").as("start_date"),
         col("visit_end_date").as("end_date")),
       cond.select(col("person_id"),
         col("condition_start_date").as("start_date"),
-        col("condition_end_date").as("end_date"))))
+        col("condition_end_date").as("end_date"))), ids.persons)
     val p1 = op.filter(col("person_id") === 1).head()
     assert(p1.getAs[java.sql.Date]("observation_period_start_date").toString
       == "2015-01-01")
@@ -185,22 +262,29 @@ class EtlPipelineSpec extends SparkSpecBase {
   }
 
   test("death: only deceased patients, date preserved") {
-    val death = Domains.death(typedPatients, personMap)
+    val death = Domains.death(typedPatients, ids)
     assert(death.count() == 1)
     assert(death.head().getAs[java.sql.Date]("death_date").toString
       == "2020-01-10")
   }
 
   test("validation report is all-zero on the clean build") {
-    val visit = Domains.visitOccurrence(typedEncounters, personMap, visitMap)
+    val visit = Domains.visitOccurrence(typedEncounters, ids)
     val cond = Domains.conditionOccurrence(
       Typing.conditions(Ingest.readRepaired(spark, s"$dir/conditions.csv")),
-      personMap, visitMap)
+      ids)
     val (meas, obs) = Domains.measurementObservationSplit(
       Typing.observations(Ingest.readAllString(spark, s"$dir/observations.csv")),
-      personMap, visitMap)
-    val person = Domains.person(spark, typedPatients, personMap)
-    val rep = Validation.report(spark, person, visit, cond, meas, obs)
+      ids)
+    // the fixture's medications carry no cost columns
+    val meds = Seq("BASE_COST", "PAYER_COVERAGE", "DISPENSES", "TOTALCOST")
+      .foldLeft(Ingest.readRepaired(spark, s"$dir/medications.csv"))(
+        (d, c) => d.withColumn(c, lit(null).cast("string")))
+    val (drug, _) = Domains.drugExposureAndCost(Typing.medications(meds), ids)
+    val person = Domains.person(typedPatients, ids)
+    val rep = Validation.report(spark, person, visit, cond, meas, obs,
+      Domains.drugEra(drug, ids.persons),
+      Domains.conditionEra(cond, ids.persons))
     val failed = rep.filter(col("failed_count") > 0).collect()
     assert(failed.isEmpty, failed.mkString(", "))
   }

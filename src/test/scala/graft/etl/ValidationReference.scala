@@ -68,16 +68,14 @@ object ValidationReference {
     * one action (collect or write) runs every check concurrently. */
   def report(spark: SparkSession, person: DataFrame, visit: DataFrame,
              condition: DataFrame, measurement: DataFrame,
-             observation: DataFrame,
-             drugEra: Option[DataFrame] = None,
-             conditionEra: Option[DataFrame] = None): DataFrame = {
+             observation: DataFrame, drugEra: DataFrame,
+             conditionEra: DataFrame): DataFrame = {
     val checks: Seq[DataFrame] =
-      drugEra.toSeq.flatMap(e => eraChecks("drug_era", e, person,
-        "drug_era_start_date", "drug_era_end_date",
-        "drug_exposure_count")) ++
-      conditionEra.toSeq.flatMap(e => eraChecks("condition_era", e, person,
+      eraChecks("drug_era", drugEra, person, "drug_era_start_date",
+        "drug_era_end_date", "drug_exposure_count") ++
+      eraChecks("condition_era", conditionEra, person,
         "condition_era_start_date", "condition_era_end_date",
-        "condition_occurrence_count")) ++
+        "condition_occurrence_count") ++
       Seq(
         asCheck("visit_orphan_person",
           orphans(visit, "person_id", person, "person_id")),

@@ -63,8 +63,8 @@ class ValidationSpec extends SparkSpecBase {
 
   private def both(person: DataFrame, visit: DataFrame, condition: DataFrame,
                    measurement: DataFrame, observation: DataFrame,
-                   drugEra: Option[DataFrame],
-                   conditionEra: Option[DataFrame]): Map[String, Long] = {
+                   drugEra: DataFrame,
+                   conditionEra: DataFrame): Map[String, Long] = {
     val got = Validation.report(spark, person, visit, condition,
       measurement, observation, drugEra, conditionEra)
     // the reference's two per-era checks sum over the era table, which is
@@ -79,8 +79,8 @@ class ValidationSpec extends SparkSpecBase {
   test("report equals the per-check reference, failures and NULLs") {
     val meas = personKeyed(Some(1L), Some(5L), Some(6L), None)
     val obs = personKeyed(Some(4L), None)
-    val report = both(person, visit, condition, meas, obs, Some(drugEra),
-      Some(conditionEra))
+    val report = both(person, visit, condition, meas, obs, drugEra,
+      conditionEra)
     assert(report("visit_orphan_person") == 1)
     assert(report("condition_orphan_visit") == 1)
     assert(report("measurement_orphan_person") == 2)
@@ -88,23 +88,25 @@ class ValidationSpec extends SparkSpecBase {
     assert(report("invalid_gender_concept") == 1)
     assert(report("drug_era_empty") == 1)
     assert(report.size == 15)
-    both(person, visit, condition, meas, obs, None, None)
+    val none = lit(false)
+    both(person, visit, condition, meas, obs, drugEra.filter(none),
+      conditionEra.filter(none))
   }
 
   test("an empty child table still reports its check with 0") {
     val none = lit(false)
     val report = both(person, visit, condition, personKeyed(),
-      personKeyed(Some(1L)), Some(drugEra.filter(none)),
-      Some(conditionEra))
+      personKeyed(Some(1L)), drugEra.filter(none), conditionEra)
     assert(report("measurement_orphan_person") == 0)
     assert(report("drug_era_orphan_person") == 0)
     assert(report("drug_era_empty") == 0)
     assert(ValidationReference.report(spark, person, visit, condition,
-      personKeyed(), personKeyed(), Some(drugEra.filter(none)), None)
+      personKeyed(), personKeyed(), drugEra.filter(none),
+      conditionEra.filter(none))
       .filter(col("check_name") === "drug_era_empty").head().isNullAt(1))
     val empty = both(person.filter(none), visit.filter(none),
       condition.filter(none), personKeyed(), personKeyed(),
-      Some(drugEra.filter(none)), Some(conditionEra.filter(none)))
+      drugEra.filter(none), conditionEra.filter(none))
     assert(empty.size == 15 && empty.values.forall(_ == 0L))
   }
 }

@@ -17,30 +17,6 @@ class DedupSpec extends SparkSpecBase {
     assert(got.toSeq == Seq(("a", "y"), ("b", "w")))
   }
 
-  test("antiAppend drops already-present keys AND within-batch duplicates") {
-    import spark.implicits._
-    val existing = Seq(("k1", 1L)).toDF("key", "id")
-    val incoming = Seq("k1", "k2", "k2", "k3").toDF("key")
-    val got = Dedup.antiAppend(incoming, existing, Seq("key"))
-      .orderBy("key").as[String].collect()
-    assert(got.toSeq == Seq("k2", "k3"))
-  }
-
-  test("antiAppendDeterministic picks the tiebreak-first survivor per key") {
-    import spark.implicits._
-    val existing = Seq(("k0", "old")).toDF("key", "payload")
-    val incoming = Seq(
-      ("k0", "zz"), ("k1", "b"), ("k1", "a"), ("k1", "c"), ("k2", "x")
-    ).toDF("key", "payload")
-    for (parts <- Seq(1, 4)) {
-      val got = Dedup.antiAppendDeterministic(
-          incoming.repartition(parts), existing, Seq("key"),
-          Seq(col("payload").asc))
-        .orderBy("key").collect().map(r => (r.getString(0), r.getString(1)))
-      assert(got.toSeq == Seq(("k1", "a"), ("k2", "x")), s"parts=$parts")
-    }
-  }
-
   test("left_anti equals NOT IN only for non-null keys (documented risk 3)") {
     import spark.implicits._
     val left = Seq(Option("a"), Option("b"), None).toDF("key")

@@ -22,12 +22,12 @@ class DenseIdSpec extends SparkSpecBase {
     assert(viaWindow == viaScalable)
   }
 
-  test("ids are dense, unique, and offset applies") {
+  test("ids are dense, unique, and start at 1") {
     import spark.implicits._
     val df = Seq("c", "a", "b").toDF("k")
-    val got = DenseId.withDenseIdScalable(df, Seq(col("k")), "id", offset = 10)
+    val got = DenseId.withDenseIdScalable(df, Seq(col("k")), "id")
       .as[(String, Long)].collect().toMap
-    assert(got == Map("a" -> 11L, "b" -> 12L, "c" -> 13L))
+    assert(got == Map("a" -> 1L, "b" -> 2L, "c" -> 3L))
   }
 
   test("scalable path: dense ids in global key order, no cache entries") {
@@ -59,10 +59,10 @@ class DenseIdSpec extends SparkSpecBase {
     val df = (1L to 5000L).map(i => (i * 2654435761L % 100003, i))
       .toDF("k", "v").repartition(13)
     val got = DenseId.withDenseIdScalable(df, Seq(col("k"), col("v")), "id",
-      offset = 7, numPartitions = 8, sampleMod = 2)
+      numPartitions = 8, sampleMod = 2)
       .select("k", "v", "id")
       .as[(Long, Long, Long)].collect().sortBy(r => (r._1, r._2))
-    assert(got.map(_._3).toSeq == (8L to 5007L))
+    assert(got.map(_._3).toSeq == (1L to 5000L))
     assert(spark.sharedState.cacheManager.isEmpty)
   }
 
@@ -77,21 +77,5 @@ class DenseIdSpec extends SparkSpecBase {
       DenseId.withDenseIdScalable(df, Seq(col("k").desc), "id",
         sampleMod = 1)
     }
-  }
-
-  test("extendIdMap is idempotent and first-writer-wins") {
-    import spark.implicits._
-    val existing = Seq(("u1", 1L), ("u2", 2L)).toDF("src", "id")
-    val incoming = Seq("u2", "u3", "u3", "u4").toDF("src")
-    val round1 = DenseId.extendIdMap(Some(existing), incoming, "src", "id")
-    val got = round1.as[(String, Long)].collect().toMap
-    assert(got == Map("u1" -> 1L, "u2" -> 2L, "u3" -> 3L, "u4" -> 4L))
-    // re-running with the same incoming changes nothing
-    val round2 = DenseId.extendIdMap(Some(round1), incoming, "src", "id")
-    assert(round2.as[(String, Long)].collect().toMap == got)
-    // a first load numbers the distinct keys from 1
-    assert(DenseId.extendIdMap(None, incoming, "src", "id")
-      .as[(String, Long)].collect().toMap
-      == Map("u2" -> 1L, "u3" -> 2L, "u4" -> 3L))
   }
 }

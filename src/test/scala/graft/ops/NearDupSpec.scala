@@ -491,4 +491,21 @@ class NearDupSpec extends SparkSpecBase {
       assert(agg.except(inRow).count() == 0, s"k=$k w=$w missing")
     }
   }
+
+  test("per-row signature is bit-identical to the batch minhash aggregate") {
+    val orig = (0 until 30).map(i => f"w$i%05x").mkString(" ")
+    val near = ((0 until 29).map(i => f"w$i%05x") :+ "changed").mkString(" ")
+    val docs = Seq((1L, orig), (2L, near),
+      (3L, "completely different content about spark shuffle joins"),
+      (4L, "ab")).toDF("doc_id", "text")
+    val perRow = docs
+      .select(col("doc_id"),
+        posexplode(NearDup.signatureColumn(col("text"), 3, 16)))
+      .select(col("doc_id"), col("pos").as("i"), col("col").as("mh"))
+    val batch = NearDupReference.minhashRows(
+      NearDup.shingleRows(docs, "doc_id", "text", 3), "doc_id", 16)
+    assert(perRow.except(batch).count() == 0)
+    assert(batch.except(perRow).count() == 0)
+    assert(batch.count() == 4 * 16)
+  }
 }
